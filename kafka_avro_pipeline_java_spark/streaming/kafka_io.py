@@ -20,7 +20,8 @@ independently testable and the composition is exercised with the file
 streaming source in tests/test_streaming.py. The EXECUTED read/write path
 (round 5) is the pure-Python protocol stack: ``kafka_wire.py`` (client) +
 ``sources/kafka_pyds.py`` (DataSource) consume real wire bytes —
-``read_kafka_stream_py`` below plans one task per topic-partition and
+``read_kafka_stream_py`` below fetches every partition in the driver's
+Python source runner, plans one input partition per micro-batch and
 checkpoints offsets exactly like the JVM source, e2e-tested against the
 in-process broker (tests/test_kafka_wire.py).
 """

@@ -21,10 +21,13 @@ named ``KafkaCodecError`` unless their third-party package is present. The codec
 here and the in-process broker in ``fake_broker.py``, so both sides of
 every test exchange REAL protocol bytes over a REAL TCP socket.
 
-Scale shape: one socket per (client, broker); the DataSource built on top
-(sources/kafka_pyds.py) opens its connection INSIDE the per-partition
-reader, so a 1000-executor cluster fans out exactly like the JVM
-connector — this module never aggregates across partitions.
+Scale shape: one socket per (client, broker), and this module never
+aggregates across partitions. The DataSource built on top
+(sources/kafka_pyds.py) uses it in two places. Its batch reader opens a
+connection inside each per-partition reader on an executor. Its stream
+reader fetches every partition from one process, the driver's Python
+source runner, and keeps at most one Fetch response per partition
+buffered there (see that module).
 
 Routing: ``KafkaWireClient`` is one socket to one broker.
 ``KafkaClusterClient`` layers leader routing on top — it refreshes
@@ -37,6 +40,7 @@ retrying through one metadata refresh on NOT_LEADER_FOR_PARTITION
 
 from __future__ import annotations
 
+import functools
 import socket
 import struct
 import zlib
@@ -262,8 +266,12 @@ def decode_message_set(buf: bytes) -> list[WireRecord]:
 # public spec (kafka.apache.org/documentation/#recordbatch).
 # ---------------------------------------------------------------------------
 
-# CRC32C (Castagnoli), reflected polynomial 0x82F63B78 — table-driven pure
-# Python; Kafka's magic-2 batch CRC is CRC32C, not zlib's IEEE CRC32.
+# CRC32C (Castagnoli), reflected polynomial 0x82F63B78; Kafka's magic-2
+# batch CRC is CRC32C, not zlib's IEEE CRC32. Short buffers run the
+# byte-table loop. Longer ones are cut into equal lanes whose CRC
+# registers advance together in numpy, one little-endian word per step,
+# and the lane registers are then folded with the GF(2) "shift by n zero
+# bytes" operator — the construction of zlib's crc32_combine.
 _CRC32C_TABLE: list[int] = []
 for _i in range(256):
     _c = _i
@@ -272,9 +280,96 @@ for _i in range(256):
     _CRC32C_TABLE.append(_c)
 del _i, _c
 
+_CRC_LANE_WORDS = 64                     # 256-byte lanes
+_CRC_LANE_BYTES = 4 * _CRC_LANE_WORDS
+_CRC_MIN_LANES = 32                      # below 8 KiB the table loop wins
+
+
+class _Crc32cLanes:
+    """numpy tables of the lane kernel, built once on first use.
+
+    The CRC register is linear over GF(2) in (register, data), so a lane
+    can start from register 0 and its contribution be moved into place
+    afterwards by a linear operator: ``shift[k]`` maps a register to the
+    register after ``_CRC_LANE_BYTES · 2^k`` more zero bytes, stored as
+    four 256-entry tables, one per register byte."""
+
+    def __init__(self) -> None:
+        import numpy as np
+
+        self.np = np
+        byte = np.array(_CRC32C_TABLE, dtype=np.uint32)
+
+        def zero_bytes(regs, n):
+            for _ in range(n):
+                regs = byte[regs & 0xFF] ^ (regs >> 8)
+            return regs
+
+        # one 32-bit word per step: register ^= word, then 4 zero bytes,
+        # split into lookups on the register's low and high halves
+        half = np.arange(1 << 16, dtype=np.uint32)
+        self.lo = zero_bytes(half, 4)
+        self.hi = zero_bytes(half << 16, 4)
+        self._bits = (np.arange(256)[:, None] >> np.arange(8)) & 1 == 1
+        unit = np.uint32(1) << np.arange(32, dtype=np.uint32)
+        # every level up front (2^32 lanes is past any buffer), so the
+        # tables are read-only once built and safe to share across threads
+        self.shift = [self._tables(zero_bytes(unit, _CRC_LANE_BYTES))]
+        for _ in range(31):  # square the last operator
+            t = self.shift[-1]
+            self.shift.append(self._tables(self._apply(t, self._apply(t, unit))))
+
+    def _tables(self, images):
+        """The images of the 32 unit registers → per-byte lookup tables."""
+        np = self.np
+        return np.stack([
+            np.bitwise_xor.reduce(
+                np.where(self._bits, images[8 * j: 8 * j + 8], np.uint32(0)),
+                axis=1)
+            for j in range(4)
+        ])
+
+    @staticmethod
+    def _apply(t, regs):
+        return (t[0][regs & 0xFF] ^ t[1][(regs >> 8) & 0xFF]
+                ^ t[2][(regs >> 16) & 0xFF] ^ t[3][regs >> 24])
+
+    def register(self, data, reg: int, n_lanes: int) -> int:
+        """The raw register after the first ``n_lanes`` lanes of ``data``,
+        starting from ``reg``."""
+        np = self.np
+        words = np.frombuffer(data, dtype="<u4",
+                              count=n_lanes * _CRC_LANE_WORDS)
+        columns = np.ascontiguousarray(
+            words.reshape(n_lanes, _CRC_LANE_WORDS).T)
+        # leading all-zero lanes pad the count to a power of two; they
+        # add nothing and keep every real lane's distance from the end
+        pad = (1 << (n_lanes - 1).bit_length()) - n_lanes
+        regs = np.zeros(pad + n_lanes, dtype=np.uint32)
+        regs[pad] = reg
+        lanes, lo, hi = regs[pad:], self.lo, self.hi
+        for w in columns:
+            x = lanes ^ w
+            lanes = lo[x & 0xFFFF] ^ hi[x >> 16]
+        regs[pad:] = lanes
+        level = 0
+        while len(regs) > 1:  # fold neighbours: left · shift ^ right
+            regs = self._apply(self.shift[level], regs[0::2]) ^ regs[1::2]
+            level += 1
+        return int(regs[0])
+
+
+@functools.cache
+def _crc32c_lanes() -> _Crc32cLanes:
+    return _Crc32cLanes()
+
 
 def crc32c(data: bytes, crc: int = 0) -> int:
     crc ^= 0xFFFFFFFF
+    n_lanes = len(data) // _CRC_LANE_BYTES
+    if n_lanes >= _CRC_MIN_LANES:
+        crc = _crc32c_lanes().register(data, crc, n_lanes)
+        data = memoryview(data)[n_lanes * _CRC_LANE_BYTES:]
     tbl = _CRC32C_TABLE
     for b in data:
         crc = tbl[(crc ^ b) & 0xFF] ^ (crc >> 8)

@@ -226,3 +226,115 @@ def test_stream_bounded_batches_and_restart_no_dup_no_loss(spark, broker, tmp_pa
     new = seen[n_before:]
     assert sorted(v for _, _, v in new) == [b"new0", b"new1"]
     assert len(seen) == len(set(seen)) == 9
+
+
+# ---------------------------------------------------------------------------
+# stream reader: fetch buffer and data-loss contract, driven the way the
+# engine drives a SimpleDataSourceStreamReader (read → next read from end)
+# ---------------------------------------------------------------------------
+
+
+def _stream_reader(bootstrap, **opts):
+    from kafka_avro_pipeline_java_spark.sources.kafka_pyds import (
+        KafkaPyStreamReader,
+    )
+
+    return KafkaPyStreamReader(
+        {"bootstrap": bootstrap, "topic": "orders_avro",
+         **{k: str(v) for k, v in opts.items()}}
+    )
+
+
+def _rows(it):
+    return [
+        (r["partition"], r["offset"], r["key"], r["value"], r["timestamp"])
+        for batch in it
+        for r in batch.to_pylist()
+    ]
+
+
+def test_stream_reader_fetches_each_record_once(broker):
+    """A Fetch answers with up to maxBytes, far more than one batch
+    admits; the reader serves later batches from that answer instead of
+    fetching the same records again. A fresh reader (a restart from the
+    checkpoint, empty buffer) and the replay path stay exact."""
+    import math
+
+    from kafka_avro_pipeline_java_spark.streaming.kafka_wire import (
+        API_FETCH,
+        encode_record_batch,
+    )
+
+    n, max_bytes = 600, 16 * 1024
+    logs = {
+        pid: [(b"k%d-%d" % (pid, i), bytes([65 + pid]) * 100, 1000 + i)
+              for i in range(n)]
+        for pid in range(3)
+    }
+    for pid, log in logs.items():
+        broker.append("orders_avro", pid, log)
+    partition_bytes = len(encode_record_batch(logs[0]))
+    assert partition_bytes > 4 * max_bytes
+
+    def drain(start):
+        reader = _stream_reader(broker.bootstrap, maxRecordsPerBatch=90,
+                                maxBytes=max_bytes)
+        batches = []
+        while True:
+            it, end = reader.read(start)
+            if end == start:
+                assert list(it) == []
+                return reader, batches
+            rows = _rows(it)
+            assert 0 < len(rows) <= 90
+            batches.append((start, end, rows))
+            start = end
+
+    reader, batches = drain(_stream_reader(broker.bootstrap).initialOffset())
+    assert len(batches) == 20
+    seen = [row for _, _, rows in batches for row in rows]
+    for pid, log in logs.items():
+        got = [(o, k, v, ts) for p, o, k, v, ts in seen if p == pid]
+        assert got == [(i, k, v, ts) for i, (k, v, ts) in enumerate(log)]
+    fetches = [pid for api, _, pid in broker.served[0] if api == API_FETCH]
+    bound = math.ceil(partition_bytes / max_bytes) + 1
+    for pid in logs:
+        assert fetches.count(pid) <= bound, (pid, fetches.count(pid))
+
+    # restart from a mid-backlog checkpoint: a fresh reader, empty buffer
+    _, resumed = drain(batches[8][0])
+    assert [b[2] for b in resumed] == [b[2] for b in batches[8:]]
+
+    # the replay path re-fetches the exact range, whatever is buffered
+    start, end, rows = batches[11]
+    assert _rows(reader.readBetweenOffsets(start, end)) == rows
+
+
+def test_stream_reader_raises_on_short_fetch(monkeypatch):
+    """An empty Fetch below the high watermark must fail the batch, not
+    commit an end offset past records that were never delivered."""
+    from kafka_avro_pipeline_java_spark.sources import kafka_pyds
+    from kafka_avro_pipeline_java_spark.streaming.kafka_wire import WireRecord
+
+    class ShortClient:
+        def __enter__(self):
+            return self
+
+        def __exit__(self, *exc):
+            pass
+
+        def list_offsets(self, topic, partition, timestamp):
+            return 10  # high watermark
+
+        def fetch(self, topic, partition, offset, *, max_bytes):
+            if offset < 4:  # serves offsets 0..3, then nothing
+                return 10, [WireRecord(o, o, b"k", b"v")
+                            for o in range(offset, 4)]
+            return 10, []
+
+    monkeypatch.setattr(kafka_pyds, "_client", lambda options: ShortClient())
+    reader = _stream_reader("stub:0", maxRecordsPerBatch=100)
+    with pytest.raises(kafka_pyds.KafkaDataLossError, match="at offset 4"):
+        reader.read({"offsets": {"0": 0}})
+    with pytest.raises(kafka_pyds.KafkaDataLossError):
+        reader.readBetweenOffsets({"offsets": {"0": 0}}, {"offsets": {"0": 6}})

@@ -79,11 +79,49 @@ def test_record_batch_round_trip_nulls_and_offsets():
     ]
 
 
+def test_crc32c_lane_kernel_matches_table_loop():
+    """Buffers of 8 KiB and up take the numpy lane kernel; chaining the
+    CRC over 4 KiB chunks keeps every call on the byte-table loop, so the
+    two must agree bit for bit, from any seed CRC."""
+    import random
+
+    from kafka_avro_pipeline_java_spark.streaming import kafka_wire as kw
+
+    def table_loop(data, crc):
+        for i in range(0, len(data), 4096):
+            crc = crc32c(data[i: i + 4096], crc)
+        return crc
+
+    threshold = kw._CRC_LANE_BYTES * kw._CRC_MIN_LANES
+    assert threshold > 4096
+    rng = random.Random(7)
+    for n in (0, 1, threshold - 1, threshold, threshold + 1,
+              threshold + kw._CRC_LANE_BYTES + 3, 100_003, (1 << 20) + 7):
+        data = rng.randbytes(n)
+        for seed in (0, 1, 0xE3069283, rng.getrandbits(32)):
+            assert crc32c(data, seed) == table_loop(data, seed), (n, seed)
+    # a power-of-two lane count and one just past it fold the same way
+    for lanes in (64, 65):
+        data = rng.randbytes(lanes * kw._CRC_LANE_BYTES)
+        assert crc32c(data, 5) == table_loop(data, 5)
+
+
 def test_record_batch_crc32c_tamper_detected():
     buf = bytearray(encode_record_batch([(b"k", b"v", 1)]))
     buf[-1] ^= 0xFF  # flip a bit inside the CRC-covered record data
     with pytest.raises(ValueError, match="CRC32C"):
         decode_record_batches(bytes(buf))
+    # a batch big enough for the lane kernel: flips in a lane and in the
+    # tail after the last whole lane are both caught
+    big = encode_record_batch(
+        [(b"k%d" % i, bytes([i % 251]) * 200, i) for i in range(500)])
+    assert len(big) > 64 * 1024
+    assert len(decode_record_batches(big)) == 500
+    for pos in (len(big) // 2, len(big) - 1):
+        tampered = bytearray(big)
+        tampered[pos] ^= 0x01
+        with pytest.raises(ValueError, match="CRC32C"):
+            decode_record_batches(bytes(tampered))
 
 
 def test_record_batch_partial_trailing_batch_dropped():
