@@ -247,6 +247,11 @@ def main() -> None:
     minima: dict[str, float] = {}
     raw: dict[str, list[float]] = {}
     peak_tasks: dict[str, int | None] = {}
+    # Janino compilations per query over its reps: with the session's
+    # codegen cache big enough, repeated reps compile nothing new, so a
+    # cache regression shows up here query by query
+    codegen_compiles: dict[str, int] = {}
+    codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
     bench_fns = {n: QUERIES[n] for n in BENCH_QUERIES}
     for n, f in BENCH_EXTRA.items():
         if not _ONLY or n in _only_set:
@@ -259,6 +264,7 @@ def main() -> None:
         # stage runs 1-3 tasks, so cores cannot matter)
         sc.setJobGroup(f"bench:{name}", name)
         reps: list[float] = []
+        compiled_before = codegen.METRIC_COMPILATION_TIME().getCount()
         for _ in range(REPS):
             t0 = time.perf_counter()
             df = fn(spark, SF_DIR)
@@ -269,6 +275,9 @@ def main() -> None:
                 # (count() would let Catalyst prune projections to a scan)
                 df.write.format("noop").mode("overwrite").save()
             reps.append(time.perf_counter() - t0)
+        codegen_compiles[name] = (
+            codegen.METRIC_COMPILATION_TIME().getCount() - compiled_before
+        )
         raw[name] = [round(r, 3) for r in reps]
         reps.sort()
         timings[name] = round(reps[len(reps) // 2], 3)
@@ -411,6 +420,7 @@ def main() -> None:
                 "value_r1_core_benchonly": core_benchonly,
                 "core_benchonly_queries": core_benchonly_queries,
                 "peak_tasks": peak_tasks,
+                "codegen_compiles": codegen_compiles,
                 "scaling": scaling,
                 "memo_build_sec": memo_build_sec,
             },

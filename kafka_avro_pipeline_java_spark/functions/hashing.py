@@ -33,16 +33,21 @@ def portable_hash64(col: Column | str) -> Column:
 
 def java_string_hashcode(col: Column | str) -> Column:
     """``s.hashCode()`` = sum(s[i] * 31^(n-1-i)) over UTF-16 code units,
-    wrapped to 32-bit signed — implemented with aggregate over the char
-    array, all JVM-side."""
+    wrapped to 32-bit signed — implemented with aggregate over the code
+    points, all JVM-side."""
     c = F.col(col) if isinstance(col, str) else col
-    chars = F.split(c, "")
-    # 32-bit wrap: keep the accumulator in long and mask back to int range.
-    acc = F.aggregate(
-        chars,
-        F.lit(0).cast("long"),
-        lambda h, ch: (h * 31 + F.ascii(ch)).bitwiseAND(F.lit(0xFFFFFFFF)),
-    )
+    # split(s, "") yields one element per code point and ascii() gives its
+    # code point. A code point above U+FFFF is two UTF-16 code units: it
+    # adds its high surrogate, then its low surrogate.
+    code_points = F.transform(F.split(c, ""), F.ascii)
+
+    def step(h: Column, cp: Column) -> Column:
+        off = cp - 0x10000
+        pair = (h * 31 + F.shiftright(off, 10) + 0xD800) * 31 + off.bitwiseAND(0x3FF) + 0xDC00
+        # 32-bit wrap: keep the accumulator in long and mask back to int range
+        return F.when(cp > 0xFFFF, pair).otherwise(h * 31 + cp).bitwiseAND(0xFFFFFFFF)
+
+    acc = F.aggregate(code_points, F.lit(0).cast("long"), step)
     # reinterpret the low 32 bits as signed int
     return F.when(acc > 0x7FFFFFFF, (acc - 0x100000000).cast("int")).otherwise(
         acc.cast("int")

@@ -40,6 +40,14 @@ def get_spark(app_name: str = "kafka-avro-pipeline-spark", *, master: str | None
         # disabling the debug capture measured plan-construction time
         # knn_topk_bucketed 3.4 s → 1.5 s with identical plans/results.
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
+        # Spark keeps generated classes in a least-recently-used cache of
+        # 100 entries by default. One round of the perfbench queries_mix
+        # needs about 280 classes (about 360 over the whole mix session),
+        # so each execution evicted the next query's classes and ran
+        # Janino and the JIT again: 279 compilations per round, and the
+        # JIT threads used about half the JVM's CPU. A kept class costs 11
+        # to 32 KB of metaspace, so 2000 entries stay under about 64 MB.
+        .config("spark.sql.codegen.cache.maxEntries", "2000")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # cap per-task input so huge files split into parallel tasks
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
@@ -56,7 +64,9 @@ def tune_for_session(spark: SparkSession) -> SparkSession:
     spark.conf.set("spark.sql.adaptive.enabled", "true")
     # NOTE: spark.python.sql.dataFrameDebugging.enabled (see get_spark) is
     # a STATIC conf — it cannot be applied to an externally provided
-    # session here; only plan-construction speed is affected, never results
+    # session here; only plan-construction speed is affected, never results.
+    # spark.sql.codegen.cache.maxEntries is static too: a provided session
+    # keeps its own cache size, so repeated queries may recompile classes.
     return spark
 
 

@@ -34,7 +34,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.hashing import partition_for_key
-from .avro_codec import decode_df, encode_df
+from .avro_codec import encode_df
 
 
 def kafka_available(spark: SparkSession) -> bool:
@@ -142,12 +142,6 @@ def read_kafka_stream_py(
     if max_records_per_batch is not None:
         reader = reader.option("maxRecordsPerBatch", str(max_records_per_batch))
     return reader.load()
-
-
-def decode_kafka_stream(raw: DataFrame, avro_schema: dict[str, Any]) -> DataFrame:
-    """Confluent-framed Avro values → typed columns (+ Kafka metadata)."""
-    typed = decode_df(raw.select("value"), avro_schema)
-    return typed
 
 
 def prepare_kafka_batch(

@@ -58,15 +58,22 @@ def test_unsupported_type_raises(spark):
 def test_java_hashcode_parity(spark):
     """partition_for_key must reproduce java.lang.String.hashCode placement
     (reference AvroProducer.java:82) — checked against a Python
-    reimplementation of the Java algorithm."""
+    reimplementation of the Java algorithm, which hashes UTF-16 code
+    units (a code point above U+FFFF is a surrogate pair), and that
+    reimplementation against the JVM's own String.hashCode."""
 
     def java_hash(s: str) -> int:
+        units = s.encode("utf-16-be")
         h = 0
-        for ch in s:
-            h = (h * 31 + ord(ch)) & 0xFFFFFFFF
+        for i in range(0, len(units), 2):
+            h = (h * 31 + int.from_bytes(units[i : i + 2], "big")) & 0xFFFFFFFF
         return h - 0x100000000 if h > 0x7FFFFFFF else h
 
-    keys = ["abc", "ABC123", "k", "", "zzzzzz", "Key42x", "aA0bB1"]
+    keys = [
+        "abc", "ABC123", "k", "", "zzzzzz", "Key42x", "aA0bB1",
+        "\U0001F600x", "a\U0001F600b\U0001D11E", "\U0010FFFF\u00e9z",
+        "polygenelubricants",
+    ]
     df = spark.createDataFrame([(k,) for k in keys], "key string")
     got = {
         r["key"]: (r["hc"], r["part"])
@@ -76,10 +83,14 @@ def test_java_hashcode_parity(spark):
             partition_for_key("key", 3).alias("part"),
         ).collect()
     }
+    jvm_objects = spark._jvm.java.util.Objects
     for k in keys:
-        expect_hc = java_hash(k)
-        assert got[k][0] == expect_hc, f"hashCode mismatch for {k!r}"
-        assert got[k][1] == expect_hc % 3 if expect_hc >= 0 else (expect_hc % 3 + 3) % 3
+        hc, part = got[k]
+        assert java_hash(k) == jvm_objects.hashCode(k), f"reference wrong for {k!r}"
+        assert hc == java_hash(k), f"hashCode mismatch for {k!r}"
+        assert part == hc % 3, f"partition mismatch for {k!r}"
+    # its hashCode() is Integer.MIN_VALUE, which pmod puts in partition 1
+    assert got["polygenelubricants"] == (-(2**31), 1)
 
 
 def test_same_key_same_partition(spark):
