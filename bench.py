@@ -71,6 +71,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from kafka_avro_pipeline_java_spark.plans import QUERIES
 from kafka_avro_pipeline_java_spark.session import (
+    PAIR_MEMO_BUILD_SEC,
     get_spark,
     release_transient_checkpoints,
 )
@@ -295,11 +296,9 @@ def main() -> None:
     sf_val = float(sf) if sf.replace(".", "").isdigit() else sf
 
     # One-time session-memo build cost (r14, VERDICT r13 item 7): the
-    # graph/mlprep pair-table memos build inside the first consumer's
+    # session memos (session.session_memo) build inside the first consumer's
     # FIRST rep, which median-of-REPS then drops — report the build
     # seconds as their own field so the headline cannot hide them.
-    from kafka_avro_pipeline_java_spark.plans.graph import PAIR_MEMO_BUILD_SEC
-
     memo_build_sec = round(sum(s for _, s in PAIR_MEMO_BUILD_SEC), 3)
 
     # Compute-bound scaling probe (r14, VERDICT r13 item 1): FIXED total

@@ -17,6 +17,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators import dedup, graph
+# re-exported: perfbench/mix.py reads the build seconds from this module
+from ..session import PAIR_MEMO_BUILD_SEC, session_memo  # noqa: F401
 from ..sources import load_table
 from .registry import ORACLES, query
 
@@ -24,107 +26,41 @@ _D = 0.85
 _ITERS = 3
 
 
-# The SimHash hamming-2 pair list feeds SEVEN registered graph queries
-# (pagerank, eigenvector, triangles, k-core x2, BFS, link prediction,
-# harmonic closeness). Within one session it is a deterministic function
-# of sf_dir, so it is derived ONCE per (session, sf_dir) and materialized
-# with an eager localCheckpoint - the same session-artifact rationale as
-# vectors.py's query-vector cache (an index is built once, queried many
-# times). Keyed on the SparkContext's application id so a cached frame
-# from a stopped session is never reused; values are identical to a
-# fresh derivation, so driver signatures are unaffected.
-_SIMHASH_PAIR_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-#: max sf_dirs cached per live application — a sweep touches at most two
-#: (its SF plus the dual-SF decimal sibling); anything beyond that is a
-#: long-lived session hopping corpora, whose older checkpointed block
-#: sets would otherwise pin storage for the life of the process
-#: (ADVICE r12). FIFO eviction, best-effort unpersist of the evicted
-#: frame's blocks.
-_PAIR_CACHE_MAX_PER_APP = 3
-
-#: (sf_dir, seconds) of every session-memo BUILD this process has paid —
-#: bench.py sums it into the ``memo_build_sec`` field so the one-time
-#: build cost median-of-reps drops out of per-query numbers is still
-#: reported in the artifact (VERDICT r13 item 7 / "what's wrong" 4).
-PAIR_MEMO_BUILD_SEC: list[tuple[str, float]] = []
-
-
-def _pair_cache_fetch(cache, spark: SparkSession, sf_dir: str, build) -> DataFrame:
-    app = spark.sparkContext.applicationId
-    key = (app, sf_dir)
-    if key not in cache:
-        # entries from stopped sessions: their blocks died with the
-        # SparkContext — drop the dangling references
-        for k in [k for k in cache if k[0] != app]:
-            cache.pop(k)
-        live = [k for k in cache if k[0] == app]
-        while len(live) >= _PAIR_CACHE_MAX_PER_APP:
-            # r14 (ADVICE r13): DataFrame.unpersist is a NO-OP for a
-            # localCheckpoint'ed frame (no CacheManager entry), and the
-            # pinned RDD id would keep release_transient_checkpoints away
-            # from its blocks forever — release through the session
-            # helper, which unpins the id and unpersists the RDD itself
-            from ..session import release_session_artifact
-
-            release_session_artifact(cache.pop(live.pop(0)))
-        # eager checkpoint PINNED for the session: bench.py / driver_sim
-        # release all unpinned checkpoint storage between queries, and a
-        # released localCheckpoint cannot be recomputed (session.py)
-        import time as _time
-
-        from ..session import checkpoint_session_artifact
-
-        t0 = _time.perf_counter()
-        cache[key] = checkpoint_session_artifact(build())
-        PAIR_MEMO_BUILD_SEC.append(
-            (sf_dir, round(_time.perf_counter() - t0, 3))
-        )
-    return cache[key]
-
-
 def _simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """SimHash hamming-2 pair list: seven consumers (pagerank, eigenvector,
+    triangles, k-core x2, BFS, link prediction, harmonic closeness)."""
+
     def build() -> DataFrame:
         d = load_table(spark, sf_dir, "documents")
         return dedup.simhash_near_pairs_portable(
             d, "text", "doc_id", max_hamming=2
         ).select("id_a", "id_b")
 
-    return _pair_cache_fetch(_SIMHASH_PAIR_CACHE, spark, sf_dir, build)
-
-
-#: raw n-gram Jaccard pair list (id_a, id_b) — six consumers (PageRank,
-#: degree stats, eigenvector, component sizes, modularity, clustering
-#: coefficient); same per-(session, sf_dir) memoization rationale as
-#: _SIMHASH_PAIR_CACHE above.
-_JACCARD_PAIR_CACHE: dict[tuple[str, str], DataFrame] = {}
+    return session_memo(spark, "simhash_pairs", sf_dir, build)
 
 
 def _jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Raw n-gram Jaccard pair list (id_a, id_b): six consumers (PageRank,
+    degree stats, eigenvector, component sizes, modularity, clustering
+    coefficient)."""
+
     def build() -> DataFrame:
         d = load_table(spark, sf_dir, "documents")
         return dedup.ngram_jaccard_pairs(
             d, "text", "doc_id", k=3, threshold=0.1
         ).select("id_a", "id_b")
 
-    return _pair_cache_fetch(_JACCARD_PAIR_CACHE, spark, sf_dir, build)
-
-
-#: connected components OF THE MEMOIZED JACCARD PAIR TABLE — four
-#: registered consumers (dedup_near_dup_groups, dedup_golden_record,
-#: graph_component_sizes, graph_modularity) each re-ran the pointer-jump
-#: resolver loop (3-4 driver rounds of jobs) on the identical pinned
-#: input. The result is a deterministic function of the pair table, so
-#: it gets the same per-(session, sf_dir) memo treatment; the build cost
-#: lands in PAIR_MEMO_BUILD_SEC → bench.py's memo_build_sec field like
-#: every other session memo. Only call sites whose input is EXACTLY
-#: _jaccard_pairs(spark, sf_dir) may use this.
-_CC_CACHE: dict[tuple[str, str], DataFrame] = {}
+    return session_memo(spark, "jaccard_pairs", sf_dir, build)
 
 
 def _components(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _pair_cache_fetch(
-        _CC_CACHE, spark, sf_dir,
+    """Connected components of ``_jaccard_pairs``: four consumers
+    (dedup_near_dup_groups, dedup_golden_record, graph_component_sizes,
+    graph_modularity), each of which re-ran the multi-round pointer-jump
+    loop. Only call sites whose input is exactly ``_jaccard_pairs(spark,
+    sf_dir)`` may use it."""
+    return session_memo(
+        spark, "components", sf_dir,
         lambda: dedup.connected_components(_jaccard_pairs(spark, sf_dir)),
     )
 

@@ -20,41 +20,34 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.hierarchy import part_forest, pointer_jump, transitive_closure
+from ..session import session_memo
 from ..sources import load_table
 from .registry import query
 
-#: session memos for the two loop-built hierarchy intermediates — both
-#: are deterministic functions of the part table, and each previously
-#: re-ran its multi-round join loop once per consumer: the units walk
-#: feeds graph_hierarchy_depths (units projected away — identical
-#: root/depth values) AND graph_bom_rollup; the transitive closure feeds
-#: graph_hierarchy_closure AND graph_subtree_sizes. Same
-#: per-(applicationId, sf_dir) eager-checkpoint mechanism, eviction
-#: policy and memo_build_sec accounting as plans/graph.py's pair caches.
-_WALK_CACHE: dict = {}
-_CLOSURE_CACHE: dict = {}
-
-
 def _forest_walk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .graph import _pair_cache_fetch
+    """Units walk of the part forest: feeds graph_hierarchy_depths (units
+    projected away) and graph_bom_rollup, which each re-ran the multi-round
+    join loop."""
 
     def build() -> DataFrame:
         part = load_table(spark, sf_dir, "part")
         edges, roots = part_forest(spark, part)
         return pointer_jump(edges, roots, units="q")
 
-    return _pair_cache_fetch(_WALK_CACHE, spark, sf_dir, build)
+    return session_memo(spark, "forest_walk", sf_dir, build)
 
 
 def _forest_closure(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .graph import _pair_cache_fetch
+    """Transitive closure of the part forest: feeds graph_hierarchy_closure
+    and graph_subtree_sizes."""
 
     def build() -> DataFrame:
         part = load_table(spark, sf_dir, "part")
         edges, _roots = part_forest(spark, part)
         return transitive_closure(edges.drop("q"))
 
-    return _pair_cache_fetch(_CLOSURE_CACHE, spark, sf_dir, build)
+    return session_memo(spark, "forest_closure", sf_dir, build)
+
 
 # Shared DuckDB CTEs: rebuild the same forest and walk it recursively.
 _WALK_CTE = """

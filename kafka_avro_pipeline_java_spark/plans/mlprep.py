@@ -27,6 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..session import session_memo
 from ..sources.tables import load_table
 from .registry import query
 
@@ -93,21 +94,12 @@ def _buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: session-scoped memo of the ≤1000-row (sq, pos, neg) bucket table —
-#: five consumers (threshold sweep, calibration, gains, brier; AUC keeps
-#: deriving LIVE as the family's canonical plan so the sweep gates
-#: inspect the real scored-corpus derivation). Same (applicationId,
-#: sf_dir)-keyed eager-localCheckpoint rationale and eviction policy as
-#: plans/graph.py's pair-table caches.
-_BUCKET_CACHE: dict = {}
-
-
 def _buckets_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .graph import _pair_cache_fetch
-
-    return _pair_cache_fetch(
-        _BUCKET_CACHE, spark, sf_dir, lambda: _buckets(spark, sf_dir)
-    )
+    """The ≤1000-row (sq, pos, neg) bucket table: four consumers (threshold
+    sweep, calibration, gains, brier). AUC keeps deriving it live as the
+    family's canonical plan, so the sweep gates inspect the real
+    scored-corpus derivation."""
+    return session_memo(spark, "ml_buckets", sf_dir, lambda: _buckets(spark, sf_dir))
 
 
 _Q6 = "1000000"  # the house 1e-6 FLOOR quantizer scale

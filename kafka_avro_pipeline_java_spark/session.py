@@ -9,13 +9,18 @@ config below is chosen to also make sense on a 1000-executor cluster:
 - Arrow enabled for the few Pandas-UDF code paths (vector/codec ops);
 - session timezone pinned to UTC so timestamp semantics are deterministic
   and match the DuckDB oracle.
+
+The module also owns the session memos (``session_memo``) and the release
+of per-query checkpoint storage (``release_transient_checkpoints``).
 """
 
 from __future__ import annotations
 
 import os
+import time
+from collections.abc import Callable
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def get_spark(app_name: str = "kafka-avro-pipeline-spark", *, master: str | None = None,
@@ -71,88 +76,77 @@ def tune_for_session(spark: SparkSession) -> SparkSession:
 
 
 # ---------------------------------------------------------------------------
-# Checkpoint storage lifecycle (r13, guide §5: "unpersist when done").
+# Checkpoint storage lifecycle.
 #
-# Operators materialize expensive intermediates (signature tables, assigned
-# sides, edge lists) behind localCheckpoints so multi-consumer plans don't
-# re-derive them once AQE's broadcast conversions defeat plain exchange
-# reuse. Those checkpoint blocks are registered in the context's persistent-
-# RDD map and are NOT reclaimed by garbage collection in PySpark (measured:
-# a dropped lazily-checkpointed DataFrame's RDD survives Python gc +
-# JVM System.gc indefinitely under the py4j pinned-thread gateway), so a
-# long-lived session sweeping hundreds of queries accumulates storage that
-# competes with execution memory (ADVICE r12). The explicit lifecycle:
+# Operators materialize expensive intermediates behind localCheckpoints.
+# Checkpoint blocks are NOT reclaimed by garbage collection in PySpark (a
+# dropped frame's RDD survives Python gc and JVM System.gc under the py4j
+# pinned-thread gateway), so a long-lived session would accumulate storage
+# that competes with execution memory. Two kinds of checkpoint exist:
 #
-# - per-query transient checkpoints need no bookkeeping; the JOB DRIVER
-#   (bench.py / tools/driver_sim.py — anything that runs queries to
-#   completion one after another) calls ``release_transient_checkpoints``
-#   between queries, when no transient frame can be re-executed;
-# - cross-query session artifacts (the plans/graph.py and plans/mlprep.py
-#   memo tables) are created through ``checkpoint_session_artifact`` which
-#   PINS their block sets so the release pass never touches them — a
-#   released localCheckpoint cannot be recomputed (truncated lineage).
+# - per-query transient checkpoints need no bookkeeping; a caller that runs
+#   queries to completion one after another (bench.py, tools/driver_sim.py,
+#   perfbench) calls ``release_transient_checkpoints`` between queries;
+# - session memos (``session_memo``) are derived tables reused across
+#   queries. The release pass skips their RDDs, because a released
+#   localCheckpoint cannot be recomputed (its lineage is truncated).
 # ---------------------------------------------------------------------------
 
-#: (applicationId → pinned RDD ids). Keyed by application so ids from a
-#: stopped context can never shadow a new context's (RDD ids restart per
-#: SparkContext); stale entries are dropped on the next pin.
-_PINNED_RDD_IDS: dict[str, set[int]] = {}
+#: sf_dirs kept per memo name in one application. A sweep touches at most
+#: two (its SF plus the dual-SF decimal sibling); beyond that a session is
+#: hopping corpora, and the oldest memo's blocks are freed first.
+_MEMO_MAX_SF_DIRS = 3
+
+#: (sf_dir, seconds) of every memo build in this process. Benchmarks report
+#: the sum as its own figure, since a build lands in one query's first rep.
+PAIR_MEMO_BUILD_SEC: list[tuple[str, float]] = []
+
+#: (application id, name, sf_dir) -> (checkpointed frame, its RDD id), in
+#: build order. RDD ids restart per SparkContext, hence the application id.
+_MEMOS: dict[tuple[str, str, str], tuple[DataFrame, int]] = {}
 
 
-def _persistent_ids(spark: SparkSession) -> set[int]:
-    return {
-        int(k)
-        for k in spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray()
-    }
+def app_id(spark: SparkSession) -> str:
+    """The application id, read once per SparkContext (each read of
+    ``applicationId`` is a py4j round trip)."""
+    sc = spark.sparkContext
+    app = getattr(sc, "_graft_app_id", None)
+    if app is None:
+        app = sc._graft_app_id = sc.applicationId
+    return app
 
 
-def checkpoint_session_artifact(df):
-    """Eagerly localCheckpoint ``df`` and pin its block set for the life of
-    the session: ``release_transient_checkpoints`` will skip it. Single-
-    threaded creation assumed (the memo caches fill inside one query)."""
-    spark = df.sparkSession
-    app = spark.sparkContext.applicationId
-    for stale in [a for a in _PINNED_RDD_IDS if a != app]:
-        _PINNED_RDD_IDS.pop(stale)
-    before = _persistent_ids(spark)
-    out = df.localCheckpoint(eager=True)
-    pins = _PINNED_RDD_IDS.setdefault(app, set())
-    try:
-        # precise pin: the checkpointed Dataset's plan is a LogicalRDD over
-        # exactly the persisted RDD — transient lazy checkpoints INSIDE the
-        # build (e.g. a signature table) also materialize during the eager
-        # action and must NOT be pinned with it
-        pins.add(int(out._jdf.queryExecution().analyzed().rdd().id()))
-    except Exception:
-        # fallback: pin everything that appeared (over-pins inner
-        # transients — safe, merely keeps their blocks for the session)
-        pins.update(_persistent_ids(spark) - before)
-    return out
-
-
-def release_session_artifact(df) -> None:
-    """Unpin and release a frame created by ``checkpoint_session_artifact``
-    (r14, ADVICE r13). ``DataFrame.unpersist()`` is a NO-OP for a
-    localCheckpoint'ed frame — the CacheManager has no entry for it; the
-    storage belongs to the checkpointed RDD — and a pinned id that is
-    never removed from ``_PINNED_RDD_IDS`` would keep
-    ``release_transient_checkpoints`` away from those blocks for the rest
-    of the session. Best-effort: an unresolvable frame is left alone."""
-    spark = df.sparkSession
-    pins = _PINNED_RDD_IDS.get(spark.sparkContext.applicationId, set())
-    try:
-        rid = int(df._jdf.queryExecution().analyzed().rdd().id())
-    except Exception:
-        return
-    pins.discard(rid)
-    jmap = spark.sparkContext._jsc.getPersistentRDDs()
-    for jrid in list(jmap.keySet().toArray()):
-        if int(jrid) == rid:
-            jmap.get(jrid).unpersist(False)
+def session_memo(
+    spark: SparkSession, name: str, sf_dir: str, build: Callable[[], DataFrame]
+) -> DataFrame:
+    """``build()``, eagerly localCheckpointed once per (application, name,
+    sf_dir) and kept for the session: ``release_transient_checkpoints``
+    skips it. ``build`` must be a deterministic function of ``sf_dir``.
+    Single-threaded use assumed (a memo fills inside one query)."""
+    app = app_id(spark)
+    key = (app, name, sf_dir)
+    if key in _MEMOS:
+        return _MEMOS[key][0]
+    for k in [k for k in _MEMOS if k[0] != app]:
+        del _MEMOS[k]  # its blocks died with its SparkContext
+    same_name = [k for k in _MEMOS if k[1] == name]
+    if len(same_name) >= _MEMO_MAX_SF_DIRS:
+        # DataFrame.unpersist is a no-op for a localCheckpoint: free the RDD
+        rid = _MEMOS.pop(same_name[0])[1]
+        jrdd = spark.sparkContext._jsc.getPersistentRDDs().get(rid)
+        if jrdd is not None:
+            jrdd.unpersist(False)
+    t0 = time.perf_counter()
+    df = build().localCheckpoint(eager=True)
+    # the frame's plan is a LogicalRDD over exactly the persisted RDD;
+    # transient checkpoints inside the build stay releasable
+    _MEMOS[key] = (df, int(df._jdf.queryExecution().analyzed().rdd().id()))
+    PAIR_MEMO_BUILD_SEC.append((sf_dir, round(time.perf_counter() - t0, 3)))
+    return df
 
 
 def release_transient_checkpoints(spark: SparkSession) -> int:
-    """Unpersist every persistent RDD not pinned as a session artifact.
+    """Unpersist every locally checkpointed RDD that is not a session memo.
 
     Call ONLY at a query boundary: after the previous query's results are
     fully consumed and before the next one is built — a released
@@ -166,7 +160,8 @@ def release_transient_checkpoints(spark: SparkSession) -> int:
     cache recomputes; a swept checkpoint held across the boundary would
     fail unrecoverably, which the call-boundary contract above already
     forbids)."""
-    pinned = _PINNED_RDD_IDS.get(spark.sparkContext.applicationId, set())
+    app = app_id(spark)
+    pinned = {rid for (a, _, _), (_, rid) in _MEMOS.items() if a == app}
     jmap = spark.sparkContext._jsc.getPersistentRDDs()
     released = 0
     for rid in list(jmap.keySet().toArray()):

@@ -16,6 +16,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 
+from ..session import app_id
+
 TABLE_NAMES = (
     "region",
     "nation",
@@ -83,11 +85,7 @@ def load_table(
         # matching how DuckDB reads the same naive timestamps).
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     path = os.path.join(sf_dir, f"{name}.parquet")
-    sc = spark.sparkContext
-    app = getattr(sc, "_graft_app_id", None)  # applicationId is a py4j
-    if app is None:                           # round trip per access
-        app = sc._graft_app_id = sc.applicationId
-    key = (app, path)
+    key = (app_id(spark), path)
     df = _RELATION_CACHE.get(key)
     if df is None:
         for stale in [k for k in _RELATION_CACHE if k[0] != key[0]]:

@@ -6,17 +6,12 @@ back with ``KafkaAvroDeserializer`` (AvroConsumer.java:67-69). The wire
 format is ``0x00 magic byte + 4-byte big-endian schema id + Avro binary
 body``.
 
-Two implementations, same semantics:
-
-1. **JVM path (preferred on a real cluster)**: ``pyspark.sql.avro.functions
-   .from_avro/to_avro`` plus ``substring``/``concat`` framing — requires the
-   ``spark-avro`` package jar (`jvm_avro_available()` probes for it).
-2. **Pure-Python fallback** (this container has no spark-avro jar and no
-   avro/fastavro pip package): a from-scratch encoder/decoder for FLAT
-   PRIMITIVE records — the only shape the reference's data model allows
-   (SURVEY.md §1.2: string/int/long/float/double/boolean, no unions/
-   nulls/nested). Runs inside ``mapInPandas`` so the work stays on
-   executors, Arrow-batched; ~100 bytes/record of pure-Python work.
+A from-scratch pure-Python encoder/decoder (no spark-avro jar or
+avro/fastavro package is needed) for FLAT PRIMITIVE records — the only
+shape the reference's data model allows (SURVEY.md §1.2: string/int/long/
+float/double/boolean, no unions/nulls/nested). It runs inside
+``mapInPandas`` so the work stays on executors, Arrow-batched; ~100
+bytes/record of pure-Python work.
 
 The binary encoding (Avro spec 1.11, "Binary encoding"):
 - int/long: zigzag varint;  float/double: IEEE little-endian;
@@ -32,7 +27,7 @@ from typing import Any
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import BinaryType, StructField, StructType
+from pyspark.sql.types import BinaryType, StringType, StructField, StructType
 
 from ..sources.schema_dsl import avro_to_struct
 
@@ -128,23 +123,6 @@ def _field_types(avro_schema: dict) -> list[tuple[str, str]]:
 # --------------------------------------------------------------------------
 # DataFrame-level codec (mapInPandas — executor-side, Arrow-batched)
 # --------------------------------------------------------------------------
-def jvm_avro_available(spark) -> bool:
-    """True if the spark-avro package jar is usable (probe by actually
-    evaluating a ``to_avro`` expression — the Python wrapper always imports,
-    the JVM side fails without the jar)."""
-    try:
-        from pyspark.sql.avro.functions import to_avro
-
-        probe = spark.range(1).select(
-            to_avro(F.struct(F.lit(1).alias("x")), '{"type":"record","name":"p",'
-                    '"fields":[{"name":"x","type":"int"}]}').alias("b")
-        )
-        probe.collect()
-        return True
-    except Exception:
-        return False
-
-
 def encode_df(df: DataFrame, avro_schema: dict, schema_id: int = 1,
               key_field: str | None = None,
               passthrough_cols: list[str] | None = None) -> DataFrame:
@@ -166,16 +144,22 @@ def encode_df(df: DataFrame, avro_schema: dict, schema_id: int = 1,
         [StructField("key", BinaryType()), StructField("value", BinaryType())]
         + [StructField(c, by_name[c].dataType) for c in passthrough_cols]
     )
-    kidx = cols.index(key_field)
+    # the key text is Spark's string cast, the rule partition_for_key hashes;
+    # it matches Java's toString() where Python's str() does not (booleans,
+    # floating point)
+    key_col = key_field
+    if not isinstance(by_name[key_field].dataType, StringType):
+        key_col = "__avro_key_string"
+        df = df.withColumn(key_col, F.col(key_field).cast("string"))
 
     def enc(batches: Iterator) -> Iterator:
         import pandas as pd
 
         for pdf in batches:
             keys, vals = [], []
-            for row in pdf[cols].itertuples(index=False):
+            for row, key in zip(pdf[cols].itertuples(index=False), pdf[key_col]):
                 vals.append(frame_confluent(encode_record(ftypes, list(row)), schema_id))
-                keys.append(frame_confluent(_ENCODERS["string"](str(row[kidx])), schema_id))
+                keys.append(frame_confluent(_ENCODERS["string"](key), schema_id))
             out = {"key": keys, "value": vals}
             for c in passthrough_cols:
                 out[c] = pdf[c].tolist()

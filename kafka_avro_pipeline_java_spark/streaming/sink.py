@@ -111,7 +111,7 @@ class ExactlyOnceDbSink:
             "offset) VALUES (?, ?, ?, ?) ON DUPLICATE KEY UPDATE "
             "offset = GREATEST(offset, VALUES(offset))"
         )
-        offsets_ddl, _ = offsets_mirror_sql(self.paramstyle)
+        offsets_ddl = offsets_mirror_sql()
         if self.paramstyle == "format":
             offsets_upsert = (
                 f"INSERT INTO kafka_offsets (topic, partition, consumer_group, offset) "
@@ -220,7 +220,7 @@ class OffsetsMirror:
         if not progress:
             return
         ph = "%s" if self.dialect == "mysql" else "?"
-        ddl, _ = offsets_mirror_sql("format" if self.dialect == "mysql" else "qmark")
+        ddl = offsets_mirror_sql()
         if self.dialect == "mysql":
             upsert = (
                 f"INSERT INTO kafka_offsets (topic, partition, consumer_group, offset) "
@@ -251,23 +251,15 @@ class OffsetsMirror:
             conn.close()
 
 
-def offsets_mirror_sql(paramstyle: str = "format") -> tuple[str, str]:
-    """(DDL, upsert) for mirroring Structured Streaming progress into the
-    reference's ``kafka_offsets`` table (DataPipeline.java:152-158;
-    upsert MySQLProcessData.java:67-73). MySQL dialect."""
-    ph = "?" if paramstyle == "qmark" else "%s"
-    ddl = (
+def offsets_mirror_sql() -> str:
+    """DDL of the reference's ``kafka_offsets`` table, which mirrors
+    Structured Streaming progress (DataPipeline.java:152-158)."""
+    return (
         "CREATE TABLE IF NOT EXISTS kafka_offsets ("
         "topic VARCHAR(50) NOT NULL, partition INT NOT NULL, "
         "consumer_group VARCHAR(50), offset BIGINT, "
         "PRIMARY KEY (topic, partition, consumer_group))"
     )
-    upsert = (
-        f"INSERT INTO kafka_offsets (topic, partition, consumer_group, offset) "
-        f"VALUES ({ph}, {ph}, {ph}, {ph}) "
-        f"ON DUPLICATE KEY UPDATE offset = VALUES(offset)"
-    )
-    return ddl, upsert
 
 
 # --------------------------------------------------------------------------

@@ -117,11 +117,6 @@ def test_multi_schema_version_decode(spark):
         C.decode_df_multi(bad, {1: v1, 2: v2}).collect()
 
 
-def test_jvm_probe_is_safe(spark):
-    # container has no spark-avro jar: probe must return False, not raise
-    assert C.jvm_avro_available(spark) in (True, False)
-
-
 def test_decode_df_passthrough_collision_raises(spark):
     """ADVICE r05: a passthrough column named like a decoded Avro field
     would silently overwrite the decoded values — must raise instead."""
@@ -136,3 +131,32 @@ def test_decode_df_passthrough_collision_raises(spark):
     )
     with pytest.raises(ValueError, match="collide.*key_field1"):
         C.decode_df(framed, SCHEMA, passthrough_cols=["key_field1"])
+
+
+def test_non_string_key_is_java_tostring_and_matches_partition(spark):
+    """The Kafka key of a non-string field 0 is Java's toString() of the
+    value (reference AvroProducer.java:81), the same text whose hashCode
+    chose the partition — not Python's str()."""
+    import io
+
+    from test_generate import java_hash
+
+    from kafka_avro_pipeline_java_spark.streaming.kafka_io import prepare_kafka_batch
+
+    cases = [
+        ("boolean", "flag boolean", [(True,), (False,)], {"true", "false"}),
+        ("double", "flag double", [(1e7,), (1e-5,)], {"1.0E7", "1.0E-5"}),
+        ("float", "flag float", [(0.1,)], {"0.1"}),
+    ]
+    for avro_type, ddl, rows, expected in cases:
+        schema = {"name": "k", "fields": [{"name": "flag", "type": avro_type}]}
+        out = prepare_kafka_batch(
+            spark.createDataFrame(rows, ddl), schema, explicit_partitions=3
+        ).collect()
+        keys = set()
+        for row in out:
+            _, body = C.unframe_confluent(bytes(row["key"]))
+            key = C._decode_value(io.BytesIO(body), "string")
+            keys.add(key)
+            assert row["partition"] == java_hash(key) % 3, key
+        assert keys == expected

@@ -55,19 +55,21 @@ def test_unsupported_type_raises(spark):
         generate_dataset(spark, bad, 10)
 
 
+def java_hash(s: str) -> int:
+    """java.lang.String.hashCode: 31-polynomial over UTF-16 code units."""
+    units = s.encode("utf-16-be")
+    h = 0
+    for i in range(0, len(units), 2):
+        h = (h * 31 + int.from_bytes(units[i : i + 2], "big")) & 0xFFFFFFFF
+    return h - 0x100000000 if h > 0x7FFFFFFF else h
+
+
 def test_java_hashcode_parity(spark):
     """partition_for_key must reproduce java.lang.String.hashCode placement
     (reference AvroProducer.java:82) — checked against a Python
     reimplementation of the Java algorithm, which hashes UTF-16 code
     units (a code point above U+FFFF is a surrogate pair), and that
     reimplementation against the JVM's own String.hashCode."""
-
-    def java_hash(s: str) -> int:
-        units = s.encode("utf-16-be")
-        h = 0
-        for i in range(0, len(units), 2):
-            h = (h * 31 + int.from_bytes(units[i : i + 2], "big")) & 0xFFFFFFFF
-        return h - 0x100000000 if h > 0x7FFFFFFF else h
 
     keys = [
         "abc", "ABC123", "k", "", "zzzzzz", "Key42x", "aA0bB1",

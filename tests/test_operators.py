@@ -225,17 +225,18 @@ def test_dedup_pair_generation_storage_is_releasable(spark, sf_dir):
 
 
 def test_session_artifacts_survive_transient_release(spark):
-    """A checkpoint_session_artifact frame must stay readable after
+    """A session_memo frame must stay readable after
     release_transient_checkpoints — the graph/mlprep memo tables are
     reused across queries, and a released localCheckpoint cannot be
     recomputed, so a pinning regression would break every later consumer."""
     from kafka_avro_pipeline_java_spark.session import (
-        checkpoint_session_artifact,
         release_transient_checkpoints,
+        session_memo,
     )
 
-    pinned = checkpoint_session_artifact(
-        spark.range(10_000).selectExpr("id", "id * 3 AS y")
+    pinned = session_memo(
+        spark, "test_survives_release", "sf-a",
+        lambda: spark.range(10_000).selectExpr("id", "id * 3 AS y"),
     )
     transient = spark.range(5_000).localCheckpoint(eager=False)
     transient.count()
@@ -272,16 +273,11 @@ def test_plain_cache_survives_transient_release(spark):
     assert rid is not None  # silence unused warnings on some runners
 
 
-def test_release_session_artifact_unpins_and_frees(spark):
-    """r14 (ADVICE r13): evicting a pinned memo artifact must actually
-    reclaim its checkpoint blocks — DataFrame.unpersist() is a no-op for
-    localCheckpoint frames, so the session helper unpins the RDD id and
-    unpersists the underlying RDD."""
-    from kafka_avro_pipeline_java_spark.session import (
-        _PINNED_RDD_IDS,
-        checkpoint_session_artifact,
-        release_session_artifact,
-    )
+def test_evicted_session_memo_unpins_and_frees(spark):
+    """Evicting a session memo must actually reclaim its checkpoint blocks
+    — DataFrame.unpersist() is a no-op for localCheckpoint frames, so the
+    eviction unpins the RDD id and unpersists the underlying RDD."""
+    from kafka_avro_pipeline_java_spark import session
 
     def persistent_ids():
         return {
@@ -289,14 +285,20 @@ def test_release_session_artifact_unpins_and_frees(spark):
             for k in spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray()
         }
 
+    def pinned_ids():
+        return {rid for _, rid in session._MEMOS.values()}
+
+    def build():
+        return spark.range(8_000).selectExpr("id")
+
     before = persistent_ids()
-    pinned = checkpoint_session_artifact(spark.range(8_000).selectExpr("id"))
-    app = spark.sparkContext.applicationId
+    session.session_memo(spark, "test_evicted_frees", "sf-0", build)
     new_ids = persistent_ids() - before
-    assert new_ids and (new_ids & _PINNED_RDD_IDS.get(app, set()))
-    release_session_artifact(pinned)
-    assert not (persistent_ids() & new_ids), "evicted artifact blocks leaked"
-    assert not (new_ids & _PINNED_RDD_IDS.get(app, set())), "pin leaked"
+    assert new_ids and (new_ids & pinned_ids())
+    for i in range(1, session._MEMO_MAX_SF_DIRS + 1):  # the last one evicts sf-0
+        session.session_memo(spark, "test_evicted_frees", f"sf-{i}", build)
+    assert not (persistent_ids() & new_ids), "evicted memo blocks leaked"
+    assert not (new_ids & pinned_ids()), "pin leaked"
 
 
 def test_dedup_keep_one(spark, sf_dir):

@@ -1,4 +1,4 @@
-"""Dump .explain('formatted') for named queries to plans/r13/<name>_<tag>.txt.
+"""Dump .explain('formatted') for named queries to .explain/<name>_<tag>.txt.
 
 Usage: python tools/explain_dump.py <tag> <query> [query ...]
 Tag is 'before' or 'after'. Uses the bench session factory so the plans
@@ -16,7 +16,7 @@ TAG = sys.argv[1]
 NAMES = sys.argv[2:]
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 OUT = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-                   "plans", "r14")
+                   ".explain")
 os.makedirs(OUT, exist_ok=True)
 
 spark = get_spark("explain-dump")
