@@ -9,7 +9,7 @@ query surface and large-scale training-data-pipeline operators
 
 Layout
 ------
-- ``sources``    parquet/JDBC/Kafka table loading + the reference's schema
+- ``sources``    parquet/Kafka table loading + the reference's schema
                  DSL → Avro → StructType translator
 - ``functions``  column-expression helpers (vectors, text, hashing)
 - ``operators``  composite DataFrame operators (dedup, similarity, as-of)

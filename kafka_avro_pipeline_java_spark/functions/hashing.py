@@ -9,9 +9,9 @@ in oracle-free paths (MinHash/SimHash internals at scale).
 column expression — the reference keys Kafka partitions on
 ``abs(key.hashCode() % partitionCount)`` (reference
 ``02-producer/src/main/java/com/exam/worker/AvroProducer.java:82``), and
-this gives byte-identical partition placement when parity is wanted. Note
-the reference's ``Math.abs`` bug at Integer.MIN_VALUE (SURVEY.md §7.3) is
-NOT replicated: we use ``pmod`` which is always non-negative.
+this gives byte-identical partition placement when parity is wanted.
+``abs`` is taken of the remainder, never of the hash code itself, so
+Integer.MIN_VALUE needs no special case.
 """
 
 from __future__ import annotations
@@ -55,5 +55,7 @@ def java_string_hashcode(col: Column | str) -> Column:
 
 
 def partition_for_key(col: Column | str, n_partitions: int) -> Column:
-    """Reference partition invariant: same key → same partition, 0..n-1."""
-    return F.pmod(java_string_hashcode(col), F.lit(n_partitions))
+    """The reference's placement ``abs(key.hashCode() % n)``. Spark's ``%``
+    keeps the dividend's sign as Java's does; ``pmod`` would swap
+    partitions for negative hash codes that ``n`` does not divide."""
+    return F.abs(java_string_hashcode(col) % F.lit(n_partitions))

@@ -22,6 +22,8 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def get_spark(app_name: str = "kafka-avro-pipeline-spark", *, master: str | None = None,
               shuffle_partitions: int | None = None) -> SparkSession:
@@ -53,6 +55,14 @@ def get_spark(app_name: str = "kafka-avro-pipeline-spark", *, master: str | None
         # JIT threads used about half the JVM's CPU. A kept class costs 11
         # to 32 KB of metaspace, so 2000 entries stay under about 64 MB.
         .config("spark.sql.codegen.cache.maxEntries", "2000")
+        # Python workers fork from a daemon whose zip importers re-read an
+        # archive only when it changed: before Python 3.13, every task's
+        # importlib.invalidate_caches() re-read pyspark.zip, py4j and the
+        # Spark jar, about 0.2 s of CPU per task (worker_daemon.py). The
+        # daemon imports this package wherever Python workers start, so
+        # the package's parent directory goes on their PYTHONPATH.
+        .config("spark.python.daemon.module", f"{__package__}.worker_daemon")
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT)
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # cap per-task input so huge files split into parallel tasks
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
@@ -72,6 +82,9 @@ def tune_for_session(spark: SparkSession) -> SparkSession:
     # session here; only plan-construction speed is affected, never results.
     # spark.sql.codegen.cache.maxEntries is static too: a provided session
     # keeps its own cache size, so repeated queries may recompile classes.
+    # spark.python.daemon.module is static as well: a provided session's
+    # Python workers keep Spark's own daemon, so each Python task re-reads
+    # the pyspark and Spark archives (slower tasks, same results).
     return spark
 
 

@@ -1,29 +1,27 @@
-"""Kafka source/sink wrappers (Structured Streaming first).
+"""Kafka source/sink wrappers over the pure-Python wire protocol.
 
-Maps the reference's hand-rolled consumer/producer topology onto Spark's
-Kafka connector (SURVEY.md §3.4):
+Maps the reference's hand-rolled consumer/producer topology onto Spark
+(SURVEY.md §3.4) without the spark-sql-kafka jar:
 
 - partition discovery + thread-per-partition (reference
-  ``03-consumer/src/main/java/Main.java:28-64``) → the Kafka source plans
-  one task per topic-partition natively;
+  ``03-consumer/src/main/java/Main.java:28-64``) → ``read_kafka_stream_py``
+  (``format("kafka_py")``, ``sources/kafka_pyds.py``) fetches every
+  partition in the driver's Python source runner and plans one input
+  partition per micro-batch;
 - poll loop with ``max.poll.records`` bound (``AvroConsumer.java:116-138``)
-  → micro-batches bounded by ``maxOffsetsPerTrigger``;
+  → micro-batches bounded by ``max_records_per_batch``;
 - blocking-queue backpressure (``AvroConsumer.java:142-155``) → pull-based
   micro-batch admission (rate bounded by the same option);
 - DB-stored offsets + seek (``MySQLProcessData.java:42-63``) → checkpoint
-  recovery; ``startingOffsets=earliest`` is the cold-start default
-  (``AvroConsumer.java:66``).
+  recovery, from the earliest offset on a cold start
+  (``AvroConsumer.java:66``);
+- the producer pool (``02-producer``) → ``write_kafka_batch_py``, one
+  leader-routed Produce per Kafka partition from each Spark partition.
 
-This container has no spark-sql-kafka jar and no broker, so the JVM paths
-are gated on ``kafka_available``; the codec layer (avro_codec) is
-independently testable and the composition is exercised with the file
-streaming source in tests/test_streaming.py. The EXECUTED read/write path
-(round 5) is the pure-Python protocol stack: ``kafka_wire.py`` (client) +
-``sources/kafka_pyds.py`` (DataSource) consume real wire bytes —
-``read_kafka_stream_py`` below fetches every partition in the driver's
-Python source runner, plans one input partition per micro-batch and
-checkpoints offsets exactly like the JVM source, e2e-tested against the
-in-process broker (tests/test_kafka_wire.py).
+``kafka_source_options`` keeps the option contract of Spark's own Kafka
+source for a deployment that has the jar. The wire client is
+``kafka_wire.py``; tests run against the in-process broker
+(tests/test_kafka_wire.py).
 """
 
 from __future__ import annotations
@@ -35,16 +33,6 @@ from pyspark.sql import functions as F
 
 from ..functions.hashing import partition_for_key
 from .avro_codec import encode_df
-
-
-def kafka_available(spark: SparkSession) -> bool:
-    try:
-        spark.readStream.format("kafka").option("subscribe", "probe").option(
-            "kafka.bootstrap.servers", "localhost:0"
-        ).load()
-        return True
-    except Exception as e:  # jar missing → DATA_SOURCE_NOT_FOUND
-        return "DATA_SOURCE_NOT_FOUND" not in str(e) and "Failed to find" not in str(e)
 
 
 def kafka_source_options(
@@ -91,31 +79,6 @@ def kafka_source_options(
     return opts
 
 
-def read_kafka_stream(
-    spark: SparkSession,
-    brokers: str,
-    topics: str | None = None,
-    *,
-    assign: dict[str, list[int]] | None = None,
-    starting_offsets: str = "earliest",
-    max_offsets_per_trigger: int | None = None,
-    group_id: str | None = None,
-) -> DataFrame:
-    """Raw Kafka stream (key/value binary + topic/partition/offset) in
-    subscribe (discovery) or assign (explicit placement) mode."""
-    reader = spark.readStream.format("kafka")
-    for k, v in kafka_source_options(
-        brokers,
-        topics,
-        assign=assign,
-        starting_offsets=starting_offsets,
-        max_offsets_per_trigger=max_offsets_per_trigger,
-        group_id=group_id,
-    ).items():
-        reader = reader.option(k, v)
-    return reader.load()
-
-
 def read_kafka_stream_py(
     spark: SparkSession,
     brokers: str,
@@ -124,10 +87,9 @@ def read_kafka_stream_py(
     max_records_per_batch: int | None = None,
 ) -> DataFrame:
     """Raw Kafka micro-batch stream through the pure-Python protocol
-    DataSource (``format("kafka_py")``) — the jar-free twin of
-    ``read_kafka_stream`` with the same output schema and the same
-    bounded-admission knob (``max_records_per_batch`` ↔
-    maxOffsetsPerTrigger). Registration is idempotent per session."""
+    DataSource (``format("kafka_py")``), with the output schema of Spark's
+    Kafka source and its bounded-admission knob (``max_records_per_batch``
+    ↔ maxOffsetsPerTrigger). Registration is idempotent per session."""
     from ..sources.kafka_pyds import KafkaPyDataSource
 
     try:
@@ -154,9 +116,9 @@ def prepare_kafka_batch(
     """Rows → (key, value[, partition]) binary columns ready for the Kafka
     sink. Key = Avro field 0 (reference AvroProducer.java:81). With
     ``explicit_partitions``, adds the reference's exact placement
-    ``pmod(java_hashCode(key), n)`` (AvroProducer.java:82) — otherwise the
-    sink's murmur2-on-key default preserves the same same-key→same-partition
-    invariant without byte-identical placement."""
+    ``abs(java_hashCode(key) % n)`` (AvroProducer.java:82) — otherwise
+    ``write_kafka_batch_py`` places each row by its serialized key against
+    the topic's live partition count."""
     key_field = avro_schema["fields"][0]["name"]
     if explicit_partitions is not None:
         with_part = df.withColumn(
@@ -169,25 +131,15 @@ def prepare_kafka_batch(
     return encode_df(df, avro_schema, schema_id=schema_id)
 
 
-def write_kafka_batch(df: DataFrame, brokers: str, topic: str) -> None:
-    """(key,value) binary DataFrame → Kafka topic (batch)."""
-    (
-        df.write.format("kafka")
-        .option("kafka.bootstrap.servers", brokers)
-        .option("topic", topic)
-        .save()
-    )
-
-
 def write_kafka_batch_py(
     df: DataFrame, brokers: str, topic: str, *, timestamp_ms: int = 0
 ) -> None:
     """(key, value[, partition]) binary DataFrame → Kafka topic through the
-    pure-Python wire protocol (Produce v2) — the jar-free twin of
-    ``write_kafka_batch``, executed ON THE EXECUTORS: each Spark partition
-    opens one socket and sends one Produce request per Kafka partition it
-    holds rows for, so the send path fans out with the cluster exactly
-    like the JVM producer pool (reference 02-producer Main.java:45-49).
+    pure-Python wire protocol (Produce v2), executed ON THE EXECUTORS: each
+    Spark partition opens one socket and sends one Produce request per
+    Kafka partition it holds rows for, so the send path fans out with the
+    cluster exactly like the JVM producer pool (reference 02-producer
+    Main.java:45-49).
     Pass the ``partition`` column from ``prepare_kafka_batch(...,
     explicit_partitions=n)`` for the reference's exact
     ``abs(java_hashCode(field0) % n)`` placement (AvroProducer.java:82);
@@ -233,16 +185,3 @@ def write_kafka_batch_py(
                 c.produce(topic, pid, records)
 
     df.select("key", "value", "partition").foreachPartition(send_partition)
-
-
-def write_kafka_stream(
-    df: DataFrame, brokers: str, topic: str, checkpoint_dir: str
-):
-    """(key,value) binary streaming DataFrame → Kafka topic."""
-    return (
-        df.writeStream.format("kafka")
-        .option("kafka.bootstrap.servers", brokers)
-        .option("topic", topic)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )

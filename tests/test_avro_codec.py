@@ -139,13 +139,15 @@ def test_non_string_key_is_java_tostring_and_matches_partition(spark):
     chose the partition — not Python's str()."""
     import io
 
-    from test_generate import java_hash
+    from test_generate import java_hash, java_partition
 
     from kafka_avro_pipeline_java_spark.streaming.kafka_io import prepare_kafka_batch
 
     cases = [
         ("boolean", "flag boolean", [(True,), (False,)], {"true", "false"}),
-        ("double", "flag double", [(1e7,), (1e-5,)], {"1.0E7", "1.0E-5"}),
+        # "12345.678" has a negative hash code: Java places it at 2, pmod at 1
+        ("double", "flag double", [(1e7,), (1e-5,), (12345.678,)],
+         {"1.0E7", "1.0E-5", "12345.678"}),
         ("float", "flag float", [(0.1,)], {"0.1"}),
     ]
     for avro_type, ddl, rows, expected in cases:
@@ -158,5 +160,5 @@ def test_non_string_key_is_java_tostring_and_matches_partition(spark):
             _, body = C.unframe_confluent(bytes(row["key"]))
             key = C._decode_value(io.BytesIO(body), "string")
             keys.add(key)
-            assert row["partition"] == java_hash(key) % 3, key
+            assert row["partition"] == java_partition(java_hash(key), 3), key
         assert keys == expected

@@ -1,5 +1,7 @@
 """Generator value-domain tests (reference AvroProducer.java:97-123)."""
 
+import math
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -64,6 +66,12 @@ def java_hash(s: str) -> int:
     return h - 0x100000000 if h > 0x7FFFFFFF else h
 
 
+def java_partition(hash_code: int, n: int) -> int:
+    """``Math.abs(hashCode % n)`` (reference AvroProducer.java:82). Java's
+    remainder takes the dividend's sign, as ``math.fmod`` does."""
+    return abs(int(math.fmod(hash_code, n)))
+
+
 def test_java_hashcode_parity(spark):
     """partition_for_key must reproduce java.lang.String.hashCode placement
     (reference AvroProducer.java:82) — checked against a Python
@@ -86,13 +94,16 @@ def test_java_hashcode_parity(spark):
         ).collect()
     }
     jvm_objects = spark._jvm.java.util.Objects
+    big = spark._jvm.java.math.BigInteger
     for k in keys:
         hc, part = got[k]
         assert java_hash(k) == jvm_objects.hashCode(k), f"reference wrong for {k!r}"
         assert hc == java_hash(k), f"hashCode mismatch for {k!r}"
-        assert part == hc % 3, f"partition mismatch for {k!r}"
-    # its hashCode() is Integer.MIN_VALUE, which pmod puts in partition 1
-    assert got["polygenelubricants"] == (-(2**31), 1)
+        # BigInteger.remainder is Java's truncating %
+        assert java_partition(hc, 3) == big.valueOf(hc).remainder(big.valueOf(3)).abs().intValue()
+        assert part == java_partition(hc, 3), f"partition mismatch for {k!r}"
+    # its hashCode() is Integer.MIN_VALUE: Java's MIN_VALUE % 3 is -2
+    assert got["polygenelubricants"] == (-(2**31), 2)
 
 
 def test_same_key_same_partition(spark):
