@@ -1,63 +1,30 @@
 """Benchmark harness — runs the headline query suite at $SPARK_GRAFT_SF_DIR
-(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE
-JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
-"queries": {name: sec}, "sf": ...}.
+(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS].
 
-Each query is executed to completion (collect of the already-small result,
-or a noop-sink write for row-heavy outputs) so the measured time covers
-scan + shuffle + compute, not plan construction.
+Output. The LAST line printed is ONE compact JSON object:
+{"metric": "headline_suite_wall_clock", "value": total_sec, "unit": "sec",
+"queries": {family: sec}, "n_queries", "reps", "sf", ...}. Its "queries"
+dict holds PER-FAMILY subtotals (``_family`` buckets names by prefix),
+because the driver tail-captures only ~1.9 KB of stdout and the per-query
+dict does not fit. Per-query medians, minima and raw reps go to
+BENCH_DETAIL.json beside this file (``$SPARK_GRAFT_DETAIL_PATH``).
 
-Materialization control (round-6 fix, VERDICT r05 item 1): row-heavy
-outputs were previously timed via ``df.count()``, but Catalyst prunes
-unused Project expressions under a count, so a projection-only query was
-timed as little more than its scan (evidence: text_hash_embedding cost
-0.13 s while its output was a prunable array, 1.14 s once an explode
-forced materialization). Row-heavy queries now write to the built-in
-``noop`` batch sink (``df.write.format("noop").mode("overwrite").save()``),
-which evaluates every output column on the executors and discards the
-rows — the bench can no longer silently measure nothing.
+Materialization. Each query runs to completion: a result bounded by
+construction (``COLLECT_THRESHOLD_QUERIES``) is collected; any other is
+written to the built-in ``noop`` sink
+(``df.write.format("noop").mode("overwrite").save()``), which evaluates
+every output column and discards the rows. Never ``df.count()``: Catalyst
+prunes unused projections under a count, so it times little more than
+the scan.
 
-Round-6 re-baseline of the four r4->r5 regressions (VERDICT r05 item 6),
-each re-measured in a fresh JVM via SPARK_GRAFT_BENCH_ONLY, reps=3:
-- pipeline_source_overlap 2.08 s -> 1.26 s fresh (r4 level): suite
-  pressure — the 208-query run accumulates 5,700+ stages of GC/catalog
-  load; no code cause.
-- graph_kcore_rounds: back to 4.5 s after the round-6 k-core work (the
-  anti-join experiment that briefly doubled it was rejected; see
-  operators/graph.py::_peel_once).
-- basket_item_lift 2.56 s -> 2.24 s fresh — persisted, and git shows the
-  plan unchanged r4->r5 (only a new query appended to the same module),
-  so the shift is environmental; rather than annotate it, the plan was
-  rewritten (collect_set pair generation replacing the baskets
-  self-join, 2.25 -> 1.65 s median, bit-identical output).
-- q21_waiting_suppliers 1.49 s -> 1.52 s fresh — persisted; plan
-  unchanged since r2 and suite/fresh agree with each other, so the r4
-  1.09 s is the outlier (machine variance between rounds), not a
-  regression to chase.
+Reps. Each query runs ``SPARK_GRAFT_BENCH_REPS`` times (default 3) and
+the reported number is the MEDIAN; single cold runs swing 2× on
+unchanged plans.
 
-Round-7 plan fixes caught BY this bench: graph_link_prediction first
-measured 16.4 s — the plan audit showed (a) the edge list re-deriving the
-whole SimHash pipeline under five consumers (fixed with the operator's
-eager localCheckpoint) and (b) an 86M-row wedge expansion on the
-clique-dense near-dup graph (p90 degree 459), fixed by making the
-standard degree-≤64 center cut part of the query semantics on BOTH
-engines. Re-measured 4.0 s, oracle parity unchanged.
-
-Noise control (round-3 fix): single-shot cold timings swung 2x on unchanged
-plans (q1 cold 3.88s vs warm 1.01s in one session), which is useless for a
-"within 2x" gate. Each query now runs ``SPARK_GRAFT_BENCH_REPS`` times
-(default 3) and the reported per-query number is the MEDIAN.
-
-Output-size control (round-4 fix): round 3's stdout line carried BOTH the
-medians and a "queries_min" dict; at 106 queries that single line outgrew
-the driver's tail capture and BENCH_r03.json recorded ``parsed: null``.
-The driver's tail capture is ~1.9 KB, so even the medians dict alone
-(106 queries ≈ 3.8 KB) cannot fit on the stdout line. The stdout line now
-keeps the required shape ({metric,value,unit,queries,sf,reps}) but its
-"queries" dict holds PER-FAMILY subtotals (~15 entries, fits with lots of
-headroom); the full per-query medians, minima, and raw reps are written to
-BENCH_DETAIL.json beside this file. The headline JSON is guaranteed to be
-the LAST line printed.
+Order. Queries run in registry order (minus ``BENCH_EXCLUDED``), then
+``BENCH_EXTRA`` (measured, not registered). The driver's correctness
+report covers only the first 50 registered names, which
+``plans/__init__.py`` sets with ``_PRIORITY`` (at most 50 names).
 """
 
 from __future__ import annotations

@@ -2,7 +2,7 @@
 
 Multilevel hierarchies — org charts, BOM part explosions, category
 trees — are normally flattened depth-by-depth: Spark 4's WITH RECURSIVE
-(see plans/relational5.py::sql_recursive_hierarchy for the native form)
+(see plans/relational.py::sql_recursive_hierarchy for the native form)
 and any hand-rolled loop both execute one LEVEL per round, O(D) shuffle
 rounds for a depth-D tree. Pointer jumping halves the remaining distance
 every round instead: each node's ancestor pointer is advanced to its

@@ -1,7 +1,7 @@
 """Recursive-hierarchy queries flattened with the pointer-jumping
 operator (operators/hierarchy.py) in O(log depth) self-join rounds —
 the scale path next to the native WITH RECURSIVE form
-(plans/relational5.py::sql_recursive_hierarchy), whose level-per-round
+(plans/relational.py::sql_recursive_hierarchy), whose level-per-round
 execution costs O(depth) rounds on both engines.
 
 The forest is a deterministic function of p_partkey (part_forest), so

@@ -107,7 +107,7 @@ _Q6 = "1000000"  # the house 1e-6 FLOOR quantizer scale
 
 def _q6(col):
     """FLOOR(x*1e6+0.5)/1e6 — the engine-stable rounding (ROUND splits
-    engines on exact .5 ties; see tests/test_round12_ops.py)."""
+    engines on exact .5 ties; see tests/test_oracle_parity.py)."""
     return F.floor(col * 1000000 + F.lit(0.5)) / 1000000
 
 

@@ -10,7 +10,7 @@ example connector:
   md5-derived 60-bit hash of the id (functions/hashing.py semantics, but
   computed in plain Python inside the reader). Deterministic ⇒ the rows a
   cluster produces are a pure function of the options, so even a custom
-  connector's OUTPUT is DuckDB-oracle-checkable (plans/relational4.py::
+  connector's OUTPUT is DuckDB-oracle-checkable (plans/relational.py::
   source_python_datasource).
 
 Scale shape: ``partitions()`` returns `parts` input splits; each executor

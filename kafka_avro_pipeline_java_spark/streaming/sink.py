@@ -22,9 +22,11 @@ Two sinks, one contract:
   staging dir, atomically renamed to ``batch_id=N/``; replay sees the
   final dir and skips.
 
-Offsets mirroring (the reference's ``kafka_offsets`` table) is provided by
-``offsets_mirror_sql`` for Kafka-sourced frames carrying
-topic/partition/offset metadata.
+Offsets mirroring (the reference's ``kafka_offsets`` table):
+``ExactlyOnceDbSink(offsets_cols=..., consumer_group=...)`` upserts each
+topic-partition's next offset (max(offset)+1, never moving backwards) in
+the same transaction as the rows; the table's DDL is
+``offsets_mirror_sql``. The checkpoint stays the source of truth.
 """
 
 from __future__ import annotations
@@ -190,65 +192,6 @@ class ExactlyOnceDbSink:
         if offsets_cols is not None:
             select_cols += [c for c in offsets_cols if c not in select_cols]
         batch_df.select(*select_cols).foreachPartition(write_partition)
-
-
-class OffsetsMirror:
-    """Mirror Structured Streaming progress into the reference's
-    ``kafka_offsets`` table (checkpoints remain the source of truth; the
-    mirror reproduces the observable table of DataPipeline.java:152-158).
-
-    Call inside ``foreachBatch`` with a frame carrying Kafka metadata
-    (topic, partition, offset): upserts max(offset)+1 per (topic,
-    partition) under the consumer group — the reference's "next offset"
-    convention (AvroConsumer.java:168: offset+1).
-    """
-
-    def __init__(self, connection_factory, consumer_group: str,
-                 dialect: str = "mysql") -> None:
-        self.connection_factory = connection_factory
-        self.consumer_group = consumer_group
-        self.dialect = dialect
-
-    def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
-        from pyspark.sql import functions as F
-
-        progress = (
-            batch_df.groupBy("topic", "partition")
-            .agg((F.max("offset") + 1).alias("next_offset"))
-            .collect()  # tiny: one row per topic-partition
-        )
-        if not progress:
-            return
-        ph = "%s" if self.dialect == "mysql" else "?"
-        ddl = offsets_mirror_sql()
-        if self.dialect == "mysql":
-            upsert = (
-                f"INSERT INTO kafka_offsets (topic, partition, consumer_group, offset) "
-                f"VALUES ({ph}, {ph}, {ph}, {ph}) "
-                f"ON DUPLICATE KEY UPDATE offset = VALUES(offset)"
-            )
-        else:  # sqlite / standard
-            upsert = (
-                f"INSERT INTO kafka_offsets (topic, partition, consumer_group, offset) "
-                f"VALUES ({ph}, {ph}, {ph}, {ph}) "
-                f"ON CONFLICT (topic, partition, consumer_group) "
-                f"DO UPDATE SET offset = excluded.offset"
-            )
-        conn = self.connection_factory()
-        try:
-            cur = conn.cursor()
-            cur.execute(ddl)
-            cur.executemany(
-                upsert,
-                [(r["topic"], r["partition"], self.consumer_group, r["next_offset"])
-                 for r in progress],
-            )
-            conn.commit()
-        except Exception:
-            conn.rollback()
-            raise
-        finally:
-            conn.close()
 
 
 def offsets_mirror_sql() -> str:

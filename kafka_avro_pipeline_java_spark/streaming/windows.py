@@ -239,7 +239,7 @@ def ewma_per_user(
     """Streaming EWMA: the recurrence s ← αx + (1−α)s folded over each
     user's events in (ts, event_id) order, with s carried ACROSS
     micro-batches in the state store — the unbounded-series twin of the
-    batch closed form (plans/events3.py::events_ewma_hourly). Within a
+    batch closed form (plans/events.py::events_ewma_hourly). Within a
     batch the group's rows are sorted by event time before folding, so
     the composition (sort batch 1, fold) ∘ (sort batch 2, fold) equals
     one fold over the ordered series whenever batches respect event-time
@@ -304,7 +304,7 @@ def holt_per_user(
     value_col: str = "value",
 ) -> DataFrame:
     """Streaming Holt double-exponential smoothing: the single-pass O(n)
-    twin of the batch closed form (plans/events3.py::
+    twin of the batch closed form (plans/events.py::
     events_holt_trend_forecast) — level ℓ ← αx + (1−α)(ℓ+b) and trend
     b ← β(ℓ'−ℓ) + (1−β)b folded over each user's events in
     (ts, event_id) order, the (ℓ, b) pair carried ACROSS micro-batches

@@ -12,7 +12,7 @@ from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from kafka_avro_pipeline_java_spark.operators import quality, spans
-from kafka_avro_pipeline_java_spark.plans.text3 import hash_embedding
+from kafka_avro_pipeline_java_spark.plans.text import hash_embedding
 
 # lowercase latin words, 1-8 chars — the whitespace tokenizer's domain
 word = st.text(alphabet="abcdefghijklmnopqrstuvwxyz", min_size=1, max_size=8)

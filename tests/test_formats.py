@@ -3,7 +3,7 @@ connectors"): CSV, JSON-lines, and ORC must carry a mixed-type table
 losslessly, parquet must merge evolved schemas, and a partitioned write
 must prune to the matching partition directory on read. The CSV path is
 also on the graded surface as `source_csv_roundtrip`
-(plans/relational5.py) with a DuckDB value oracle; these tests pin the
+(plans/relational.py) with a DuckDB value oracle; these tests pin the
 byte-level behavior the query relies on plus the formats the oracle
 can't reach."""
 from __future__ import annotations

@@ -1,8 +1,10 @@
 """SCD2 merge (operators/merge.py): multi-batch history evolution."""
 
+from collections import Counter
+
 from pyspark.sql import functions as F
 
-from kafka_avro_pipeline_java_spark.operators.merge import scd2_apply
+from kafka_avro_pipeline_java_spark.operators.merge import cdc_apply, scd2_apply
 
 
 def _dim(spark, rows):
@@ -215,3 +217,122 @@ def test_incremental_minmax_new_group_insert_then_delete(spark):
         ).collect()
     }
     assert out == {"a": (1, 2.0, 2.0), "n": (1, 3.0, 3.0)}
+
+
+# ---------------------------------------------------------------------------
+# CDC apply-changes and incremental aggregates
+# ---------------------------------------------------------------------------
+
+
+def _log(spark, rows):
+    return spark.createDataFrame(rows, "k long, seq int, op string, v string")
+
+
+def test_cdc_latest_change_wins_and_deletes_drop(spark):
+    log = _log(
+        spark,
+        [
+            (1, 1, "I", "a"),
+            (1, 2, "U", "a2"),  # winner for key 1
+            (2, 1, "I", "b"),
+            (2, 2, "D", None),  # key 2 deleted
+            (3, 1, "I", "c"),  # untouched insert
+        ],
+    )
+    out = {(r.k, r.seq, r.op, r.v) for r in
+           cdc_apply(log, ["k"], seq_col="seq", op_col="op").collect()}
+    assert out == {(1, 2, "U", "a2"), (3, 1, "I", "c")}
+
+
+def test_cdc_out_of_order_log_same_result(spark):
+    # the log arrives shuffled (Kafka partitions interleave); seq decides
+    rows = [(1, 3, "U", "v3"), (1, 1, "I", "v1"), (1, 2, "U", "v2")]
+    for perm in (rows, rows[::-1], [rows[1], rows[0], rows[2]]):
+        out = cdc_apply(_log(spark, perm), ["k"], seq_col="seq", op_col="op")
+        assert [(r.k, r.v) for r in out.collect()] == [(1, "v3")]
+
+
+def test_cdc_reinsert_after_delete(spark):
+    log = _log(spark, [(1, 1, "I", "a"), (1, 2, "D", None), (1, 3, "I", "a2")])
+    out = cdc_apply(log, ["k"], seq_col="seq", op_col="op").collect()
+    assert [(r.k, r.seq, r.v) for r in out] == [(1, 3, "a2")]
+
+
+def test_cdc_plan_has_partial_aggregation(spark):
+    # the max_by formulation must keep map-side combine: a partial + final
+    # aggregate pair (struct-buffered max_by plans as SortAggregate), never
+    # a Window sort over the full log
+    log = _log(spark, [(1, 1, "I", "a")])
+    plan = cdc_apply(log, ["k"], seq_col="seq", op_col="op")._jdf.queryExecution().executedPlan().toString()
+    n_aggs = plan.count("SortAggregate") + plan.count("HashAggregate")
+    assert n_aggs >= 2, plan
+    assert "Window" not in plan
+
+
+def _base_agg(spark, rows):
+    return spark.createDataFrame(rows, "g string, cnt long, s double")
+
+
+def test_incremental_agg_insert_update_delete(spark):
+    from kafka_avro_pipeline_java_spark.operators.merge import (
+        incremental_agg_apply,
+    )
+
+    base = _base_agg(spark, [("x", 2, 10.0), ("y", 1, 5.0)])
+    delta = spark.createDataFrame(
+        [
+            ("x", 1, 4.0),    # insert into existing group
+            ("y", -1, 5.0),   # delete the only y row → group drops
+            ("z", 1, 7.0),    # brand-new group
+        ],
+        "g string, sign int, s double",
+    )
+    got = {
+        r.g: (r.cnt, r.s)
+        for r in incremental_agg_apply(
+            base, delta, ["g"], count_col="cnt", sum_cols=["s"]
+        ).collect()
+    }
+    assert got == {"x": (3, 14.0), "z": (1, 7.0)}
+
+
+def test_incremental_agg_matches_direct_recompute(spark):
+    import random
+
+    from kafka_avro_pipeline_java_spark.operators.merge import (
+        incremental_agg_apply,
+    )
+    from pyspark.sql import functions as SF
+
+    rng = random.Random(7)
+    facts = [(f"g{rng.randrange(5)}", float(rng.randrange(100)))
+             for _ in range(300)]
+    base_rows = facts[:200]
+    inserts = facts[200:]
+    deletes = base_rows[::7]
+    fdf = spark.createDataFrame(base_rows, "g string, v double")
+    base = fdf.groupBy("g").agg(
+        SF.count("*").alias("cnt"), SF.sum("v").alias("v")
+    )
+    delta = spark.createDataFrame(
+        [(g, 1, v) for g, v in inserts] + [(g, -1, v) for g, v in deletes],
+        "g string, sign int, v double",
+    )
+    got = {
+        r.g: (r.cnt, round(r.v, 6))
+        for r in incremental_agg_apply(
+            base, delta, ["g"], count_col="cnt", sum_cols=["v"]
+        ).collect()
+    }
+    from collections import defaultdict
+
+    remaining = list(base_rows)
+    for d in deletes:
+        remaining.remove(d)
+    remaining += inserts
+    want_cnt = Counter(g for g, _ in remaining)
+    want_sum = defaultdict(float)
+    for g, v in remaining:
+        want_sum[g] += v
+    want = {g: (want_cnt[g], round(want_sum[g], 6)) for g in want_cnt}
+    assert got == want

@@ -147,8 +147,9 @@ def test_executemany_with_values_col_upsert_form():
     # MySQL's canonical upsert tail "col = VALUES(col)" ends with
     # "VALUES(...)", so the greedy multi-row rewrite regex matches THAT
     # group (0 placeholders) instead of the real VALUES list; executemany
-    # must detect the mismatch and fall back to per-row execute. This is
-    # exactly what OffsetsMirror dialect='mysql' passes (sink.py).
+    # must detect the mismatch and fall back to per-row execute. The
+    # sink's GREATEST(offset, VALUES(offset)) tail (streaming/sink.py)
+    # ends the same way.
     with FakeMySQLServer() as srv:
         conn = mysql_wire.connect("127.0.0.1", srv.port, "root", "")
         cur = conn.cursor()

@@ -1,8 +1,5 @@
 """Operator-level quality tests: as-of edge cases, MinHash estimate
-quality vs exact Jaccard, multimodal resize/frame-sample plumbing, and the
-kafka_offsets mirror."""
-
-import sqlite3
+quality vs exact Jaccard, multimodal resize/frame-sample plumbing."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -14,7 +11,6 @@ from kafka_avro_pipeline_java_spark.operators.multimodal import (
     sample_frames,
     text_as_media,
 )
-from kafka_avro_pipeline_java_spark.streaming.sink import OffsetsMirror
 
 
 # --------------------------------------------------------------------------
@@ -382,34 +378,6 @@ def test_asof_validates_columns(spark):
         asof_join(left, right, on="k", ts="ts", value_cols=["nope"])
     with pytest.raises(ValueError, match="tiebreak"):
         asof_join(left, right, on="k", ts="ts", value_cols=["px"], tiebreak="eid")
-
-
-# --------------------------------------------------------------------------
-# kafka_offsets mirror (sqlite dialect)
-# --------------------------------------------------------------------------
-def test_offsets_mirror_upsert(spark, tmp_path):
-    db = str(tmp_path / "offsets.db")
-
-    def factory(path=db):
-        return sqlite3.connect(path, timeout=30)
-
-    mirror = OffsetsMirror(factory, consumer_group="group-dataset1", dialect="sqlite")
-    batch1 = spark.createDataFrame(
-        [("dataset1", 0, 10), ("dataset1", 1, 4)], "topic string, partition int, offset long"
-    )
-    batch2 = spark.createDataFrame(
-        [("dataset1", 0, 25), ("dataset1", 2, 7)], "topic string, partition int, offset long"
-    )
-    mirror(batch1, 0)
-    mirror(batch2, 1)
-    con = sqlite3.connect(db)
-    rows = dict(
-        ((t, p), o)
-        for t, p, g, o in con.execute("SELECT * FROM kafka_offsets").fetchall()
-    )
-    con.close()
-    # next-offset convention: max(offset)+1, later batch overwrites
-    assert rows == {("dataset1", 0): 26, ("dataset1", 1): 5, ("dataset1", 2): 8}
 
 
 # ------------------------------------------------------------------

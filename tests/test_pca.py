@@ -93,3 +93,34 @@ def test_projection_matches_numpy_reference(spark, sf_dir):
     for pos, vid in enumerate(ids):
         assert abs(got[vid][0] - ref[pos, 0]) < 2e-6
         assert abs(got[vid][1] - ref[pos, 1]) < 2e-6
+
+
+# ---------------------------------------------------------------------------
+# PCA snapshot provenance
+# ---------------------------------------------------------------------------
+
+
+def test_pca_snapshot_matches_trainer(spark):
+    """plans/pca_snapshot.py must stay exactly what
+    operators/pca.py::top_components(k=2) produces on the sf0.01
+    embeddings (the provenance re-assertion the ivf snapshot carries in
+    tests/test_similarity.py): re-train and compare within 1e-6."""
+    import numpy as np
+
+    from kafka_avro_pipeline_java_spark.operators import pca
+    from kafka_avro_pipeline_java_spark.plans.pca_snapshot import (
+        PCA_COMPONENTS_SF001,
+        PCA_EIGENVALUES_SF001,
+        PCA_MEAN_DOT_SF001,
+    )
+    from kafka_avro_pipeline_java_spark.sources.tables import load_table
+
+    e = load_table(spark, "/root/testdata/sf0.01", "embeddings")
+    vals, vecs, mu = pca.top_components(e, "embedding", k=2)
+    assert np.allclose(vals, PCA_EIGENVALUES_SF001, atol=1e-6)
+    assert np.allclose(vecs, np.array(PCA_COMPONENTS_SF001), atol=1e-6)
+    assert np.allclose(
+        [float(mu @ vecs[0]), float(mu @ vecs[1])],
+        PCA_MEAN_DOT_SF001,
+        atol=1e-6,
+    )

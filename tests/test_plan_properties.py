@@ -8,6 +8,9 @@ import pytest
 from kafka_avro_pipeline_java_spark.plans import QUERIES
 
 
+SF_DIR = "/root/testdata/sf0.001"
+
+
 def _formatted_plan(spark, name, sf_dir) -> str:
     df = QUERIES[name](spark, sf_dir)
     mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
@@ -596,3 +599,43 @@ def test_result_guard_flags_decimal_output_and_huge_ints(spark):
         "agg_table_fingerprint", sdf, sdf.collect(), con, sql,
         con.execute(sql).fetchall(),
     ) == []
+
+
+# ---------------------------------------------------------------------------
+# broadcast, cartesian and decorrelation checks
+# ---------------------------------------------------------------------------
+
+
+def test_loo_encoding_broadcasts_category_stats(spark):
+    """The category-stats table (5 priorities) must reach the fact scan
+    as a BroadcastHashJoin — a shuffle join here would re-shuffle the
+    whole fact table on a 5-value key at 100 TB."""
+    plan = _formatted_plan(spark, "features_target_encoding_loo", SF_DIR)
+    assert "BroadcastHashJoin" in plan
+    assert "CartesianProduct" not in plan
+
+
+def test_new_r11_plans_have_no_cartesian_products(spark):
+    """Belt-and-braces beside the sweep gate: none of the round-11 plans
+    may plan a physical CartesianProduct."""
+    for name in (
+        "privacy_k_anonymity_audit", "privacy_l_diversity_audit",
+        "text_kneser_ney_bigram", "graph_hits_hubs_authorities",
+        "join_lateral_topn_per_group", "window_nth_value_zoo",
+        "sketch_ddsketch_error_audit", "events_quantile_treatment_effect",
+        "stats_mcnemar_paired", "merge_snapshot_column_drift",
+        "scalar_interval_month_zoo", "scalar_isoweek_zoo",
+        "agg_percentile_cont_disc_zoo", "knn_sign_sketch_hamming",
+        "pipeline_perplexity_filter",
+    ):
+        plan = _formatted_plan(spark, name, SF_DIR)
+        assert "CartesianProduct" not in plan, name
+
+
+def test_lateral_join_decorrelates_to_window(spark):
+    """The correlated LIMIT subquery must plan as a partitioned window
+    (Catalyst DecorrelateInnerQuery), NOT a per-nation nested loop: the
+    physical plan carries a Window node and no CartesianProduct."""
+    plan = _formatted_plan(spark, "join_lateral_topn_per_group", SF_DIR)
+    assert "Window" in plan
+    assert "CartesianProduct" not in plan

@@ -245,3 +245,38 @@ def test_workers_find_the_daemon_outside_the_repo(tmp_path):
     )
     assert out.returncode == 0, out.stderr[-3000:]
     assert out.stdout.strip().splitlines()[-1] == "[0, 2, 4]"
+
+
+# ---------------------------------------------------------------------------
+# base-relation memo of load_table
+# ---------------------------------------------------------------------------
+
+
+def test_load_table_relation_memo_is_transparent(spark, sf_dir):
+    """The per-(app, path) base-relation memo must change NOTHING
+    observable: the warm (memoized) read returns the same schema and the
+    same rows as the cold (freshly resolved) read, and two sf_dirs never
+    share an entry. The memo holds a logical plan over file metadata —
+    rows always come from the parquet scan at execution."""
+    import os
+
+    from kafka_avro_pipeline_java_spark.sources import tables as T
+
+    app = spark.sparkContext.applicationId
+    for name in ("orders", "events"):  # events exercises the ts normalizer
+        key = (app, os.path.join(sf_dir, f"{name}.parquet"))
+        T._RELATION_CACHE.pop(key, None)
+        cold = T.load_table(spark, sf_dir, name)
+        assert key in T._RELATION_CACHE  # first read populated the memo
+        warm = T.load_table(spark, sf_dir, name)
+        assert warm.schema == cold.schema
+        key_col = cold.columns[0]
+        cold_rows = cold.orderBy(key_col).limit(20).collect()
+        warm_rows = warm.orderBy(key_col).limit(20).collect()
+        assert warm_rows == cold_rows
+    # keys carry the full path: a second sf_dir gets its own entry, so a
+    # sweep across scale factors can never serve one directory's relation
+    # for another's files
+    other = "/root/testdata/sf0.01"
+    T.load_table(spark, other, "orders")
+    assert (app, os.path.join(other, "orders.parquet")) in T._RELATION_CACHE

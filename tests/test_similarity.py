@@ -18,12 +18,22 @@ driver actually grades at.
 import random
 
 import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from kafka_avro_pipeline_java_spark.operators import similarity
+from kafka_avro_pipeline_java_spark.operators.pq import sq8_encode
 from kafka_avro_pipeline_java_spark.plans import QUERIES
 
+
+SF_DIR = "/root/testdata/sf0.001"
 RECALL_SF_DIR = "/root/testdata/sf0.01"
+
+finite = st.floats(
+    min_value=-100.0, max_value=100.0, allow_nan=False, allow_infinity=False
+)
+vec4 = st.lists(finite, min_size=4, max_size=4)
 
 
 def _top_ids(df) -> list[int]:
@@ -582,3 +592,128 @@ def test_sampled_snapshot_matches_sampler(spark):
     )
     got = [[float(x) for x in r[0]] for r in rows]
     assert got == SAMPLED_CENTS_SF001
+
+
+# ---------------------------------------------------------------------------
+# SQ8 scalar quantization
+# ---------------------------------------------------------------------------
+
+
+@settings(max_examples=8, deadline=None)
+@given(st.lists(vec4, min_size=2, max_size=12))
+def test_sq8_codes_in_range_and_decode_within_bin(spark, vecs):
+    rows = [(i, [float(x) for x in v]) for i, v in enumerate(vecs)]
+    df = spark.createDataFrame(rows, "vid long, emb array<double>")
+    codes = sq8_encode(df, "emb", "vid").collect()
+    assert len(codes) == len(vecs)
+    lo = [min(v[d] for v in vecs) for d in range(4)]
+    hi = [max(v[d] for v in vecs) for d in range(4)]
+    for r in codes:
+        for d, c in enumerate(r.codes):
+            # codes are always bytes
+            assert 0 <= c <= 255
+            span = hi[d] - lo[d]
+            if span == 0:
+                assert c == 0
+                continue
+            # decoding to the bin CENTER lands within half a bin of the
+            # original value — the quantization error bound
+            dec = lo[d] + (c + 0.5) * span / 256.0
+            x = vecs[r.id][d]
+            assert abs(dec - x) <= span / 256.0 + 1e-9
+
+
+# ---------------------------------------------------------------------------
+# sign-sketch shortlist
+# ---------------------------------------------------------------------------
+
+
+def test_sign_sketch_scores_are_exact_and_consistent(spark):
+    """The binary-quantization path may PRUNE (the Hamming shortlist is
+    approximate) but must never INVENT: every returned (vec_id, cos_sim,
+    hamming) must equal the exact cosine and exact sign-mismatch count
+    recomputed in python, and the 5 rows must be the cosine-descending
+    head of the 50-shortlist."""
+    import math
+
+    import duckdb
+
+    from kafka_avro_pipeline_java_spark.plans.vectors import _IVF_QV
+
+    rows = QUERIES["knn_sign_sketch_hamming"](spark, SF_DIR).collect()
+    assert len(rows) == 5
+    emb = dict(
+        duckdb.sql(
+            f"SELECT vec_id, embedding FROM '{SF_DIR}/embeddings.parquet'"
+        ).fetchall()
+    )
+    qn = math.sqrt(sum(x * x for x in _IVF_QV))
+    sims = [r["cos_sim"] for r in rows]
+    assert sims == sorted(sims, reverse=True)
+    for r in rows:
+        v = emb[r["vec_id"]]
+        ham = sum(1 for x, q in zip(v, _IVF_QV) if (x > 0) != (q > 0))
+        assert r["hamming"] == ham
+        vn = math.sqrt(sum(x * x for x in v))
+        cos = sum(x * q for x, q in zip(v, _IVF_QV)) / (vn * qn)
+        assert abs(r["cos_sim"] - cos) < 1e-6
+
+
+# ---------------------------------------------------------------------------
+# shared-base bucketed embedding pairs
+# ---------------------------------------------------------------------------
+
+
+def test_embedding_bucketed_shared_base_matches_default(spark):
+    """The `base` override of embedding_near_pairs_bucketed (one shared
+    plane-dot scan, sliced per detector — the capture-recapture
+    optimization) must produce EXACTLY the pairs and cosines of the
+    default per-call derivation, for both plane halves."""
+    import random
+
+    from pyspark.sql import functions as F
+
+    from kafka_avro_pipeline_java_spark.functions.vectors import (
+        lcg_planes,
+        norm,
+    )
+    from kafka_avro_pipeline_java_spark.operators import dedup
+    from kafka_avro_pipeline_java_spark.operators.similarity import plane_dots
+
+    rng = random.Random(7)
+    center = [rng.gauss(0, 1) for _ in range(16)]
+    rows = [(i, [x + rng.gauss(0, 0.02) for x in center]) for i in range(25)]
+    rows += [(200 + j, [rng.gauss(0, 1) for _ in range(16)]) for j in range(25)]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    planes = lcg_planes(64, 16, seed=42)
+    half = len(planes) // 2
+    shared = (
+        df.select(
+            F.col("vec_id").alias("id"),
+            F.col("embedding").alias("v"),
+            norm("embedding").alias("nrm"),
+            plane_dots("embedding", planes).alias("__pd_all"),
+        )
+        .repartition(4)
+        .localCheckpoint(eager=False)
+    )
+    for lo, hi, sl in (
+        (0, half, F.slice("__pd_all", 1, half)),
+        (half, len(planes), F.slice("__pd_all", half + 1, half)),
+    ):
+        want = {
+            (r["id_a"], r["id_b"], r["cos_sim"])
+            for r in dedup.embedding_near_pairs_bucketed(
+                df, "embedding", "vec_id", planes[lo:hi],
+                threshold=0.9, bands=2, max_bucket=100,
+            ).collect()
+        }
+        got = {
+            (r["id_a"], r["id_b"], r["cos_sim"])
+            for r in dedup.embedding_near_pairs_bucketed(
+                df, "embedding", "vec_id", planes[lo:hi],
+                threshold=0.9, bands=2, max_bucket=100,
+                base=shared.select("id", "v", "nrm", sl.alias("__pd")),
+            ).collect()
+        }
+        assert want and got == want, (lo, hi, len(want), len(got))

@@ -1,6 +1,10 @@
 """Stream-stream / stream-static join tests against batch equivalents."""
 
+import datetime
+
 import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from kafka_avro_pipeline_java_spark.sources import load_table
@@ -196,5 +200,48 @@ def test_salted_distinct_count_matches_plain(spark, sf_dir):
         for r in o.groupBy("o_orderpriority")
         .agg(F.countDistinct("o_custkey").alias("n"))
         .collect()
+    }
+    assert got == want
+
+
+# ---------------------------------------------------------------------------
+# interval join vs a Python reference
+# ---------------------------------------------------------------------------
+
+
+@settings(max_examples=8, deadline=None)
+@given(
+    st.lists(
+        st.tuples(
+            st.integers(min_value=0, max_value=3),  # user
+            st.integers(min_value=0, max_value=5000),  # seconds offset
+            st.booleans(),  # click vs purchase
+        ),
+        min_size=1,
+        max_size=20,
+    )
+)
+def test_interval_join_matches_python_reference(spark, events):
+    base = datetime.datetime(2024, 1, 1)
+    rows = [
+        (i, u, base + datetime.timedelta(seconds=s), bool(p))
+        for i, (u, s, p) in enumerate(events)
+    ]
+    df = spark.createDataFrame(
+        rows, "event_id long, user_id long, ts timestamp, is_p boolean"
+    )
+    clk = df.filter(~F.col("is_p")).select("event_id", "user_id", "ts")
+    pur = df.filter(F.col("is_p")).select("event_id", "user_id", "ts")
+    got = {
+        (r.l_event_id, r.r_event_id)
+        for r in J.stream_stream_within(
+            clk, pur, "user_id", within="1 hour", watermark="2 hours"
+        ).collect()
+    }
+    want = {
+        (ci, pi)
+        for (ci, cu, ct, _) in [r for r in rows if not r[3]]
+        for (pi, pu, pt, _) in [r for r in rows if r[3]]
+        if cu == pu and ct < pt <= ct + datetime.timedelta(hours=1)
     }
     assert got == want

@@ -84,3 +84,62 @@ def test_chunking_reconstructs_token_stream(spark, sf_dir):
             toks = chunks[i]
             rebuilt.extend(toks if i == 0 else toks[8:])
         assert rebuilt == docs[doc_id], doc_id
+
+
+# ---------------------------------------------------------------------------
+# winnowing fingerprints
+# ---------------------------------------------------------------------------
+
+
+def _winnow_reference(text: str, k: int = 4, w: int = 4) -> list[int]:
+    """Pure-Python winnowing with the same portable token hash."""
+    import hashlib
+
+    M = (1 << 31) - 1
+    toks = text.strip().lower().split()
+    th = [int(hashlib.md5(t.encode()).hexdigest()[:15], 16) % M for t in toks]
+    grams = [
+        __import__("functools").reduce(lambda h, x: (h * 257 + x) % M, g, 0)
+        for g in (th[i : i + k] for i in range(len(th) - k + 1))
+    ] if len(th) >= k else []
+    if len(grams) < w:
+        return []
+    sel = []
+    seen = set()
+    for j in range(len(grams) - w + 1):
+        m = min(grams[j : j + w])
+        if m not in seen:
+            seen.add(m)
+            sel.append(m)
+    return sel
+
+
+def test_winnowing_matches_python_reference_and_guarantee(spark):
+    """The Spark winnowing pipeline equals the Python reference per doc
+    (count + xor), and the winnowing GUARANTEE holds: two documents
+    sharing a run of >= k+w-1 tokens share >= 1 fingerprint."""
+    import functools
+
+    from pyspark.sql import functions as F
+
+    from kafka_avro_pipeline_java_spark.functions import text as T
+
+    docs = [
+        (1, "alpha beta gamma delta epsilon zeta eta theta iota kappa"),
+        (2, "one two three alpha beta gamma delta epsilon zeta xx yy"),
+        (3, "short doc"),          # < k tokens -> no fingerprints
+        (4, "a b c d"),            # exactly k tokens, 1 gram < w -> none
+        (5, "x " * 20),            # repeated token: distinct collapses
+    ]
+    df = spark.createDataFrame(docs, "doc_id long, text string")
+    th = df.select("doc_id", T.winnowing_token_hashes("text").alias("th"))
+    grams = th.select("doc_id", T.winnowing_fingerprints("th").alias("gh"))
+    sel = grams.select("doc_id", T.winnowing_select("gh").alias("fps"))
+    got = {r["doc_id"]: sorted(r["fps"]) for r in sel.collect()}
+    for doc_id, text in docs:
+        expect = sorted(_winnow_reference(text))
+        assert got[doc_id] == expect, (doc_id, got[doc_id], expect)
+    # guarantee: docs 1 and 2 share the 7-token run "alpha..zeta"
+    assert set(got[1]) & set(got[2])
+    # degenerate docs select nothing
+    assert got[3] == [] and got[4] == []

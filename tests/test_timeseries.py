@@ -1,5 +1,5 @@
 """Time-series operator semantics on constructed fixtures: LOCF gap-fill
-and trailing-window anomaly scoring (plans/events2.py). Value-exactness vs
+and trailing-window anomaly scoring (plans/events.py). Value-exactness vs
 DuckDB is the driver oracle's job; these pin the behavior."""
 
 from __future__ import annotations
@@ -8,13 +8,17 @@ import datetime as dt
 import os
 import tempfile
 
+import duckdb
 import pandas as pd
 import pytest
 
-from kafka_avro_pipeline_java_spark.plans.events2 import (
+from kafka_avro_pipeline_java_spark.plans.events import (
     events_hourly_anomaly,
     events_resample_locf,
 )
+
+
+SF_DIR = "/root/testdata/sf0.001"
 
 T0 = dt.datetime(2024, 1, 1, 0, 30)
 
@@ -170,3 +174,34 @@ def test_holt_constant_series_flat_forecast(spark):
         for r in out:
             assert r["level"] == 3.0 and r["trend"] == 0.0
             assert r["forecast_next"] == 3.0
+
+
+# ---------------------------------------------------------------------------
+# square-wave periodogram
+# ---------------------------------------------------------------------------
+
+
+def test_square_wave_contrast_reference(spark):
+    """Recompute the period-24 square-wave contrast in pure Python from
+    the parquet and compare exactly (everything is integer)."""
+    import duckdb
+
+    from kafka_avro_pipeline_java_spark.plans import QUERIES
+
+    got = {
+        r["period_hours"]: r["contrast_n"]
+        for r in QUERIES["events_square_wave_periodogram"](spark, SF_DIR).collect()
+    }
+    con = duckdb.connect()
+    hours = con.execute(
+        f"""SELECT CAST(date_diff('hour', TIMESTAMP '1970-01-01 00:00:00',
+                                  date_trunc('hour', ts)) AS BIGINT),
+                   COUNT(*)
+            FROM read_parquet('{SF_DIR}/events.parquet') GROUP BY 1"""
+    ).fetchall()
+    n = len(hours)
+    sy = sum(y for _, y in hours)
+    for p in (2, 24):
+        sys_ = sum(y * (1 if 2 * (t % p) < p else -1) for t, y in hours)
+        ss = sum(1 if 2 * (t % p) < p else -1 for t, _ in hours)
+        assert got[p] == abs(n * sys_ - sy * ss)

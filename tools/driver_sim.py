@@ -59,6 +59,11 @@ import __spark_entry__ as E
 
 SF = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 ONLY = set(sys.argv[2:])
+# A full sweep is logged under the head it ran (tools/sweep_status.py::
+# clean_head), read before any code runs and again at the end.
+from tools.sweep_status import clean_head
+_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+_START_HEAD = clean_head(_ROOT)
 spark = (SparkSession.builder.master("local[16]").appName("driver-sim")
          .config("spark.sql.shuffle.partitions", "16")
          # skip per-API-call Python call-site capture (see session.py) —
@@ -241,7 +246,7 @@ for name, fn in sorted(qs.items()):
 _THIS_IS_FULL_SF01 = (not ONLY) and SF.rstrip("/").endswith("sf0.1")
 if not _THIS_IS_FULL_SF01:
     from tools.sweep_status import latest_sf01_sweep
-    _sw = latest_sf01_sweep(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+    _sw = latest_sf01_sweep(_ROOT)
     if _sw is not None and _sw.get("stale"):
         gated += 1
         print(f"GATE sweep-stale: newest full sf0.1 sweep ran at {_sw['head']} "
@@ -252,25 +257,21 @@ print(f"RESULT: {ok} match, {bad} mismatch, {gated} gate failures")
 # sf0.1 sweep ran this round at this commit" is a checkable artifact
 # (VERDICT r11 item 5) — bench.py surfaces the latest sf0.1 entry's git
 # head in its JSON line, which the driver archives as BENCH_r{N}.json.
+# A tree with uncommitted query-surface or gate edits is not HEAD, so its
+# sweep is not logged.
 if not ONLY:
-    import subprocess, time
-    try:
-        head = subprocess.run(
-            ["git", "-C", os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-             "rev-parse", "--short", "HEAD"],
-            capture_output=True, text=True, timeout=10,
-        ).stdout.strip() or None
-    except Exception:
-        head = None
-    rec = {"sf_dir": SF, "match": ok, "mismatch": bad, "gated": gated,
-           "head": head, "ts": time.time()}
-    log_path = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "SWEEPLOG.jsonl",
-    )
-    with open(log_path, "a") as fh:
-        fh.write(json.dumps(rec) + "\n")
-    print(f"SWEEPLOG: appended {rec}")
+    import time
+    head = clean_head(_ROOT)
+    if head is None or head != _START_HEAD:
+        print("SWEEPLOG: not appended — uncommitted edits under "
+              "tools/sweep_status.py::STALE_PATHS, or HEAD moved during the "
+              "sweep; commit and re-run to log this sweep")
+    else:
+        rec = {"sf_dir": SF, "match": ok, "mismatch": bad, "gated": gated,
+               "head": head, "ts": time.time()}
+        with open(os.path.join(_ROOT, "SWEEPLOG.jsonl"), "a") as fh:
+            fh.write(json.dumps(rec) + "\n")
+        print(f"SWEEPLOG: appended {rec}")
 spark.stop()
 if bad or gated:
     sys.exit(1)

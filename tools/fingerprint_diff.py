@@ -23,7 +23,7 @@ from pyspark.sql import SparkSession, functions as F
 SF = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 N = int(sys.argv[2]) if len(sys.argv) > 2 else 10
 
-# Canonical forms pinned to plans/relational6.py::agg_table_fingerprint —
+# Canonical forms pinned to plans/relational.py::agg_table_fingerprint —
 # keep in lockstep with the graded query (and its oracle SQL) or the diff
 # harness will report false divergence. Since r13 the date term is epoch
 # DAYS (integer, format-string-free) and the fp parse is strpos-based.

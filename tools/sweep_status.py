@@ -13,7 +13,9 @@ from HEAD on any QUERY-SURFACE or GATE-LOGIC path: the package,
 __spark_entry__.py, or the sweep/gate tooling itself (tools/driver_sim,
 tools/scan_guards, tools/result_guards — ADVICE r12: an edit to the
 gate logic whose 'gated' count the record carries must also invalidate
-the record).
+the record), or any of those paths has uncommitted edits. For the same
+reason a sweep is only logged under a head (``clean_head``) when those
+paths match that head exactly.
 """
 
 from __future__ import annotations
@@ -32,6 +34,29 @@ STALE_PATHS = (
 )
 
 
+def _git(root: str, *args: str) -> str:
+    return subprocess.run(
+        ["git", "-C", root, *args],
+        capture_output=True, text=True, timeout=10, check=True,
+    ).stdout
+
+
+def _uncommitted(root: str) -> bool:
+    """True when a STALE_PATHS file is modified, staged or untracked."""
+    return bool(_git(root, "status", "--porcelain", "--", *STALE_PATHS).strip())
+
+
+def clean_head(root: str) -> str | None:
+    """Short HEAD hash, or None when a STALE_PATHS file has uncommitted
+    edits (a sweep of that tree is not a sweep of HEAD) or git fails."""
+    try:
+        if _uncommitted(root):
+            return None
+        return _git(root, "rev-parse", "--short", "HEAD").strip() or None
+    except (OSError, subprocess.SubprocessError):
+        return None
+
+
 def latest_sf01_sweep(root: str) -> dict | None:
     """Newest SWEEPLOG.jsonl record for a full sf0.1 sweep, compacted,
     with a ``stale`` flag (None = unknown, e.g. sweep head not in this
@@ -48,11 +73,8 @@ def latest_sf01_sweep(root: str) -> dict | None:
     stale = None
     if r.get("head"):
         try:
-            changed = subprocess.run(
-                ["git", "-C", root, "diff", "--name-only", f"{r['head']}..HEAD"],
-                capture_output=True, text=True, timeout=10, check=True,
-            ).stdout.splitlines()
-            stale = any(
+            changed = _git(root, "diff", "--name-only", f"{r['head']}..HEAD").splitlines()
+            stale = _uncommitted(root) or any(
                 f.startswith(STALE_PATHS[0]) or f in STALE_PATHS[1:]
                 for f in changed
             )
