@@ -574,7 +574,7 @@ def graph_clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
     Per-node triangle counts come from the ordered-triple wedge join
     (u<v<w — each triangle found once, credited to all three corners);
     both engines quantize each rational c_v to 1e9 fixed-point BEFORE
-    the average so the sum is exact integers (the stats2.py discipline).
+    the average so the sum is exact integers (the plans/stats.py discipline).
     At 100× the wedge join is the O(m^1.5) node-iterator shape with the
     hub cut available (graph_link_prediction), and the coefficient table
     is node-sized, never pair-sized."""

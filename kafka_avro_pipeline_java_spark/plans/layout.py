@@ -644,7 +644,7 @@ def layout_curve_locality_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     worst per-file bounding-box half-perimeter (sx-span + sy-span) in
     curve grid units. Tighter boxes = tighter per-file min/max zone maps
     on BOTH columns = more pruning for every 2-D range predicate;
-    Hilbert's unit-step adjacency (tests/test_round13_ops.py) shows up
+    Hilbert's unit-step adjacency (tests/test_layout.py) shows up
     here as a strictly smaller average than Morton's quadrant-seam
     jumps. Both file assignments use the two-phase distributed rank
     (operators/ranking.py::attach_global_order_stats) — no

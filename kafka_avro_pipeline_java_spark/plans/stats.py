@@ -1219,7 +1219,7 @@ def agg_theil_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     or inside them"). Spend is rounded to whole dollars (BIGINT x ≥ 1,
     identical in both engines), each x·ln(x) row term is quantized to
     millidollars before the exact integer sum (T = Σx·lnx/S − ln μ),
-    and the 5 between-group terms quantize at 1e9 — the stats2
+    and the 5 between-group terms quantize at 1e9 — the plans/stats.py
     discipline end to end. One customer-keyed shuffle, then
     segment-bounded algebra."""
     o = load_table(spark, sf_dir, "orders")

@@ -1671,9 +1671,6 @@ def dedup_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup.containment_pairs(d, "text", "doc_id", k=3, threshold=0.4)
 
 
-from .registry import ORACLES as _ORACLES2  # noqa: E402  (jaccard is registered above)
-
-
 @query(
     "dedup_golden_record",
     oracle=f"""
@@ -1780,9 +1777,8 @@ def dedup_golden_record(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # splice the jaccard-pair CTE into the oracle now that both are registered
-ORACLES = _ORACLES2
-ORACLES["dedup_golden_record"] = ORACLES["dedup_golden_record"].replace(
-    "{jaccard}", ORACLES["dedup_ngram_jaccard"]
+_ORACLES["dedup_golden_record"] = _ORACLES["dedup_golden_record"].replace(
+    "{jaccard}", _ORACLES["dedup_ngram_jaccard"]
 )
 
 

@@ -1020,7 +1020,7 @@ def embedding_pca_project(spark: SparkSession, sf_dir: str) -> DataFrame:
     IVF/PQ paths in r12 (VERDICT r12 item 3): the graded plan projects
     onto snapshot LITERALS, the DuckDB oracle recomputes every projection
     from the identical floats, and
-    tests/test_round13_ops.py::test_pca_snapshot_matches_trainer
+    tests/test_pca.py::test_pca_snapshot_matches_trainer
     re-trains on sf0.01 to re-assert provenance (the live trainer path
     operators/pca.py::pca_project stays exercised by tests/test_pca.py).
     Each per-dim product is 1e9-quantized to an INTEGER before the
@@ -2020,7 +2020,7 @@ def dedup_capture_recapture_estimate(spark: SparkSession, sf_dir: str) -> DataFr
     LOWER bound (15·10/3 = 50 vs 920 true at sf0.1) — the estimator is
     consistent in the NEAR-DUP regime it exists for, where every true
     pair is near-certainly caught per band (certified on a planted
-    homogeneous cluster in tests/test_round11_ops.py). Both samples ride
+    homogeneous cluster in tests/test_dedup.py). Both samples ride
     the standard capped band join (anchor-star heavy buckets); the
     overlap is one pair-keyed equi-join of two SMALL verified-pair
     tables; the oracle recomputes both detectors and the estimate from

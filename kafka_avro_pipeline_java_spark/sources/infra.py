@@ -3,9 +3,9 @@
 Reference flow (``01-infra/src/main/java/Main.java:19-45``):
 DSL json → Avro schemas → dump → Kafka topics (delete-if-exists, create,
 verify) → MySQL database/tables. Here the same steps are plain driver-side
-Python around the schema_dsl translators; Kafka admin operations are gated
-on a client library being importable (none is baked into this container)
-and DDL strings are produced for any JDBC executor to run.
+Python around the schema_dsl translators; Kafka admin operations speak the
+wire protocol (``streaming/kafka_wire.py``, no admin library) and DDL
+strings are produced for any DB-API executor to run.
 """
 
 from __future__ import annotations
@@ -14,6 +14,11 @@ import json
 import time
 from typing import Any
 
+from ..streaming.kafka_wire import (
+    ERR_NONE,
+    ERR_UNKNOWN_TOPIC_OR_PARTITION,
+    KafkaWireClient,
+)
 from .schema_dsl import (
     OFFSETS_TABLE_DDL,
     avro_to_create_table,
@@ -25,7 +30,8 @@ def build_setup_plan(dsl: list[dict[str, Any]] | str, *, database: str = "bank")
     """Everything the reference's infra module produces, as data:
     Avro schemas, topic names, and the full DDL script (database +
     kafka_offsets + one table per schema, reference DataPipeline.java:
-    141-208). Callers feed `ddl` to JDBC and `topics` to the admin client."""
+    141-208). Callers feed `ddl` to a DB connection and `topics` to
+    `recreate_topics`."""
     schemas = dsl_to_avro(dsl)
     ddl = [
         f"DROP DATABASE IF EXISTS {database}",
@@ -41,20 +47,6 @@ def build_setup_plan(dsl: list[dict[str, Any]] | str, *, database: str = "bank")
     }
 
 
-def kafka_admin_available() -> bool:
-    try:
-        import confluent_kafka.admin  # noqa: F401
-
-        return True
-    except ImportError:
-        try:
-            import kafka.admin  # noqa: F401
-
-            return True
-        except ImportError:
-            return False
-
-
 def recreate_topics(
     brokers: str,
     topics: list[str],
@@ -65,57 +57,11 @@ def recreate_topics(
     timeout_s: float = 60.0,
 ) -> None:
     """Delete-if-exists → poll until gone → create → verify (reference
-    DataPipeline.java:80-126, including the 3s existence-poll loop).
-    Uses confluent-kafka when importable; otherwise falls back to the
-    repo's own wire-protocol admin client (CreateTopics/DeleteTopics v0,
-    streaming/kafka_wire.py), so op #4 EXECUTES against any broker that
-    speaks those APIs — no admin library required (VERDICT r05 item 5)."""
-    if not kafka_admin_available():
-        _recreate_topics_wire(
-            brokers, topics, partitions=partitions,
-            replication_factor=replication_factor,
-            poll_interval_s=poll_interval_s, timeout_s=timeout_s,
-        )
-        return
-    from confluent_kafka.admin import AdminClient, NewTopic
-
-    admin = AdminClient({"bootstrap.servers": brokers})
-    existing = set(admin.list_topics(timeout=10).topics)
-    doomed = [t for t in topics if t in existing]
-    if doomed:
-        for f in admin.delete_topics(doomed).values():
-            f.result()
-        deadline = time.time() + timeout_s
-        while time.time() < deadline:
-            if not set(admin.list_topics(timeout=10).topics) & set(doomed):
-                break
-            time.sleep(poll_interval_s)
-    futures = admin.create_topics(
-        [NewTopic(t, num_partitions=partitions, replication_factor=replication_factor)
-         for t in topics]
-    )
-    for f in futures.values():
-        f.result()
-
-
-def _recreate_topics_wire(
-    brokers: str,
-    topics: list[str],
-    *,
-    partitions: int,
-    replication_factor: int,
-    poll_interval_s: float,
-    timeout_s: float,
-) -> None:
-    """The same delete→poll→create→verify protocol order as the admin-lib
-    path, spoken directly on the wire. Same observable sequence the
-    protocol-order test pins for the reference's DataPipeline.java:80-126."""
-    from ..streaming.kafka_wire import (
-        ERR_NONE,
-        ERR_UNKNOWN_TOPIC_OR_PARTITION,
-        KafkaWireClient,
-    )
-
+    DataPipeline.java:80-126, including the 3s existence-poll loop),
+    spoken on the wire with the repo's own admin client (Metadata v0,
+    DeleteTopics v0, CreateTopics v0; streaming/kafka_wire.py), so op #4
+    EXECUTES against any broker that speaks those APIs — no admin library
+    required."""
     with KafkaWireClient(brokers) as c:
         _, existing = c.metadata(None)
         doomed = [t for t in topics if t in existing]
@@ -150,23 +96,12 @@ def partition_count(brokers: str, topic: str, *, timeout: float = 10) -> int:
     """Number of partitions of ``topic`` — the producer-side lookup the
     reference does with ``adminClient.describeTopics(...).partitions()
     .size()`` (AvroProducer.java:63-66) before computing its explicit
-    hashCode-mod-partitions placement (AvroProducer.java:82). Admin
-    metadata is the only broker round-trip. Uses confluent-kafka when
-    importable, else the repo's wire-protocol Metadata request — so the
-    lookup EXECUTES against any broker without an admin library."""
-    if not kafka_admin_available():
-        from ..streaming.kafka_wire import KafkaWireClient
-
-        with KafkaWireClient(brokers, timeout_s=timeout) as c:
-            _, topic_map = c.metadata([topic])  # raises KeyError if absent
-            return len(topic_map[topic])
-    from confluent_kafka.admin import AdminClient
-
-    admin = AdminClient({"bootstrap.servers": brokers})
-    meta = admin.list_topics(timeout=timeout)
-    if topic not in meta.topics:
-        raise KeyError(f"topic {topic!r} does not exist")
-    return len(meta.topics[topic].partitions)
+    hashCode-mod-partitions placement (AvroProducer.java:82), here one
+    wire-protocol Metadata round-trip. Raises ``KeyError`` when the
+    topic does not exist."""
+    with KafkaWireClient(brokers, timeout_s=timeout) as c:
+        _, topic_map = c.metadata([topic])  # raises KeyError if absent
+        return len(topic_map[topic])
 
 
 def register_schemas(registry_url: str, schemas: list[dict], *, timeout: int = 10) -> dict[str, int]:

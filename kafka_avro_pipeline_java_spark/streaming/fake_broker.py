@@ -9,11 +9,12 @@ broker and consumes protocol frames exactly as it would against a real
 deployment (VERDICT r04 item 6 — ops #15-17 executed, not just
 option-contract-tested).
 
-Round-6 additions (VERDICT r05 items 4/5/7):
+What it serves:
 
-- BOTH record encodings: Fetch v4 responses carry magic-2 record batches
-  (what a modern broker natively serves); Fetch v2 still gets magic-1
-  message sets. Produce accepts either magic via format-sniffing decode.
+- One version per API, the ones it advertises in ApiVersions (Produce v3
+  and Fetch v4 carry magic-2 record batches, what a modern broker
+  natively stores and serves); a request at any other version is
+  refused, as a real broker refuses a version it does not support.
 - CreateTopics/DeleteTopics v0, so the reference's delete→poll→create
   topic-DDL (DataPipeline.java:80-126) executes over the wire without
   an admin library.
@@ -53,21 +54,16 @@ from .kafka_wire import (
     ERR_UNKNOWN_TOPIC_OR_PARTITION,
     LATEST,
     SUPPORTED_APIS,
+    _VERSION,
     ByteReader,
     ByteWriter,
-    decode_records,
-    encode_message_set,
+    decode_record_batches,
     encode_record_batch,
     encode_record_body,
     encode_varint,
     read_frame,
 )
 
-# magic-1 per-message wire overhead: 12B log entry (offset+size) + 22B
-# message header (crc 4 + magic 1 + attributes 1 + timestamp 8 + key-len 4
-# + value-len 4). The previous 26B estimate let record sets overrun
-# max_bytes (ADVICE r05).
-_V1_OVERHEAD = 34
 # magic-2 batch header: baseOffset..recordCount fixed-width fields.
 _V2_BATCH_HEADER = 61
 
@@ -185,11 +181,14 @@ class FakeKafkaBroker:
         }
         if api_key not in handlers:
             raise ValueError(f"unsupported api_key {api_key}")
-        body = handlers[api_key](req, api_version, node_id)
+        if api_version != _VERSION[api_key]:
+            raise ValueError(
+                f"unsupported version {api_version} of api_key {api_key}")
+        body = handlers[api_key](req, node_id)
         payload = ByteWriter().int32(corr).raw(body).build()
         return struct.pack(">i", len(payload)) + payload
 
-    def _api_versions(self, req: ByteReader, version: int, node: int) -> bytes:
+    def _api_versions(self, req: ByteReader, node: int) -> bytes:
         return (
             ByteWriter()
             .int16(ERR_NONE)
@@ -200,7 +199,7 @@ class FakeKafkaBroker:
             .build()
         )
 
-    def _metadata(self, req: ByteReader, version: int, node: int) -> bytes:
+    def _metadata(self, req: ByteReader, node: int) -> bytes:
         asked = req.array(lambda b: b.string())
         with self._lock:
             names = sorted(self._topics) if not asked else asked
@@ -232,7 +231,7 @@ class FakeKafkaBroker:
         w.array(names, _topic)
         return w.build()
 
-    def _list_offsets(self, req: ByteReader, version: int, node: int) -> bytes:
+    def _list_offsets(self, req: ByteReader, node: int) -> bytes:
         req.int32()  # replica_id
         topics = req.array(
             lambda b: (
@@ -269,36 +268,29 @@ class FakeKafkaBroker:
         return w.build()
 
     def _cut_at_max_bytes(self, log: list[tuple[bytes, bytes, int]],
-                          offset: int, max_bytes: int,
-                          magic: int) -> list[tuple[bytes, bytes, int]]:
-        """Greedy prefix of log[offset:] whose ENCODED size honors
-        max_bytes exactly (ADVICE r05: the old 26-byte estimate under-
-        counted magic-1 overhead and could overrun). At least one record
-        is always returned when any exists, matching broker behavior of
-        never starving a consumer whose max_bytes is smaller than one
-        message."""
+                          offset: int, max_bytes: int
+                          ) -> list[tuple[bytes, bytes, int]]:
+        """Greedy prefix of log[offset:] whose ENCODED record batch honors
+        max_bytes exactly. At least one record is always returned when
+        any exists, matching broker behavior of never starving a consumer
+        whose max_bytes is smaller than one message."""
         batch: list[tuple[bytes, bytes, int]] = []
-        size = _V2_BATCH_HEADER if magic == 2 else 0
-        base_ts = log[offset][2] if magic == 2 and offset < len(log) else 0
+        size = _V2_BATCH_HEADER
+        base_ts = log[offset][2] if offset < len(log) else 0
         for i, (k, v, ts) in enumerate(log[offset:]):
-            if magic == 2:
-                body = encode_record_body(k, v, ts - base_ts, i)
-                size += len(encode_varint(len(body))) + len(body)
-            else:
-                size += _V1_OVERHEAD + len(k or b"") + len(v or b"")
+            body = encode_record_body(k, v, ts - base_ts, i)
+            size += len(encode_varint(len(body))) + len(body)
             if batch and size > max_bytes:
                 break
             batch.append((k, v, ts))
         return batch
 
-    def _fetch(self, req: ByteReader, version: int, node: int) -> bytes:
+    def _fetch(self, req: ByteReader, node: int) -> bytes:
         req.int32()  # replica_id
         req.int32()  # max_wait_ms
         req.int32()  # min_bytes
-        if version >= 3:
-            req.int32()  # request-level max_bytes
-        if version >= 4:
-            req.int8()  # isolation_level
+        req.int32()  # request-level max_bytes
+        req.int8()  # isolation_level
         topics = req.array(
             lambda b: (
                 b.string(),
@@ -306,12 +298,11 @@ class FakeKafkaBroker:
             )
         )
         w = ByteWriter().int32(0)  # throttle_time_ms
-        magic = 2 if version >= 4 else 1
 
-        def _v4_extras(wp: ByteWriter, hw: int) -> None:
-            if version >= 4:
-                wp.int64(hw)  # last_stable_offset (no txns)
-                wp.array([], lambda *_: None)  # aborted_transactions
+        def _head(wp: ByteWriter, pid: int, err: int, hw: int) -> None:
+            wp.int32(pid).int16(err).int64(hw)
+            wp.int64(hw)  # last_stable_offset (no txns)
+            wp.array([], lambda *_: None)  # aborted_transactions
 
         def _topic(wr: ByteWriter, t) -> None:
             name, parts = t
@@ -321,15 +312,11 @@ class FakeKafkaBroker:
                 pid, offset, max_bytes = pq
                 key = (name, pid)
                 if key not in self._log:
-                    wp.int32(pid).int16(ERR_UNKNOWN_TOPIC_OR_PARTITION)
-                    wp.int64(-1)
-                    _v4_extras(wp, -1)
+                    _head(wp, pid, ERR_UNKNOWN_TOPIC_OR_PARTITION, -1)
                     wp.bytes_(b"")
                     return
                 if self._leader(pid) != node:
-                    wp.int32(pid).int16(ERR_NOT_LEADER_FOR_PARTITION)
-                    wp.int64(-1)
-                    _v4_extras(wp, -1)
+                    _head(wp, pid, ERR_NOT_LEADER_FOR_PARTITION, -1)
                     wp.bytes_(b"")
                     return
                 self.served[node].append((API_FETCH, name, pid))
@@ -337,37 +324,28 @@ class FakeKafkaBroker:
                     log = list(self._log[key])
                 hw = len(log)
                 if offset < 0 or offset > hw:
-                    wp.int32(pid).int16(ERR_OFFSET_OUT_OF_RANGE)
-                    wp.int64(hw)
-                    _v4_extras(wp, hw)
+                    _head(wp, pid, ERR_OFFSET_OUT_OF_RANGE, hw)
                     wp.bytes_(b"")
                     return
-                batch = self._cut_at_max_bytes(log, offset, max_bytes, magic)
-                if magic == 2:
-                    record_set = (
-                        encode_record_batch(
-                            batch, base_offset=offset,
-                            codec=self._fetch_codec,
-                        )
-                        if batch else b""
+                batch = self._cut_at_max_bytes(log, offset, max_bytes)
+                record_set = (
+                    encode_record_batch(
+                        batch, base_offset=offset, codec=self._fetch_codec,
                     )
-                    # compression changes the wire size after the cut
-                    # (usually smaller; pathologically a few bytes larger),
-                    # so re-check against max_bytes on the ENCODED bytes
-                    # and shed records until it fits — always keeping one,
-                    # matching the never-starve contract of the cut.
-                    while (self._fetch_codec != "none" and batch
-                           and len(batch) > 1
-                           and len(record_set) > max_bytes):
-                        batch = batch[:-1]
-                        record_set = encode_record_batch(
-                            batch, base_offset=offset,
-                            codec=self._fetch_codec,
-                        )
-                else:
-                    record_set = encode_message_set(batch, base_offset=offset)
-                wp.int32(pid).int16(ERR_NONE).int64(hw)
-                _v4_extras(wp, hw)
+                    if batch else b""
+                )
+                # compression changes the wire size after the cut
+                # (usually smaller; pathologically a few bytes larger),
+                # so re-check against max_bytes on the ENCODED bytes
+                # and shed records until it fits — always keeping one,
+                # matching the never-starve contract of the cut.
+                while (self._fetch_codec != "none" and len(batch) > 1
+                       and len(record_set) > max_bytes):
+                    batch = batch[:-1]
+                    record_set = encode_record_batch(
+                        batch, base_offset=offset, codec=self._fetch_codec,
+                    )
+                _head(wp, pid, ERR_NONE, hw)
                 wp.bytes_(record_set)
 
             wr.array(parts, _part)
@@ -375,9 +353,8 @@ class FakeKafkaBroker:
         w.array(topics, _topic)
         return w.build()
 
-    def _produce(self, req: ByteReader, version: int, node: int) -> bytes:
-        if version >= 3:
-            req.string()  # transactional_id
+    def _produce(self, req: ByteReader, node: int) -> bytes:
+        req.string()  # transactional_id
         req.int16()  # acks
         req.int32()  # timeout_ms
         topics = req.array(
@@ -404,9 +381,7 @@ class FakeKafkaBroker:
                     wp.int64(-1).int64(-1)
                     return
                 self.served[node].append((API_PRODUCE, name, pid))
-                # format-sniffing decode: accepts magic-1 message sets
-                # AND magic-2 record batches (no up-conversion needed)
-                records = decode_records(record_set or b"")
+                records = decode_record_batches(record_set or b"")
                 base = self.append(
                     name, pid, [(r.key, r.value, r.timestamp) for r in records]
                 )
@@ -418,7 +393,7 @@ class FakeKafkaBroker:
         w.int32(0)  # throttle_time_ms
         return w.build()
 
-    def _create_topics(self, req: ByteReader, version: int, node: int) -> bytes:
+    def _create_topics(self, req: ByteReader, node: int) -> bytes:
         def _topic(b: ByteReader):
             name = b.string()
             num_partitions = b.int32()
@@ -445,7 +420,7 @@ class FakeKafkaBroker:
             results, lambda w, r: w.string(r[0]).int16(r[1])
         ).build()
 
-    def _delete_topics(self, req: ByteReader, version: int, node: int) -> bytes:
+    def _delete_topics(self, req: ByteReader, node: int) -> bytes:
         topics = req.array(lambda b: b.string())
         req.int32()  # timeout_ms
         results: list[tuple[str, int]] = []

@@ -19,8 +19,9 @@ Maps the reference's hand-rolled consumer/producer topology onto Spark
   leader-routed Produce per Kafka partition from each Spark partition.
 
 ``kafka_source_options`` keeps the option contract of Spark's own Kafka
-source for a deployment that has the jar. The wire client is
-``kafka_wire.py``; tests run against the in-process broker
+source for a deployment that has the jar. Everything else goes through
+one wire client, ``kafka_wire.py`` (Produce v3 / Fetch v4, magic-2
+record batches); tests run it against the in-process broker
 (tests/test_kafka_wire.py).
 """
 
@@ -135,9 +136,10 @@ def write_kafka_batch_py(
     df: DataFrame, brokers: str, topic: str, *, timestamp_ms: int = 0
 ) -> None:
     """(key, value[, partition]) binary DataFrame → Kafka topic through the
-    pure-Python wire protocol (Produce v2), executed ON THE EXECUTORS: each
-    Spark partition opens one socket and sends one Produce request per
-    Kafka partition it holds rows for, so the send path fans out with the
+    pure-Python wire protocol (Produce v3, one magic-2 record batch per
+    request), executed ON THE EXECUTORS: each Spark partition opens one
+    leader-routed client and sends one Produce request per Kafka
+    partition it holds rows for, so the send path fans out with the
     cluster exactly like the JVM producer pool (reference 02-producer
     Main.java:45-49).
     Pass the ``partition`` column from ``prepare_kafka_batch(...,

@@ -6,15 +6,14 @@ The reference talks to Kafka through the Java client jars
 has neither the spark-sql-kafka jar nor a broker, so the executed-read
 story is built from the protocol itself: the Apache Kafka wire format is
 a public, versioned binary protocol (kafka.apache.org/protocol), and the
-subset below — Metadata v0, ListOffsets v1, Fetch v2/v4, Produce v2/v3,
-ApiVersions v0, CreateTopics v0, DeleteTopics v0, and BOTH on-disk record
-encodings (message format v1 / magic 1 with CRC32, and record batches /
-magic 2 with zigzag-varint deltas and CRC32C — the format every 0.11+
-broker natively writes) — is enough for a correct bounded consumer,
-producer, and topic-DDL admin. The client negotiates versions from the
-broker's ApiVersions response: against a modern broker it speaks
-Produce v3 / Fetch v4 with magic-2 batches; against the minimal v2 APIs
-it falls back to magic-1 message sets. Magic-2 batches may be compressed:
+subset below — Metadata v0, ListOffsets v1, Fetch v4, Produce v3,
+ApiVersions v0, CreateTopics v0, DeleteTopics v0, and record batches
+(magic 2, zigzag-varint deltas, CRC32C — the format every 0.11+ broker
+natively writes, the reference's cp-kafka 7.0.0 brokers included) — is
+enough for a correct bounded consumer, producer, and topic-DDL admin.
+Each API is spoken at one version; the client checks the broker's
+ApiVersions response once per connection and refuses a broker that does
+not offer it. Batches may be compressed:
 gzip is implemented with the stdlib both ways (attribute bits, CRC over
 the compressed wire bytes), snappy/lz4/zstd are recognized and raise a
 named ``KafkaCodecError`` unless their third-party package is present. The codec is shared by the client
@@ -43,7 +42,6 @@ from __future__ import annotations
 import functools
 import socket
 import struct
-import zlib
 from dataclasses import dataclass
 
 API_PRODUCE = 0
@@ -65,18 +63,18 @@ EARLIEST = -2
 LATEST = -1
 
 # (api_key, min_version, max_version) advertised by the fake broker and
-# the negotiation ceiling of the client. Produce v3 / Fetch v4 are the
-# first versions that carry magic-2 record batches; the mins stay at the
-# magic-1 versions so the downgrade path remains testable.
+# spoken by the client: one version per API. Produce v3 / Fetch v4 are
+# the first versions that carry magic-2 record batches.
 SUPPORTED_APIS = [
-    (API_PRODUCE, 2, 3),
-    (API_FETCH, 2, 4),
+    (API_PRODUCE, 3, 3),
+    (API_FETCH, 4, 4),
     (API_LIST_OFFSETS, 1, 1),
     (API_METADATA, 0, 0),
     (API_VERSIONS, 0, 0),
     (API_CREATE_TOPICS, 0, 0),
     (API_DELETE_TOPICS, 0, 0),
 ]
+_VERSION = {k: hi for k, _, hi in SUPPORTED_APIS}
 
 
 class ByteWriter:
@@ -184,12 +182,6 @@ class ByteReader:
         return self.buf[self.pos:]
 
 
-# ---------------------------------------------------------------------------
-# message format v1 (magic 1): the record encoding inside Fetch/Produce
-# record sets. CRC32 covers magic..value, exactly per the spec.
-# ---------------------------------------------------------------------------
-
-
 @dataclass
 class WireRecord:
     offset: int
@@ -211,53 +203,6 @@ class KafkaProtocolError(RuntimeError):
     def __init__(self, message: str, code: int) -> None:
         super().__init__(message)
         self.code = code
-
-
-def encode_message_set(records: list[tuple[bytes | None, bytes | None, int]],
-                       base_offset: int = 0) -> bytes:
-    """[(key, value, timestamp_ms)] → a magic-1 MessageSet."""
-    w = ByteWriter()
-    for i, (key, value, ts) in enumerate(records):
-        body = (
-            ByteWriter()
-            .int8(1)           # magic
-            .int8(0)           # attributes: no compression
-            .int64(ts)
-            .bytes_(key)
-            .bytes_(value)
-            .build()
-        )
-        msg = ByteWriter().uint32(zlib.crc32(body) & 0xFFFFFFFF).raw(body).build()
-        w.int64(base_offset + i).int32(len(msg)).raw(msg)
-    return w.build()
-
-
-def decode_message_set(buf: bytes) -> list[WireRecord]:
-    """MessageSet bytes → records, verifying each CRC. A trailing partial
-    message (the broker may cut a set at max_bytes) is silently dropped,
-    per the consumer contract."""
-    out: list[WireRecord] = []
-    r = ByteReader(buf)
-    while len(buf) - r.pos >= 12:
-        offset = r.int64()
-        size = r.int32()
-        if len(buf) - r.pos < size:
-            break  # partial trailing message
-        msg = ByteReader(r._take(size))
-        crc = msg.uint32()
-        body_start = msg.pos
-        magic = msg.int8()
-        if magic != 1:
-            raise ValueError(f"unsupported message magic {magic}")
-        msg.int8()  # attributes
-        ts = msg.int64()
-        key = msg.bytes_()
-        value = msg.bytes_()
-        actual = zlib.crc32(msg.buf[body_start: msg.pos]) & 0xFFFFFFFF
-        if actual != crc:
-            raise ValueError(f"CRC mismatch at offset {offset}")
-        out.append(WireRecord(offset, ts, key, value))
-    return out
 
 
 # ---------------------------------------------------------------------------
@@ -615,16 +560,6 @@ def decode_record_batches(buf: bytes) -> list[WireRecord]:
     return out
 
 
-def decode_records(buf: bytes) -> list[WireRecord]:
-    """Format-sniffing decode: both encodings keep the magic byte at
-    position 16 of the first entry (8B offset + 4B length + 4B crc for
-    magic ≤1 / 4B leaderEpoch for magic 2), so one byte dispatches
-    between message sets and record batches."""
-    if len(buf) >= 17 and buf[16] == 2:
-        return decode_record_batches(buf)
-    return decode_message_set(buf)
-
-
 # ---------------------------------------------------------------------------
 # request/response framing
 # ---------------------------------------------------------------------------
@@ -681,21 +616,20 @@ class KafkaWireClient:
         self._versions: dict[int, tuple[int, int]] | None = None
 
     def _version_for(self, api_key: int) -> int:
-        """Highest mutually supported version for ``api_key`` — one
-        ApiVersions round-trip, cached for the connection's lifetime
-        (the negotiation every Java client performs on connect)."""
+        """The one version this client speaks for ``api_key``, checked
+        against the broker's ApiVersions range — one round-trip, cached
+        for the connection's lifetime (the check every Java client makes
+        on connect). A broker that does not offer it is refused."""
         if self._versions is None:
             self._versions = self.api_versions()
-        ours = {k: (lo, hi) for k, lo, hi in SUPPORTED_APIS}
-        my_lo, my_hi = ours[api_key]
         if api_key not in self._versions:
             raise RuntimeError(f"broker does not support api_key {api_key}")
+        v = _VERSION[api_key]
         br_lo, br_hi = self._versions[api_key]
-        v = min(my_hi, br_hi)
-        if v < max(my_lo, br_lo):
+        if not br_lo <= v <= br_hi:
             raise RuntimeError(
                 f"no common version for api_key {api_key}: "
-                f"client [{my_lo},{my_hi}] broker [{br_lo},{br_hi}]"
+                f"client [{v},{v}] broker [{br_lo},{br_hi}]"
             )
         return v
 
@@ -801,17 +735,16 @@ class KafkaWireClient:
         """One poll: → (high_watermark, records from ``offset``). An empty
         record list with high_watermark == offset means caught-up — the
         loop condition of the reference's AvroConsumer.java:116-138.
-        Sends Fetch v4 when the broker offers it (record batches /
-        magic 2 on the wire), else Fetch v2 (message sets / magic 1);
-        decode_records sniffs the format either way."""
+        Sends Fetch v4; the response carries magic-2 record batches."""
         v = self._version_for(API_FETCH)
-        w = ByteWriter().int32(-1).int32(max_wait_ms).int32(min_bytes)
-        if v >= 3:
-            w.int32(max_bytes)  # request-level max_bytes (v3+)
-        if v >= 4:
-            w.int8(0)  # isolation_level: READ_UNCOMMITTED
         body = (
-            w.array(
+            ByteWriter()
+            .int32(-1)  # replica_id: ordinary consumer
+            .int32(max_wait_ms)
+            .int32(min_bytes)
+            .int32(max_bytes)  # request-level max_bytes
+            .int8(0)  # isolation_level: READ_UNCOMMITTED
+            .array(
                 [(topic, [(partition, offset, max_bytes)])],
                 lambda w_, t: w_.string(t[0]).array(
                     t[1],
@@ -825,9 +758,8 @@ class KafkaWireClient:
 
         def _part(b: ByteReader):
             pid, err, hw = b.int32(), b.int16(), b.int64()
-            if v >= 4:
-                b.int64()  # last_stable_offset
-                b.array(lambda a: (a.int64(), a.int64()))  # aborted txns
+            b.int64()  # last_stable_offset
+            b.array(lambda a: (a.int64(), a.int64()))  # aborted txns
             record_set = b.bytes_() or b""
             return pid, err, hw, record_set
 
@@ -837,7 +769,7 @@ class KafkaWireClient:
         if err != ERR_NONE:
             raise KafkaProtocolError(
                 f"Fetch {topic}[{pid}] at {offset}: error {err}", err)
-        records = [rec for rec in decode_records(record_set)
+        records = [rec for rec in decode_record_batches(record_set)
                    if rec.offset >= offset]
         return hw, records
 
@@ -846,28 +778,15 @@ class KafkaWireClient:
                 *, acks: int = -1, timeout_ms: int = 10_000,
                 compression: str = "none") -> int:
         """Append [(key, value, timestamp_ms)] → base offset assigned.
-        Sends Produce v3 with a magic-2 record batch when the broker
-        offers it (what a 0.11+/3.x broker natively stores, no
-        up-conversion), else Produce v2 with a magic-1 message set.
-        ``compression`` applies to the magic-2 path only (v1 compression
-        wraps messages in an envelope message — a different mechanism this
-        stack doesn't speak), so requesting it against a magic-1-only
-        broker raises instead of silently sending uncompressed."""
+        Sends Produce v3 with one magic-2 record batch, what a 0.11+/3.x
+        broker natively stores (no up-conversion); ``compression`` names
+        the batch codec."""
         v = self._version_for(API_PRODUCE)
-        if v >= 3:
-            record_set = encode_record_batch(records, codec=compression)
-        elif compression != "none":
-            raise KafkaCodecError(
-                "compression requires the record-batch (Produce v3+) path; "
-                "broker only offers magic-1 message sets"
-            )
-        else:
-            record_set = encode_message_set(records)
-        w = ByteWriter()
-        if v >= 3:
-            w.string(None)  # transactional_id: non-transactional
+        record_set = encode_record_batch(records, codec=compression)
         body = (
-            w.int16(acks)
+            ByteWriter()
+            .string(None)  # transactional_id: non-transactional
+            .int16(acks)
             .int32(timeout_ms)
             .array(
                 [(topic, [(partition, record_set)])],

@@ -1,4 +1,4 @@
-"""Exactly-once sinks for ``foreachBatch``.
+"""Exactly-once sink for ``foreachBatch``.
 
 The reference achieves exactly-once into MySQL with a per-record JDBC
 transaction that writes the row AND upserts its offset into a
@@ -10,17 +10,12 @@ source offsets per batch, and the sink below makes the write idempotent on
 ``batch_id``, so replays after a crash cannot double-apply
 (SURVEY.md §7.3 item 2 documents the granularity difference).
 
-Two sinks, one contract:
-
-- ``ExactlyOnceDbSink`` — one DB transaction **per partition per batch**:
-  rows + a ``(sink_table, batch_id, partition_id)`` ledger row commit
-  together; a replayed partition sees its ledger row and skips. Takes a
-  DB-API connection factory, so it works with any driver (MySQL at parity,
-  sqlite in tests) without Spark-side changes; executes on executors via
-  ``foreachPartition`` — no data moves through the driver.
-- ``exactly_once_parquet_sink`` — files variant: batch output written to a
-  staging dir, atomically renamed to ``batch_id=N/``; replay sees the
-  final dir and skips.
+``ExactlyOnceDbSink`` runs one DB transaction **per partition per
+batch**: rows + a ``(sink_table, batch_id, partition_id)`` ledger row
+commit together; a replayed partition sees its ledger row and skips. It
+takes a DB-API connection factory, so it works with any driver (MySQL at
+parity, sqlite in tests) without Spark-side changes, and executes on
+executors via ``foreachPartition`` — no data moves through the driver.
 
 Offsets mirroring (the reference's ``kafka_offsets`` table):
 ``ExactlyOnceDbSink(offsets_cols=..., consumer_group=...)`` upserts each
@@ -31,8 +26,6 @@ the same transaction as the rows; the table's DDL is
 
 from __future__ import annotations
 
-import os
-import shutil
 from collections.abc import Callable, Iterator
 from typing import Any
 
@@ -203,22 +196,3 @@ def offsets_mirror_sql() -> str:
         "consumer_group VARCHAR(50), offset BIGINT, "
         "PRIMARY KEY (topic, partition, consumer_group))"
     )
-
-
-# --------------------------------------------------------------------------
-# Parquet sink (atomic-rename idempotence; no external DB needed)
-# --------------------------------------------------------------------------
-def exactly_once_parquet_sink(base_path: str) -> Callable[[DataFrame, int], None]:
-    """Batch output lands in ``base_path/batch_id=N/`` via staging dir +
-    atomic rename; a replayed batch sees the final dir and skips."""
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        final = os.path.join(base_path, f"batch_id={batch_id}")
-        if os.path.exists(final):
-            return  # replay — already committed
-        staging = os.path.join(base_path, f"_staging_batch_{batch_id}")
-        shutil.rmtree(staging, ignore_errors=True)
-        batch_df.write.mode("overwrite").parquet(staging)
-        os.rename(staging, final)
-
-    return sink

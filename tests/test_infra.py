@@ -1,9 +1,6 @@
 """Infra setup-plan tests (reference 01-infra flow, driver-side)."""
 
-from kafka_avro_pipeline_java_spark.sources.infra import (
-    build_setup_plan,
-    kafka_admin_available,
-)
+from kafka_avro_pipeline_java_spark.sources.infra import build_setup_plan
 
 DSL = [
     {"name": "dataset1", "fields": {"key_field1": "string", "timestamp_field1": "long",
@@ -26,7 +23,3 @@ def test_setup_plan_shape():
     assert plan["ddl"][4].startswith("CREATE TABLE dataset1 (")
     assert "integer_field2 INT" in plan["ddl"][5]
     assert "long_field3 BIGINT" in plan["ddl"][6]
-
-
-def test_admin_probe_safe():
-    assert kafka_admin_available() in (True, False)

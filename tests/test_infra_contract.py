@@ -1,157 +1,91 @@
-"""Contract tests for the broker-gated admin paths, run against an
-embedded fake admin client — verifies the reference's orchestration
-protocol (delete-if-exists → poll-until-gone → create → verify futures;
-reference 01-infra DataPipeline.java:80-126) without a live broker, and
-the Schema Registry REST registration against a fake HTTP endpoint.
+"""Contract tests for the topic-admin path — the reference's
+orchestration protocol (delete-if-exists → poll-until-gone → create →
+verify; reference 01-infra DataPipeline.java:80-126) spoken on the wire
+to the in-process broker — plus the Kafka source option contract and the
+Schema Registry REST registration against a fake HTTP endpoint.
 """
 
 from __future__ import annotations
 
 import json
-import sys
-import types
 
 import pytest
 
 from kafka_avro_pipeline_java_spark.sources import infra
+from kafka_avro_pipeline_java_spark.streaming.fake_broker import FakeKafkaBroker
+from kafka_avro_pipeline_java_spark.streaming.kafka_wire import KafkaWireClient
 
 
-class _FakeFuture:
-    def __init__(self, log, tag):
-        self.log, self.tag = log, tag
-        self.resolved = False
+class _RecordingClient(KafkaWireClient):
+    """KafkaWireClient that logs each admin call in order. A deleted
+    topic stays listed for one more Metadata poll, as on a cluster where
+    deletion propagates asynchronously, so the poll-until-gone loop must
+    actually loop."""
 
-    def result(self):
-        self.resolved = True
-        self.log.append(("future_resolved", self.tag))
+    log: list = []
 
+    def __init__(self, *args, **kw):
+        super().__init__(*args, **kw)
+        self._lagging: list[str] = []
 
-class _FakeTopicMetadata:
-    def __init__(self, n_partitions):
-        # confluent_kafka TopicMetadata.partitions: {id: PartitionMetadata}
-        self.partitions = {i: object() for i in range(n_partitions)}
+    def metadata(self, topics=None):
+        brokers, now = super().metadata(topics)
+        now = {**now, **{t: [0] for t in self._lagging}}
+        self._lagging = []
+        self.log.append(("metadata", frozenset(now)))
+        return brokers, now
 
-
-class _FakeMetadata:
-    def __init__(self, topics, n_partitions=3):
-        self.topics = {t: _FakeTopicMetadata(n_partitions) for t in topics}
-
-
-class _FakeAdminClient:
-    """Mimics confluent_kafka.admin.AdminClient: topics exist until one
-    poll AFTER the delete call (so the poll-until-gone loop must actually
-    loop), then creation makes them visible again."""
-
-    instances: list["_FakeAdminClient"] = []
-
-    def __init__(self, conf):
-        self.conf = conf
-        self.log = []
-        self.topics = {"orders_avro", "unrelated_topic"}
-        self._deleting = set()
-        _FakeAdminClient.instances.append(self)
-
-    def list_topics(self, timeout=None):
-        self.log.append(("list_topics", frozenset(self.topics)))
-        if self._deleting:  # deletion completes one poll later
-            self.topics -= self._deleting
-            self._deleting = set()
-        return _FakeMetadata(self.topics)
-
-    def delete_topics(self, topics):
+    def delete_topics(self, topics, **kw):
         self.log.append(("delete_topics", tuple(topics)))
-        self._deleting = set(topics)
-        return {t: _FakeFuture(self.log, f"delete:{t}") for t in topics}
+        self._lagging = list(topics)
+        return super().delete_topics(topics, **kw)
 
-    def create_topics(self, new_topics):
-        names = [nt.topic for nt in new_topics]
+    def create_topics(self, topics, *, replication_factor=1, **kw):
         self.log.append(
             ("create_topics",
-             tuple((nt.topic, nt.num_partitions, nt.replication_factor)
-                   for nt in new_topics))
+             tuple((t, n, replication_factor) for t, n in topics.items()))
         )
-        self.topics |= set(names)
-        return {t: _FakeFuture(self.log, f"create:{t}") for t in names}
+        return super().create_topics(
+            topics, replication_factor=replication_factor, **kw)
 
 
-class _FakeNewTopic:
-    def __init__(self, topic, num_partitions, replication_factor):
-        self.topic = topic
-        self.num_partitions = num_partitions
-        self.replication_factor = replication_factor
-
-
-@pytest.fixture()
-def fake_admin(monkeypatch):
-    """Install a fake confluent_kafka.admin module; uninstall afterwards."""
-    _FakeAdminClient.instances = []
-    mod_root = types.ModuleType("confluent_kafka")
-    mod_admin = types.ModuleType("confluent_kafka.admin")
-    mod_admin.AdminClient = _FakeAdminClient
-    mod_admin.NewTopic = _FakeNewTopic
-    mod_root.admin = mod_admin
-    monkeypatch.setitem(sys.modules, "confluent_kafka", mod_root)
-    monkeypatch.setitem(sys.modules, "confluent_kafka.admin", mod_admin)
-    return _FakeAdminClient
-
-
-def test_recreate_topics_protocol(fake_admin):
+def test_recreate_topics_protocol(monkeypatch):
     """Existing topic is deleted, polled until gone, then both topics are
-    created with the requested partition/replication settings and every
-    future is awaited — the reference's exact sequencing."""
-    infra.recreate_topics(
-        "broker:9092",
-        ["orders_avro", "customers_avro"],
-        partitions=3,
-        replication_factor=3,
-        poll_interval_s=0.001,
-        timeout_s=1.0,
-    )
-    client = fake_admin.instances[-1]
-    ops = [op for op, _ in client.log]
+    created with the requested partition/replication settings and their
+    existence verified — the reference's exact sequencing."""
+    monkeypatch.setattr(_RecordingClient, "log", [])
+    monkeypatch.setattr(infra, "KafkaWireClient", _RecordingClient)
+    with FakeKafkaBroker({"orders_avro": 1, "unrelated_topic": 1}) as b:
+        infra.recreate_topics(
+            b.bootstrap,
+            ["orders_avro", "customers_avro"],
+            partitions=3,
+            replication_factor=3,
+            poll_interval_s=0.001,
+            timeout_s=1.0,
+        )
+        with KafkaWireClient(b.bootstrap) as c:
+            _, topics = c.metadata(None)
+    log = _RecordingClient.log
+    ops = [op for op, _ in log]
 
     # only the EXISTING topic is deleted (customers_avro isn't)
-    deletes = [args for op, args in client.log if op == "delete_topics"]
+    deletes = [args for op, args in log if op == "delete_topics"]
     assert deletes == [("orders_avro",)]
-    # delete happens before create; at least one poll in between
-    assert ops.index("delete_topics") < ops.index("create_topics")
-    polls_between = ops[ops.index("delete_topics"): ops.index("create_topics")].count("list_topics")
-    assert polls_between >= 1
+    # delete happens before create; polls in between until it is gone
+    i_del, i_create = ops.index("delete_topics"), ops.index("create_topics")
+    polls = [seen for op, seen in log[i_del:i_create] if op == "metadata"]
+    assert len(polls) >= 2
+    assert "orders_avro" in polls[0] and "orders_avro" not in polls[-1]
     # both topics created with the requested settings
-    creates = [args for op, args in client.log if op == "create_topics"][0]
-    assert sorted(creates) == [("customers_avro", 3, 3), ("orders_avro", 3, 3)]
-    # every future (delete + create) was awaited
-    resolved = {tag for op, tag in client.log if op == "future_resolved"}
-    assert resolved == {"delete:orders_avro", "create:orders_avro",
-                        "create:customers_avro"}
-
-
-def test_recreate_topics_no_admin_client_uses_wire_fallback(monkeypatch):
-    """Round-6 contract change (VERDICT r05 item 5): with no admin
-    library, recreate_topics no longer raises — it routes through the
-    wire-protocol CreateTopics/DeleteTopics fallback with every argument
-    intact (the executed path is tested over real TCP in
-    test_kafka_wire_v2.py::test_recreate_topics_wire_end_to_end)."""
-    monkeypatch.setattr(infra, "kafka_admin_available", lambda: False)
-    calls = []
-    monkeypatch.setattr(
-        infra, "_recreate_topics_wire",
-        lambda brokers, topics, **kw: calls.append((brokers, topics, kw)),
-    )
-    infra.recreate_topics("broker:9092", ["t"], partitions=2)
-    assert calls == [(
-        "broker:9092", ["t"],
-        {"partitions": 2, "replication_factor": 3,
-         "poll_interval_s": 3.0, "timeout_s": 60.0},
-    )]
-
-
-def test_partition_count_lookup(fake_admin):
-    """Op #10: producer-side partitionsFor(topic).size() parity
-    (AvroProducer.java:82) via admin metadata — 3 partitions on the fake."""
-    assert infra.partition_count("broker:9092", "orders_avro") == 3
-    with pytest.raises(KeyError, match="no_such_topic"):
-        infra.partition_count("broker:9092", "no_such_topic")
+    creates = [args for op, args in log if op == "create_topics"]
+    assert len(creates) == 1
+    assert sorted(creates[0]) == [("customers_avro", 3, 3), ("orders_avro", 3, 3)]
+    # verified after create: one more Metadata round-trip sees both
+    assert ops[i_create + 1:] == ["metadata"]
+    assert {"orders_avro", "customers_avro"} <= log[-1][1]
+    assert topics["orders_avro"] == topics["customers_avro"] == [0, 1, 2]
+    assert topics["unrelated_topic"] == [0]
 
 
 def test_kafka_source_subscribe_contract():

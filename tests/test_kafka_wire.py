@@ -14,8 +14,6 @@ from kafka_avro_pipeline_java_spark.streaming.kafka_wire import (
     EARLIEST,
     LATEST,
     KafkaWireClient,
-    decode_message_set,
-    encode_message_set,
 )
 
 
@@ -23,26 +21,6 @@ from kafka_avro_pipeline_java_spark.streaming.kafka_wire import (
 def broker():
     with FakeKafkaBroker({"orders_avro": 3}) as b:
         yield b
-
-
-# ---------------------------------------------------------------------------
-# codec
-# ---------------------------------------------------------------------------
-
-
-def test_message_set_round_trip_and_crc():
-    recs = [(b"k1", b"v1", 1000), (None, b"v2", 2000), (b"k3", None, 3000)]
-    buf = encode_message_set(recs, base_offset=7)
-    out = decode_message_set(buf)
-    assert [(r.key, r.value, r.timestamp) for r in out] == recs
-    assert [r.offset for r in out] == [7, 8, 9]
-    # flip one payload byte -> CRC must catch it
-    tampered = bytearray(buf)
-    tampered[-1] ^= 0xFF
-    with pytest.raises(ValueError, match="CRC"):
-        decode_message_set(bytes(tampered))
-    # a trailing partial message (broker max_bytes cut) is dropped silently
-    assert len(decode_message_set(buf[:-5])) == 2
 
 
 # ---------------------------------------------------------------------------
@@ -54,7 +32,7 @@ def test_protocol_round_trips(broker):
     broker.append("orders_avro", 0, [(b"a", b"1", 10), (b"b", b"2", 20)])
     with KafkaWireClient(broker.bootstrap) as c:
         versions = c.api_versions()
-        assert versions[1] == (2, 4)  # Fetch v2..v4 advertised (v4 = magic 2)
+        assert versions[1] == (4, 4)  # Fetch v4 only (magic-2 batches)
         brokers, topics = c.metadata(["orders_avro"])
         assert topics == {"orders_avro": [0, 1, 2]}
         assert list(brokers.values())[0][0] == broker.host

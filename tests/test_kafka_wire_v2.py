@@ -1,5 +1,5 @@
 """Round-6 wire-protocol surface (VERDICT r05 items 4/5/7): magic-2
-record batches (zigzag varints + CRC32C) with version negotiation,
+record batches (zigzag varints + CRC32C) with the ApiVersions check,
 CreateTopics/DeleteTopics over the wire, and leader routing across a
 multi-listener broker — every test exchanges real protocol bytes over
 real TCP sockets, both directions.
@@ -13,6 +13,8 @@ from kafka_avro_pipeline_java_spark.streaming.fake_broker import FakeKafkaBroker
 from kafka_avro_pipeline_java_spark.streaming.kafka_wire import (
     API_FETCH,
     API_PRODUCE,
+    SUPPORTED_APIS,
+    ByteWriter,
     KafkaCodecError,
     EARLIEST,
     ERR_NONE,
@@ -24,10 +26,9 @@ from kafka_avro_pipeline_java_spark.streaming.kafka_wire import (
     KafkaWireClient,
     crc32c,
     decode_record_batches,
-    decode_records,
     decode_varint,
-    encode_message_set,
     encode_record_batch,
+    encode_request,
     encode_varint,
 )
 
@@ -131,19 +132,8 @@ def test_record_batch_partial_trailing_batch_dropped():
     assert [r.offset for r in out] == [0, 1]
 
 
-def test_decode_records_sniffs_both_magics():
-    recs = [(b"k", b"v", 5)]
-    v1 = encode_message_set(recs, base_offset=3)
-    v2 = encode_record_batch(recs, base_offset=3)
-    for buf in (v1, v2):
-        out = decode_records(buf)
-        assert [(r.offset, r.key, r.value, r.timestamp) for r in out] == [
-            (3, b"k", b"v", 5)
-        ]
-
-
 # ---------------------------------------------------------------------------
-# negotiation: magic-2 on the wire when offered, magic-1 fallback
+# version check: Produce v3 / Fetch v4 (magic-2 batches) or refusal
 # ---------------------------------------------------------------------------
 
 
@@ -158,62 +148,57 @@ def test_negotiated_produce_fetch_use_v2_batches(broker):
         assert [(r.key, r.value, r.timestamp) for r in recs] == [(b"k", b"v", 9)]
 
 
-def test_downgrade_to_v1_against_a_v2_only_broker(broker):
-    """A broker whose ApiVersions caps Produce/Fetch at v2 gets magic-1
-    message sets — the negotiation floor the docstring promises."""
-    with KafkaWireClient(broker.bootstrap) as c:
-        caps = c.api_versions()
-        caps[API_PRODUCE] = (2, 2)
-        caps[API_FETCH] = (2, 2)
-        c._versions = caps  # pin the negotiated view before first use
-        assert c._version_for(API_PRODUCE) == 2
-        assert c._version_for(API_FETCH) == 2
-        c.produce("orders_avro", 1, [(b"a", b"1", 1), (b"b", b"2", 2)])
-        hw, recs = c.fetch("orders_avro", 1, 0)
-        assert hw == 2
-        assert [r.value for r in recs] == [b"1", b"2"]
+class _PreBatchBroker(FakeKafkaBroker):
+    """Advertises Produce only up to v2 and Fetch only up to v3, the
+    versions before magic-2 record batches."""
+
+    def _api_versions(self, *_):
+        caps = {API_PRODUCE: (0, 2), API_FETCH: (0, 3)}
+        return ByteWriter().int16(ERR_NONE).array(
+            [(k, *caps.get(k, (lo, hi))) for k, lo, hi in SUPPORTED_APIS],
+            lambda w, a: w.int16(a[0]).int16(a[1]).int16(a[2]),
+        ).build()
 
 
-def test_v3_produced_data_readable_by_v2_fetch(broker):
-    """Cross-format: data produced as a magic-2 batch reads back through
-    a magic-1 fetch (the broker's log is format-agnostic, like a real
-    broker's down-conversion path for old consumers)."""
-    with KafkaWireClient(broker.bootstrap) as c:
-        c.produce("orders_avro", 2, [(b"x", b"y", 7)])  # negotiated v3
-    with KafkaWireClient(broker.bootstrap) as old:
-        caps = old.api_versions()
-        caps[API_FETCH] = (2, 2)
-        old._versions = caps
-        _, recs = old.fetch("orders_avro", 2, 0)
-        assert [(r.key, r.value, r.timestamp) for r in recs] == [(b"x", b"y", 7)]
+def test_broker_below_produce_v3_or_fetch_v4_is_refused():
+    """A broker that caps Produce below v3 or Fetch below v4 cannot carry
+    magic-2 record batches: the client refuses it with the named
+    ApiVersions error instead of speaking an older format, and sends
+    nothing. The broker in turn refuses any request version other than
+    the one it advertises."""
+    with _PreBatchBroker({"t": 1}) as b, KafkaWireClient(b.bootstrap) as c:
+        with pytest.raises(RuntimeError,
+                           match="no common version for api_key 0"):
+            c.produce("t", 0, [(b"k", b"v", 1)])
+        with pytest.raises(RuntimeError,
+                           match="no common version for api_key 1"):
+            c.fetch("t", 0, 0)
+        assert b.records("t", 0) == []
+    with FakeKafkaBroker({"t": 1}) as b:
+        frame = encode_request(API_FETCH, 2, 1, "old-client", b"")[4:]
+        with pytest.raises(ValueError, match="unsupported version 2"):
+            b._respond(frame, 0)
 
 
 def test_fetch_max_bytes_exact_for_both_formats(broker):
     """ADVICE r05: the record set the broker returns must itself fit in
-    max_bytes (old code under-counted magic-1 overhead by 8 bytes/msg).
-    Verified by re-encoding the returned batch and checking its size."""
+    max_bytes. Verified by re-encoding each returned record batch and
+    checking its size."""
     rows = [(b"k%02d" % i, b"x" * 100, i) for i in range(50)]
     broker.append("orders_avro", 0, rows)
     max_bytes = 500
     with KafkaWireClient(broker.bootstrap) as c:
-        for fetch_cap, encode in [
-            ((2, 2), encode_message_set),
-            ((2, 4), encode_record_batch),
-        ]:
-            caps = c.api_versions()
-            caps[API_FETCH] = fetch_cap
-            c._versions = caps
-            got, offset = [], 0
-            while offset < 50:
-                _, batch = c.fetch("orders_avro", 0, offset,
-                                   max_bytes=max_bytes)
-                assert batch, "progress stalled"
-                wire = encode([(r.key, r.value, r.timestamp) for r in batch],
-                              base_offset=offset)
-                assert len(wire) <= max_bytes
-                got.extend(batch)
-                offset = batch[-1].offset + 1
-            assert [r.key for r in got] == [k for k, _, _ in rows]
+        got, offset = [], 0
+        while offset < 50:
+            _, batch = c.fetch("orders_avro", 0, offset, max_bytes=max_bytes)
+            assert batch, "progress stalled"
+            wire = encode_record_batch(
+                [(r.key, r.value, r.timestamp) for r in batch],
+                base_offset=offset)
+            assert len(wire) <= max_bytes
+            got.extend(batch)
+            offset = batch[-1].offset + 1
+        assert [r.key for r in got] == [k for k, _, _ in rows]
 
 
 # ---------------------------------------------------------------------------
@@ -303,17 +288,16 @@ def test_cluster_client_survives_leader_move(cluster):
 
 
 # ---------------------------------------------------------------------------
-# op #4 executed: recreate_topics over the wire (no admin library)
+# op #4 executed: recreate_topics over the wire
 # ---------------------------------------------------------------------------
 
 
-def test_recreate_topics_wire_end_to_end(broker, monkeypatch):
+def test_recreate_topics_wire_end_to_end(broker):
     """Reference DataPipeline.java:80-126 delete->poll->create->verify,
     executed against the in-process broker over real TCP through the
-    wire admin fallback (the sandbox has no confluent-kafka)."""
+    wire-protocol admin requests."""
     from kafka_avro_pipeline_java_spark.sources import infra
 
-    monkeypatch.setattr(infra, "kafka_admin_available", lambda: False)
     # seed one of the topics with data so the delete leg is observable
     with KafkaWireClient(broker.bootstrap) as c:
         c.produce("orders_avro", 0, [(b"old", b"x", 1)])
@@ -330,12 +314,14 @@ def test_recreate_topics_wire_end_to_end(broker, monkeypatch):
         assert hw == 0 and recs == []               # old data gone
 
 
-def test_partition_count_wire_fallback(broker, monkeypatch):
+def test_partition_count_wire_fallback(broker):
+    """Op #10: producer-side partitionsFor(topic).size() parity
+    (AvroProducer.java:82) via one Metadata round-trip; an unknown topic
+    raises a KeyError that names it."""
     from kafka_avro_pipeline_java_spark.sources import infra
 
-    monkeypatch.setattr(infra, "kafka_admin_available", lambda: False)
     assert infra.partition_count(broker.bootstrap, "orders_avro") == 3
-    with pytest.raises(KeyError):
+    with pytest.raises(KeyError, match="nope_avro"):
         infra.partition_count(broker.bootstrap, "nope_avro")
 
 
@@ -444,18 +430,6 @@ def test_fetch_gzip_honors_max_bytes_on_encoded_size():
             if offset >= hw:
                 break
         assert [r.key for r in collected] == [b"k%d" % i for i in range(20)]
-        c.close()
-
-
-def test_produce_compression_on_magic1_broker_raises():
-    with FakeKafkaBroker({"t": 1}) as b:
-        c = KafkaWireClient(b.bootstrap)
-        # pin the negotiated Produce range to the magic-1 floor (the same
-        # downgrade path the v2-floor negotiation tests exercise)
-        c._versions = c.api_versions()
-        c._versions[API_PRODUCE] = (0, 2)
-        with pytest.raises(KafkaCodecError, match="magic-1"):
-            c.produce("t", 0, [(b"k", b"v", 1)], compression="gzip")
         c.close()
 
 

@@ -1,17 +1,23 @@
-"""End-to-end streaming pipeline tests: generate → Avro frames → file
-streaming source → decode → exactly-once sink, including the reference's
-kill/restart exactly-once check (SURVEY.md §5.3) at micro-batch granularity.
+"""End-to-end tests of the streaming ETL: generate → Avro frames → Kafka
+(the in-process broker, real protocol bytes over TCP) → ``kafka_py``
+stream → decode → exactly-once DB sink, including the reference's
+kill/restart exactly-once check (SURVEY.md §5.3) at micro-batch
+granularity, and the sink's own ledger/offsets/rollback contract.
 """
 
-import os
+import sqlite3
+import time
 
 import pytest
 
+from kafka_avro_pipeline_java_spark.generate import generate_dataset
 from kafka_avro_pipeline_java_spark.sources import schema_dsl as S
-from kafka_avro_pipeline_java_spark.streaming.pipeline import (
-    consume_from_dir,
-    produce_to_dir,
-    read_sink_output,
+from kafka_avro_pipeline_java_spark.streaming.avro_codec import decode_df
+from kafka_avro_pipeline_java_spark.streaming.fake_broker import FakeKafkaBroker
+from kafka_avro_pipeline_java_spark.streaming.kafka_io import (
+    prepare_kafka_batch,
+    read_kafka_stream_py,
+    write_kafka_batch_py,
 )
 from kafka_avro_pipeline_java_spark.streaming.sink import ExactlyOnceDbSink
 
@@ -19,86 +25,73 @@ SCHEMA = S.dsl_to_avro(
     [{"name": "dataset1", "fields": {"key_field1": "string", "timestamp_field1": "long",
                                      "double_field1": "double", "string_field1": "string"}}]
 )[0]
+N_PARTITIONS = 3
 
 
-def test_pipeline_end_to_end(spark, tmp_path):
-    spool, out, ckpt = str(tmp_path / "spool"), str(tmp_path / "out"), str(tmp_path / "ckpt")
-    produce_to_dir(spark, SCHEMA, 200, spool, seed=42)
-    q = consume_from_dir(spark, spool, SCHEMA, out, ckpt)
-    q.awaitTermination(120)
-    got = read_sink_output(spark, out)
-    assert got.count() == 200
-    assert set(got.columns) >= {"key_field1", "timestamp_field1",
-                                "double_field1", "string_field1"}
+def produce(spark, bootstrap, schema, n_rows, *, seed):
+    """One producer run: generate → Avro frame → the reference's explicit
+    partition → wire-protocol Produce into the schema's topic."""
+    rows = generate_dataset(spark, schema, n_rows, seed=seed)
+    framed = prepare_kafka_batch(rows, schema, explicit_partitions=N_PARTITIONS)
+    write_kafka_batch_py(framed, bootstrap, schema["name"])
+
+
+def drain_to_db(spark, bootstrap, schema, db_path, ckpt, columns, expect_rows):
+    """One consumer lifetime: stream the schema's topic (``kafka_py``),
+    decode the Avro values (Kafka's ``partition`` passed through) and
+    commit ``columns`` through ExactlyOnceDbSink into the sqlite table of
+    the same name until it holds ``expect_rows`` rows, then stop."""
+    table = schema["name"]
+    raw = read_kafka_stream_py(spark, bootstrap, table)
+    typed = decode_df(raw.select("value", "partition"), schema,
+                      passthrough_cols=["partition"])
+    sink = ExactlyOnceDbSink(
+        lambda: sqlite3.connect(db_path, timeout=60), table, columns
+    )
+    q = (
+        typed.writeStream.foreachBatch(sink)
+        .option("checkpointLocation", ckpt)
+        .trigger(processingTime="200 milliseconds")
+        .start()
+    )
+    try:
+        deadline = time.time() + 120
+        n = 0
+        while time.time() < deadline and n < expect_rows:
+            q.processAllAvailable()
+            con = sqlite3.connect(db_path)
+            n = con.execute(f"SELECT COUNT(*) FROM {table}").fetchone()[0]
+            con.close()
+    finally:
+        q.stop()
 
 
 def test_restart_no_duplicates_no_loss(spark, tmp_path):
     """Reference kill test (README.md:242-276): process, 'kill', produce
     more, restart with the same checkpoint → every record exactly once."""
-    spool, out, ckpt = str(tmp_path / "spool"), str(tmp_path / "out"), str(tmp_path / "ckpt")
-    produce_to_dir(spark, SCHEMA, 150, spool, seed=1)
-    q = consume_from_dir(spark, spool, SCHEMA, out, ckpt)
-    q.awaitTermination(120)  # first run drains and stops (availableNow)
+    db, ckpt = str(tmp_path / "sink.db"), str(tmp_path / "ckpt")
+    con = sqlite3.connect(db)
+    con.execute(S.avro_to_create_table(SCHEMA))
+    con.commit(); con.close()
+    cols = [f["name"] for f in SCHEMA["fields"]]
+    with FakeKafkaBroker({"dataset1": N_PARTITIONS}) as broker:
+        produce(spark, broker.bootstrap, SCHEMA, 150, seed=1)
+        # first consumer run drains what is there, then is "killed"
+        drain_to_db(spark, broker.bootstrap, SCHEMA, db, ckpt, cols, 150)
 
-    # second producer run while consumer is "down"
-    produce_to_dir(spark, SCHEMA, 150, spool, seed=2)
-    q2 = consume_from_dir(spark, spool, SCHEMA, out, ckpt)
-    q2.awaitTermination(120)
+        # second producer run while consumer is "down"
+        produce(spark, broker.bootstrap, SCHEMA, 150, seed=2)
+        drain_to_db(spark, broker.bootstrap, SCHEMA, db, ckpt, cols, 300)
 
-    got = read_sink_output(spark, out)
-    assert got.count() == 300  # no loss
+    con = sqlite3.connect(db)
+    n = con.execute("SELECT COUNT(*) FROM dataset1").fetchone()[0]
+    n_distinct = con.execute(
+        f"SELECT COUNT(*) FROM (SELECT DISTINCT {', '.join(cols)} FROM dataset1)"
+    ).fetchone()[0]
+    con.close()
+    assert n == 300  # no loss
     # no duplicates: both producer runs are distinct by (seed→values, rid)
-    assert got.distinct().count() == got.count() or got.count() == 300
-
-
-def test_replayed_batch_is_skipped(spark, tmp_path):
-    """Same checkpoint + unchanged source: second run must not re-apply."""
-    spool, out, ckpt = str(tmp_path / "spool"), str(tmp_path / "out"), str(tmp_path / "ckpt")
-    produce_to_dir(spark, SCHEMA, 50, spool)
-    for _ in range(2):
-        q = consume_from_dir(spark, spool, SCHEMA, out, ckpt)
-        q.awaitTermination(120)
-    assert read_sink_output(spark, out).count() == 50
-
-
-def test_bounded_microbatch_admission(spark, tmp_path):
-    """Reference backpressure parity (SURVEY §2A op #22): the consumer
-    never admits more than a bounded amount of work per cycle
-    (max.poll.records=10 there; maxFilesPerTrigger here — same pull-based
-    admission knob family as maxOffsetsPerTrigger on the Kafka source).
-    Each producer run below writes >=1 file; bounding to 1 file per batch
-    must yield multiple micro-batches, each within the bound."""
-    spool, out, ckpt = str(tmp_path / "spool"), str(tmp_path / "out"), str(tmp_path / "ckpt")
-    for seed in (1, 2, 3):
-        produce_to_dir(spark, SCHEMA, 50, spool, seed=seed)
-
-    from kafka_avro_pipeline_java_spark.streaming.avro_codec import decode_df
-    from kafka_avro_pipeline_java_spark.streaming.sink import exactly_once_parquet_sink
-
-    raw = (
-        spark.readStream.schema("key binary, value binary")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(spool)
-    )
-    q = (
-        decode_df(raw, SCHEMA)
-        .writeStream.foreachBatch(exactly_once_parquet_sink(out))
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-    import os
-
-    batches = [d for d in os.listdir(out) if d.startswith("batch_id=")]
-    assert len(batches) >= 3, f"expected >=3 bounded micro-batches, got {batches}"
-    total = read_sink_output(spark, out).count()
-    assert total == 150
-    # no single batch exceeded one file's worth of rows
-    per_batch = (
-        read_sink_output(spark, out).groupBy("batch_id").count().collect()
-    )
-    assert max(r["count"] for r in per_batch) <= 50
+    assert n_distinct == n
 
 
 def test_db_sink_exactly_once_with_sqlite(spark, tmp_path):

@@ -70,3 +70,23 @@ def test_committed_change_is_stale_under_a_new_head(repo):
     new_head = clean_head(str(root))
     assert new_head is not None and new_head != head
     assert latest_sf01_sweep(str(root))["stale"] is True
+
+
+def test_tools_put_their_own_checkout_on_sys_path():
+    """A tool run from a copy of the repository (say, the parent commit
+    unpacked elsewhere) must import that copy's package and entry, so no
+    tool may put a fixed path literal on ``sys.path``."""
+    import ast
+    import pathlib
+
+    tools = pathlib.Path(__file__).resolve().parent.parent / "tools"
+    fixed = []
+    for path in sorted(tools.glob("*.py")):
+        for node in ast.walk(ast.parse(path.read_text())):
+            if (isinstance(node, ast.Call)
+                    and ast.unparse(node.func) == "sys.path.insert"
+                    and any(isinstance(a, ast.Constant)
+                            and isinstance(a.value, str)
+                            for a in node.args)):
+                fixed.append(f"{path.name}:{node.lineno}")
+    assert fixed == []

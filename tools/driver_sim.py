@@ -52,7 +52,9 @@ Round-10/11 gates (VERDICT r09 items 6-7, VERDICT r10 item 4):
    unreduced.
 """
 import datetime, json, math, os, re, sys
-sys.path.insert(0, "/root/repo")
+# this checkout's root, so a sweep of any copy imports that copy
+_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, _ROOT)
 import duckdb
 from pyspark.sql import SparkSession
 import __spark_entry__ as E
@@ -62,7 +64,6 @@ ONLY = set(sys.argv[2:])
 # A full sweep is logged under the head it ran (tools/sweep_status.py::
 # clean_head), read before any code runs and again at the end.
 from tools.sweep_status import clean_head
-_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 _START_HEAD = clean_head(_ROOT)
 spark = (SparkSession.builder.master("local[16]").appName("driver-sim")
          .config("spark.sql.shuffle.partitions", "16")

@@ -13,10 +13,11 @@ side — turning "hash_match: false" into a named row and column.
 Usage: python tools/fingerprint_diff.py [SF_DIR] [N]
 Exit 0 = identical per-row fingerprints; 1 = diffs printed.
 """
+import os
 import sys
 import tempfile
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import duckdb
 from pyspark.sql import SparkSession, functions as F
 
