@@ -21,10 +21,9 @@ Reps. Each query runs ``SPARK_GRAFT_BENCH_REPS`` times (default 3) and
 the reported number is the MEDIAN; single cold runs swing 2× on
 unchanged plans.
 
-Order. Queries run in registry order (minus ``BENCH_EXCLUDED``), then
-``BENCH_EXTRA`` (measured, not registered). The driver's correctness
-report covers only the first 50 registered names, which
-``plans/__init__.py`` sets with ``_PRIORITY`` (at most 50 names).
+Order. Queries run in registry order, minus ``BENCH_EXCLUDED``. The
+driver's correctness report covers only the first 50 registered names,
+which ``plans/__init__.py`` sets with ``_PRIORITY`` (at most 50 names).
 """
 
 from __future__ import annotations
@@ -67,25 +66,6 @@ BENCH_EXCLUDED = {
                             "graph_triangle_count_approx is benched",
 }
 BENCH_QUERIES = [n for n in QUERIES if n not in BENCH_EXCLUDED]
-
-# Bench-only callables (r13, VERDICT r12 item 3): the xxhash64 MinHash/
-# SimHash fast paths left the graded registry when their portable-hash
-# operating points took over the dedup_minhash_lsh / dedup_simhash names
-# (xxhash64 is not DuckDB-expressible, so keeping them registered meant
-# permanent rows-only residue). They stay MEASURED here so a JVM-hash
-# perf regression is still caught, and stay correctness-bounded by
-# tests/test_dedup_skew.py's estimate-error assertions.
-from kafka_avro_pipeline_java_spark.plans.text import (  # noqa: E402
-    dedup_minhash_lsh_xx64,
-    dedup_simhash_xx64,
-    text_rolling_fingerprint_xx64,
-)
-
-BENCH_EXTRA = {
-    "dedup_minhash_lsh_xx64": dedup_minhash_lsh_xx64,
-    "dedup_simhash_xx64": dedup_simhash_xx64,
-    "text_rolling_fingerprint_xx64": text_rolling_fingerprint_xx64,
-}
 
 # Re-baselining aid (round-6, VERDICT r05 item 6): a comma-separated
 # SPARK_GRAFT_BENCH_ONLY restricts the run to the named queries so a
@@ -220,12 +200,9 @@ def main() -> None:
     # cache regression shows up here query by query
     codegen_compiles: dict[str, int] = {}
     codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
-    bench_fns = {n: QUERIES[n] for n in BENCH_QUERIES}
-    for n, f in BENCH_EXTRA.items():
-        if not _ONLY or n in _only_set:
-            bench_fns[n] = f
     sc = spark.sparkContext
-    for name, fn in bench_fns.items():
+    for name in BENCH_QUERIES:
+        fn = QUERIES[name]
         # job-group per query so its peak stage task count can be read
         # back from the status tracker (r14, VERDICT r13 item 1: make it
         # legible WHY 8-vs-32-core ratios are ≈1 at sf0.1 — nearly every

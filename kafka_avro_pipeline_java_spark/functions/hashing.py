@@ -1,9 +1,9 @@
 """Hashing helpers.
 
-``portable_hash64`` is an md5-derived 64-bit hash expressible identically in
+``portable_hash64`` is an md5-derived 60-bit hash expressible identically in
 Spark and DuckDB (both expose ``md5(text) -> hex``), used wherever a hash
-must be oracle-checkable. Spark's native ``xxhash64`` is faster and is used
-in oracle-free paths (MinHash/SimHash internals at scale).
+must be oracle-checkable: MinHash, SimHash and the rolling fingerprint all
+hash with it.
 
 ``java_string_hashcode`` reproduces ``java.lang.String.hashCode`` as a
 column expression — the reference keys Kafka partitions on

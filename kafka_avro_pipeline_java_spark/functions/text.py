@@ -165,31 +165,18 @@ def bpe_ish_token_count(col: Column | str) -> Column:
     return F.size(F.regexp_extract_all(c, F.lit(BPE_ISH_PATTERN), 0))
 
 
-def rolling_hash(col: Column | str, *, base: int = 257, modulus: int = (1 << 31) - 1) -> Column:
-    """Polynomial rolling hash of the token sequence (order-sensitive —
-    unlike the md5 fingerprint, equal token MULTISETS in different orders
-    hash differently): h = Σ tok_hash_i · base^(n-1-i) mod M, folded
-    left-to-right with ``aggregate``. JVM-side, no UDF. M is the Mersenne
-    prime 2^31-1 so h·base + tok stays well inside a long."""
-    toks = tokens(F.lower(F.col(col) if isinstance(col, str) else col))
-    # fold: h = (h*base + hash(tok)) mod M ; xxhash64 folded into [0, M)
-    return F.aggregate(
-        toks,
-        F.lit(0).cast("long"),
-        lambda h, t: F.pmod(
-            h * base + F.pmod(F.xxhash64(t), F.lit(modulus)), F.lit(modulus)
-        ),
-    )
-
-
 def rolling_hash_portable(
     col: Column | str, *, base: int = 257, modulus: int = (1 << 31) - 1
 ) -> Column:
-    """Same polynomial rolling hash as ``rolling_hash`` but with the
-    md5-derived ``portable_hash64`` as the per-token hash, so every step is
-    expressible identically in DuckDB (``list_reduce`` fold over
-    ``md5``-hashed tokens — see plans/text.py::text_rolling_fingerprint_portable).
-    Accumulator stays < 2^31, h·base + tok < 2^40: no overflow either side."""
+    """Polynomial rolling hash of the token sequence (order-sensitive —
+    unlike the md5 fingerprint, equal token MULTISETS in different orders
+    hash differently): h = Σ tok_hash_i · base^(n-1-i) mod M, folded
+    left-to-right with ``aggregate``. JVM-side, no UDF. The per-token hash
+    is the md5-derived ``portable_hash64``, so every step is expressible
+    identically in DuckDB (``list_reduce`` fold over ``md5``-hashed tokens
+    — see plans/text.py::text_rolling_fingerprint_portable). M is the
+    Mersenne prime 2^31-1: the accumulator stays < 2^31 and
+    h·base + tok < 2^40, so neither engine overflows."""
     from .hashing import portable_hash64
 
     toks = tokens(F.lower(F.col(col) if isinstance(col, str) else col))

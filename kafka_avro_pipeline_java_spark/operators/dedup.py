@@ -7,13 +7,16 @@ Five strategies, all shuffle-aware:
                  index pattern — never a cross product), Jaccard filter
 - MinHash+LSH:  shingle → K minhashes → B bands → bucket equi-join;
                  candidate verification by full signature similarity
-- SimHash:      64-bit signed-projection fingerprint; near-dups = small
-                 Hamming distance within same band buckets
+- SimHash:      60-bit signed-projection fingerprint over the portable
+                 token hash; near-dups = small Hamming distance within
+                 same band buckets
 - embedding:    cosine near-dup pairs (brute pair join here; the scale
                  path buckets by LSH hyperplane signs first)
 
-Hashes in oracle-checked paths use the md5-derived ``portable_hash64``;
-scale-only internals may use the cheaper native ``xxhash64``.
+MinHash and SimHash hash with the md5-derived ``portable_hash64``, so
+every registered pipeline is reproducible in DuckDB. Only the shingle
+join keys of the n-gram Jaccard and containment joins use the cheaper
+native ``xxhash64``: they are compared, never output.
 """
 
 from __future__ import annotations
@@ -229,96 +232,18 @@ def containment_pairs(
     )
 
 
-def minhash_signatures(
-    df: DataFrame, text_col: str, id_col: str, k: int = 3, num_hashes: int = 32,
-    max_doc_freq: int | None = None,
-) -> DataFrame:
-    """MinHash signature per doc: for permutation i, min over shingles of
-    hash(shingle XOR seed_i). Computed as one explode + groupBy (single
-    shuffle); signature is an array<bigint> column. ``max_doc_freq`` drops
-    ultra-common shingles before signing (see ``cap_doc_freq``)."""
-    sh = cap_doc_freq(shingle_table(df, text_col, id_col, k), max_doc_freq)
-    hashed = sh.withColumn("h", portable_hash64("shingle"))
-    mins = hashed.groupBy("id").agg(
-        *[
-            F.min(F.xxhash64(F.col("h"), F.lit(i))).alias(f"mh_{i}")
-            for i in range(num_hashes)
-        ]
-    )
-    return mins.select("id", F.array(*[f"mh_{i}" for i in range(num_hashes)]).alias("signature"))
-
-
-def minhash_lsh_pairs(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    k: int = 3,
-    num_hashes: int = 32,
-    bands: int = 8,
-    threshold: float = 0.5,
-    max_doc_freq: int | None = None,
-) -> DataFrame:
-    """LSH banding: split the signature into ``bands`` rows-per-band groups,
-    hash each band, equi-join on (band, band_hash) for candidates, then
-    verify candidates by estimated Jaccard = fraction of matching minhashes.
-
-    Scale: candidates come from an equi-join on band buckets — no pairwise
-    scan. The verify step compares two fixed-width arrays: O(1) per pair.
-    """
-    rows_per_band = num_hashes // bands
-    sig = minhash_signatures(df, text_col, id_col, k, num_hashes, max_doc_freq)
-    banded = sig.select(
-        "id",
-        "signature",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.xxhash64(
-                            *[F.element_at("signature", b * rows_per_band + j + 1)
-                              for j in range(rows_per_band)]
-                        ).alias("bucket"),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("bb"),
-    ).select("id", "signature", "bb.band", "bb.bucket")
-    a, b = banded.alias("a"), banded.alias("b")
-    est = F.size(
-        F.filter(
-            F.zip_with(F.col("a.signature"), F.col("b.signature"), lambda x, y: x == y),
-            lambda m: m,
-        )
-    ) / F.lit(num_hashes)
-    # verify INSIDE the join projection, before the pair-dedup shuffle —
-    # rejected candidates never shuffle (cheap O(num_hashes) compare vs
-    # moving full signature pairs)
-    return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .select(
-            F.col("a.id").alias("id_a"),
-            F.col("b.id").alias("id_b"),
-            F.round(est, 4).alias("est_jaccard"),
-        )
-        .filter(F.col("est_jaccard") >= threshold)
-        .dropDuplicates(["id_a", "id_b"])
-    )
-
-
 # Portable MinHash: md5-derived base hash + linear-congruential permutations
 # mod the Mersenne prime 2^31-1 — every step expressible identically in
-# DuckDB SQL (see plans/text.py::dedup_minhash_portable oracle), unlike the
-# fast path's engine-native xxhash64. a*h31 < 2^62 so no BIGINT overflow
-# in DuckDB (which checks) and no wrap in Spark.
+# DuckDB SQL (see plans/text.py::dedup_minhash_portable oracle), which
+# the engine-native xxhash64 is not. a*h31 < 2^62 so no BIGINT overflow
+# in DuckDB (which checks) and no wrap in Spark. The multipliers are
+# successive MINSTD powers 48271^(i+1) mod P, not multiples of one base:
+# with a_i = c·(i+1), a shingle whose c·h31 mod P is small is the minimum
+# of nearly every permutation at once, so two unrelated documents sharing
+# it estimated Jaccard 0.97 against an exact 0.02
+# (tests/test_operators.py::test_minhash_estimates_track_exact_jaccard).
 MINHASH_P = 2147483647
-MINHASH_A = [(1103515245 * (i + 1)) % MINHASH_P for i in range(64)]
+MINHASH_A = [pow(48271, i + 1, MINHASH_P) for i in range(64)]
 MINHASH_B = [(12345 * (i + 7)) % MINHASH_P for i in range(64)]
 
 
@@ -398,9 +323,9 @@ def minhash_lsh_pairs_portable(
     r13 optimization (guide §2.4/§3): the signature table is materialized
     ONCE behind a lazy localCheckpoint and the full signature is CARRIED
     through the banding so verification happens inside the band join's
-    projection — the same shape as the xx64 fast path. The previous form
-    (candidate distinct + two verify joins against sig) re-derived the
-    whole scan→tokenize→explode→md5→32-min pipeline FOUR times, because
+    projection. The previous form (candidate distinct + two verify joins
+    against sig) re-derived the whole scan→tokenize→explode→md5→32-min
+    pipeline FOUR times, because
     AQE's broadcast conversion of the small joins defeats ReusedExchange
     (measured: 4 parquet scans in the before-plan, 1 after; bench
     6.96 s → see OPTIMIZATION_r13.md). Rejected candidates are filtered
@@ -599,40 +524,6 @@ def minhash_similarity_join(
     )
 
 
-def simhash(df: DataFrame, text_col: str, id_col: str, bits: int = 64) -> DataFrame:
-    """SimHash fingerprint: sign-sum of per-token hash bits.
-
-    token hash → for each bit position, +1 if set else -1; sum over tokens;
-    fingerprint bit = 1 if sum > 0. Expressed as explode + groupBy(sum) over
-    a bit-position array — one shuffle, no UDFs.
-    """
-    toks = shingle_table(df, text_col, id_col, k=1).withColumnRenamed(
-        "shingle", "tok"
-    ).withColumn("h", F.xxhash64("tok"))
-
-    def bit_mask(i: int) -> int:
-        # bit 63 as a signed-long literal (1 << 63 overflows LongType)
-        return (1 << i) if i < 63 else -(1 << 63)
-
-    # sign-sum via counting: sum(±1) = 2*count_set - n, so aggregate the
-    # branch-free bit extraction (h>>i)&1 plus one count — cheaper per row
-    # than 64 conditional expressions
-    bit_cols = [
-        F.sum(F.shiftrightunsigned("h", i).bitwiseAND(F.lit(1).cast("long"))).alias(f"c{i}")
-        for i in range(bits)
-    ]
-    sums = toks.groupBy("id").agg(F.count("*").alias("n"), *bit_cols)
-    fp = sums.select(
-        "id",
-        sum(
-            F.when(2 * F.col(f"c{i}") > F.col("n"), F.lit(bit_mask(i)).cast("long"))
-            .otherwise(F.lit(0).cast("long"))
-            for i in range(bits)
-        ).alias("simhash"),
-    )
-    return fp
-
-
 SIMHASH_PORTABLE_BITS = 60  # portable base hash is 60 bits (15 md5 hex chars)
 
 
@@ -690,49 +581,6 @@ def simhash_near_pairs_portable(
             F.col("b.id").alias("id_b"),
             F.bit_count(F.col("a.simhash").bitwiseXOR(F.col("b.simhash"))).alias("hamming"),
         )
-        .filter(F.col("hamming") <= max_hamming)
-        .dropDuplicates(["id_a", "id_b"])
-    )
-
-
-def simhash_near_pairs(df: DataFrame, text_col: str, id_col: str, max_hamming: int = 8) -> DataFrame:
-    """Near-dup pairs with Hamming(simhash_a, simhash_b) <= max_hamming.
-
-    Candidates via 4 16-bit band buckets (pigeonhole: any pair within
-    Hamming 3 shares a band; wider radii still catch most) — equi-join, not
-    a cross product; verified with exact popcount via bit_count.
-    Fingerprints are materialized once (see simhash_near_pairs_portable).
-    """
-    fp = simhash(df, text_col, id_col).localCheckpoint(eager=False)
-    banded = fp.select(
-        "id",
-        "simhash",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.shiftrightunsigned("simhash", b * 16).bitwiseAND(F.lit(0xFFFF)).alias("bucket"),
-                    )
-                    for b in range(4)
-                ]
-            )
-        ).alias("bb"),
-    ).select("id", "simhash", "bb.band", "bb.bucket")
-    a, b = banded.alias("a"), banded.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .select(
-            F.col("a.id").alias("id_a"),
-            F.col("b.id").alias("id_b"),
-            F.bit_count(F.col("a.simhash").bitwiseXOR(F.col("b.simhash"))).alias("hamming"),
-        )
-        # filter BEFORE the dedup shuffle: rejected candidates never move
         .filter(F.col("hamming") <= max_hamming)
         .dropDuplicates(["id_a", "id_b"])
     )

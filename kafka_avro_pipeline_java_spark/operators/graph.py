@@ -18,8 +18,84 @@ loop. Skewed hub vertices are standard AQE skew-join territory.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+
+def _rank_graph(edges: DataFrame, src: str, dst: str) -> tuple[DataFrame, DataFrame]:
+    """(edges with out-degree, node set), both eagerly checkpointed: the
+    inputs every PageRank iteration reads.
+
+    Iterative-algorithm discipline: the edge list is consumed by the
+    node set and every iteration's join — if it is DERIVED (e.g. Jaccard
+    pairs from shingles), leaving it lazy recomputes the derivation per
+    consumer (measured: 0 ReusedExchange, 66 Exchanges in the composed
+    3-iteration plan). localCheckpoint materializes it once and truncates
+    lineage (the GraphX/ALS pattern); storage is freed by the
+    ContextCleaner when the result goes out of scope, so no cache leak
+    across calls. Cost: recompute-on-executor-loss, acceptable for a
+    bounded iterative job.
+
+    A checkpointed frame comes back as an ExistingRDD with
+    UnknownPartitioning, so repartitioning the edges by src buys nothing
+    for join planning. The out-degree rides INTO the checkpoint via one
+    window over the src-keyed exchange, and the node set is checkpointed
+    once, so each iteration broadcast-joins node-set-sized vectors
+    instead of shuffling the edges (r14, the TextRank treatment)."""
+    from pyspark.sql.window import Window as _W
+
+    e = (
+        edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
+        .withColumn("outdeg", F.count("*").over(_W.partitionBy("src")))
+        .localCheckpoint(eager=True)
+    )
+    nodes = (
+        e.select(F.col("src").alias("node"))
+        .distinct()
+        .localCheckpoint(eager=True)
+    )
+    return e, nodes
+
+
+def _power_iteration(
+    e: DataFrame,
+    nodes: DataFrame,
+    start: Column,
+    restart: Column,
+    *,
+    iters: int,
+    damping: float,
+) -> DataFrame:
+    """``iters`` PageRank power iterations over ``_rank_graph``'s frames:
+    r_0 = ``start``, r_{k+1}(v) = ``restart`` + d·Σ_{u→v} r_k(u)/outdeg(u).
+    ``start`` and ``restart`` are column expressions over ``node``.
+    Returns (node, rank)."""
+    ranks = nodes.select("node", start.alias("rank"))
+    for _ in range(iters):
+        contrib = e.join(
+            F.broadcast(ranks.withColumnRenamed("node", "src")), "src"
+        ).select("dst", (F.col("rank") / F.col("outdeg")).alias("c"))
+        spread = contrib.groupBy("dst").agg(F.sum("c").alias("s"))
+        # left join back onto the full node set: in-edge-less nodes keep
+        # their restart mass. NOTE: the node set is source-derived, so mass
+        # flowing to dst-ONLY nodes (in-edges but no out-edges) is dropped —
+        # conservation holds on the symmetric/undirected inputs the
+        # callers' precondition requires, not on general directed graphs
+        ranks = (
+            nodes.join(
+                F.broadcast(spread.withColumnRenamed("dst", "node")),
+                "node",
+                "left",
+            )
+            .select(
+                "node",
+                (
+                    restart
+                    + damping * F.coalesce(F.col("s"), F.lit(0.0))
+                ).alias("rank"),
+            )
+        )
+    return ranks
 
 
 def pagerank(
@@ -40,62 +116,12 @@ def pagerank(
 
     r_{k+1}(v) = (1-d)/N + d * Σ_{u→v} r_k(u) / outdeg(u), r_0 = 1/N.
     """
-    # Iterative-algorithm discipline: the edge list is consumed by deg,
-    # nodes, and every iteration's join — if it is DERIVED (e.g. Jaccard
-    # pairs from shingles), leaving it lazy recomputes the derivation per
-    # consumer (measured: 0 ReusedExchange, 66 Exchanges in the composed
-    # 3-iteration plan). localCheckpoint materializes it once and
-    # truncates lineage (the GraphX/ALS pattern); storage is freed by the
-    # ContextCleaner when the result goes out of scope, so no cache leak
-    # across calls. Cost: recompute-on-executor-loss, acceptable for a
-    # bounded iterative job.
-    # r14 (guide §2.4/§3.1, the TextRank treatment): a checkpointed frame
-    # comes back as an ExistingRDD with UnknownPartitioning, so the old
-    # repartition("src") bought nothing for join planning — every
-    # iteration re-shuffled the edges for the rank join and re-derived
-    # the out-degree aggregate. The out-degree now rides INTO the
-    # checkpoint via one window over the src-keyed exchange; the node set
-    # is checkpointed once; and each iteration broadcast-joins the
-    # node-set-sized rank/spread vectors instead of shuffling the edges.
-    from pyspark.sql.window import Window as _W
-
-    e = (
-        edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-        .withColumn("outdeg", F.count("*").over(_W.partitionBy("src")))
-        .localCheckpoint(eager=True)
-    )
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    e, nodes = _rank_graph(edges, src, dst)
     n = nodes.count()  # cheap: scans the checkpointed partitions
-    ranks = nodes.select("node", F.lit(1.0 / n).alias("rank"))
-    for _ in range(iters):
-        contrib = e.join(
-            F.broadcast(ranks.withColumnRenamed("node", "src")), "src"
-        ).select("dst", (F.col("rank") / F.col("outdeg")).alias("c"))
-        spread = contrib.groupBy("dst").agg(F.sum("c").alias("s"))
-        # left join back onto the full node set: in-edge-less nodes keep
-        # their restart mass. NOTE: the node set is source-derived, so mass
-        # flowing to dst-ONLY nodes (in-edges but no out-edges) is dropped —
-        # conservation holds on the symmetric/undirected inputs the
-        # docstring's precondition requires, not on general directed graphs
-        ranks = (
-            nodes.join(
-                F.broadcast(spread.withColumnRenamed("dst", "node")),
-                "node",
-                "left",
-            )
-            .select(
-                "node",
-                (
-                    F.lit((1.0 - damping) / n)
-                    + damping * F.coalesce(F.col("s"), F.lit(0.0))
-                ).alias("rank"),
-            )
-        )
-    return ranks
+    return _power_iteration(
+        e, nodes, F.lit(1.0 / n), F.lit((1.0 - damping) / n),
+        iters=iters, damping=damping,
+    )
 
 
 def degree_stats(edges: DataFrame, *, src: str = "src", dst: str = "dst") -> DataFrame:
@@ -233,47 +259,15 @@ def personalized_pagerank(
     ranked blast radius; seed = a gold doc → neighborhood to upsample).
     Same one-shuffle-per-iteration shape as pagerank(); the seed vector
     is a literal, so restart mass needs no join."""
-    # r14: same one-exchange-total shape as pagerank() above — out-degree
-    # folded into the checkpoint via a window, node set checkpointed,
-    # rank/spread vectors broadcast per iteration.
-    from pyspark.sql.window import Window as _W
-
-    e = (
-        edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-        .withColumn("outdeg", F.count("*").over(_W.partitionBy("src")))
-        .localCheckpoint(eager=True)
-    )
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    e, nodes = _rank_graph(edges, src, dst)
     seed_share = 1.0 / len(seeds)
     seed_col = F.when(
         F.col("node").isin(*seeds), F.lit(seed_share)
     ).otherwise(F.lit(0.0))
-    ranks = nodes.select("node", seed_col.alias("rank"))
-    for _ in range(iters):
-        contrib = e.join(
-            F.broadcast(ranks.withColumnRenamed("node", "src")), "src"
-        ).select("dst", (F.col("rank") / F.col("outdeg")).alias("c"))
-        spread = contrib.groupBy("dst").agg(F.sum("c").alias("s"))
-        # every node keeps its restart mass even with zero in-links
-        ranks = (
-            nodes.join(
-                F.broadcast(spread.withColumnRenamed("dst", "node")),
-                "node",
-                "left",
-            )
-            .select(
-                "node",
-                (
-                    (1.0 - damping) * seed_col
-                    + damping * F.coalesce(F.col("s"), F.lit(0.0))
-                ).alias("rank"),
-            )
-        )
-    return ranks
+    return _power_iteration(
+        e, nodes, seed_col, (1.0 - damping) * seed_col,
+        iters=iters, damping=damping,
+    )
 
 
 def eigenvector_centrality(

@@ -87,13 +87,11 @@ def text_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# r13: text_rolling_fingerprint now GRADES the WINNOWING selection
+# r13: text_rolling_fingerprint GRADES the WINNOWING selection
 # (Schleimer/Wilkerson/Aiken 2003 — the MOSS plagiarism fingerprint) over
-# portable k-gram rolling hashes, under a full value oracle; the xxhash64
-# whole-document fold keeps its engine-native speed as the bench-only
-# text_rolling_fingerprint_xx64 below (order-sensitivity still
-# unit-tested in tests/test_text_functions.py). Same retirement pattern
-# as dedup_minhash_lsh / dedup_simhash.
+# portable k-gram rolling hashes, under a full value oracle; the
+# whole-document fold is text_rolling_fingerprint_portable below
+# (order-sensitivity unit-tested in tests/test_text_functions.py).
 @query(
     "text_rolling_fingerprint",
     oracle=r"""
@@ -163,13 +161,6 @@ def text_rolling_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def text_rolling_fingerprint_xx64(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """BENCH-ONLY xxhash64 whole-document rolling fold (engine-native
-    hash — no DuckDB twin; measured via bench.py BENCH_EXTRA)."""
-    d = load_table(spark, sf_dir, "documents")
-    return d.select("doc_id", T.rolling_hash("text").alias("rolling_fp"))
-
-
 @query(
     "text_rolling_fingerprint_portable",
     oracle=r"""
@@ -186,9 +177,9 @@ def text_rolling_fingerprint_portable(spark: SparkSession, sf_dir: str) -> DataF
     """Order-sensitive polynomial rolling fingerprint, portable variant:
     per-token hash is the md5-derived ``portable_hash64`` folded mod the
     Mersenne prime 2^31-1, so the DuckDB oracle reproduces the fold exactly
-    (``list_reduce`` with a prepended zero accumulator). The xxhash64 fast
-    path (``text_rolling_fingerprint``) keeps the engine-native speed; this
-    twin earns the oracle row — same pattern as ``dedup_minhash_portable``."""
+    (``list_reduce`` with a prepended zero accumulator). It is the
+    whole-document fold; ``text_rolling_fingerprint`` grades the winnowing
+    selection over k-gram rolling hashes instead."""
     d = load_table(spark, sf_dir, "documents")
     return d.select("doc_id", T.rolling_hash_portable("text").alias("rolling_fp"))
 
@@ -499,24 +490,19 @@ def dedup_minhash_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash+LSH near-dup pairs with FULLY portable hashing (md5 base
     hash + LCG permutations mod 2^31-1, md5 band buckets) — the complete
     minhash pipeline verified value-for-value against the DuckDB oracle.
-    The default `dedup_minhash_lsh` keeps the faster xxhash64 internals."""
+    `dedup_minhash_lsh` runs the same operator at its high-recall
+    operating point (16 bands, threshold 0.3)."""
     d = load_table(spark, sf_dir, "documents")
     return dedup.minhash_lsh_pairs_portable(
         d, "text", "doc_id", k=3, num_hashes=32, bands=8, threshold=0.5
     )
 
 
-# r13 (VERDICT r12 item 3): dedup_minhash_lsh and dedup_simhash are now
-# GRADED through the portable-hash pipelines at their own operating
-# points (bands=16/threshold=0.3 high-recall banding; Hamming<=2 tight
-# duplicates — distinct from the portable twins' bands=8/0.5 and
-# Hamming<=4 above/below), each under a full generated value oracle.
-# The xxhash64 fast paths below (dedup_minhash_lsh_xx64 /
-# dedup_simhash_xx64) keep the Spark-native-hash internals EXECUTED and
-# MEASURED — bench.py benches them via BENCH_EXTRA and
-# tests/test_dedup_skew.py bounds their estimate error vs exact Jaccard
-# — but xxhash64 is not expressible in DuckDB SQL, so they are out of
-# the graded registry rather than registered rows-only.
+# dedup_minhash_lsh and dedup_simhash are GRADED through the
+# portable-hash pipelines at their own operating points (bands=16/
+# threshold=0.3 high-recall banding; Hamming<=2 tight duplicates —
+# distinct from the portable twins' bands=8/0.5 and Hamming<=4
+# above/below), each under a full generated value oracle.
 @query("dedup_minhash_lsh", oracle=_minhash_portable_oracle(32, 16, 0.3))
 def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash+LSH near-dup pairs at the HIGH-RECALL operating point:
@@ -529,19 +515,6 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup.minhash_lsh_pairs_portable(
         d, "text", "doc_id", k=3, num_hashes=32, bands=16, threshold=0.3
     )
-
-
-def dedup_minhash_lsh_xx64(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """BENCH-ONLY xxhash64 fast path (same banding math, JVM hash)."""
-    d = load_table(spark, sf_dir, "documents")
-    return dedup.minhash_lsh_pairs(d, "text", "doc_id", k=3, num_hashes=32, bands=8,
-                                   threshold=0.3)
-
-
-def dedup_simhash_xx64(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """BENCH-ONLY xxhash64 fast path (same banding math, JVM hash)."""
-    d = load_table(spark, sf_dir, "documents")
-    return dedup.simhash_near_pairs(d, "text", "doc_id", max_hamming=4)
 
 
 def _simhash_portable_oracle(max_hamming: int = 4) -> str:

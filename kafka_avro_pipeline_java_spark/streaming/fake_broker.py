@@ -52,6 +52,7 @@ from .kafka_wire import (
     ERR_OFFSET_OUT_OF_RANGE,
     ERR_TOPIC_ALREADY_EXISTS,
     ERR_UNKNOWN_TOPIC_OR_PARTITION,
+    ERR_UNSUPPORTED_VERSION,
     LATEST,
     SUPPORTED_APIS,
     _VERSION,
@@ -66,6 +67,11 @@ from .kafka_wire import (
 
 # magic-2 batch header: baseOffset..recordCount fixed-width fields.
 _V2_BATCH_HEADER = 61
+
+
+class RefusedRequest(ValueError):
+    """A request the broker does not serve (an unknown api_key, or a
+    version it does not advertise): the connection is closed."""
 
 
 class FakeKafkaBroker:
@@ -107,8 +113,9 @@ class FakeKafkaBroker:
                             self.request.sendall(
                                 broker._respond(frame, self._node)
                             )
-                    except (ConnectionError, EOFError, OSError):
-                        return
+                    except (ConnectionError, EOFError, OSError,
+                            RefusedRequest):
+                        return  # a refused request closes the connection
 
             srv = socketserver.ThreadingTCPServer((host, 0), _Handler)
             srv.daemon_threads = True
@@ -180,18 +187,25 @@ class FakeKafkaBroker:
             API_DELETE_TOPICS: self._delete_topics,
         }
         if api_key not in handlers:
-            raise ValueError(f"unsupported api_key {api_key}")
-        if api_version != _VERSION[api_key]:
-            raise ValueError(
+            raise RefusedRequest(f"unsupported api_key {api_key}")
+        if api_key == API_VERSIONS and api_version != _VERSION[api_key]:
+            # a real broker answers any ApiVersions version it does not
+            # speak with UNSUPPORTED_VERSION and its v0 body, so the
+            # client can pick a version from the list
+            body = self._api_versions(req, node_id, ERR_UNSUPPORTED_VERSION)
+        elif api_version != _VERSION[api_key]:
+            raise RefusedRequest(
                 f"unsupported version {api_version} of api_key {api_key}")
-        body = handlers[api_key](req, node_id)
+        else:
+            body = handlers[api_key](req, node_id)
         payload = ByteWriter().int32(corr).raw(body).build()
         return struct.pack(">i", len(payload)) + payload
 
-    def _api_versions(self, req: ByteReader, node: int) -> bytes:
+    def _api_versions(self, req: ByteReader, node: int,
+                      error: int = ERR_NONE) -> bytes:
         return (
             ByteWriter()
-            .int16(ERR_NONE)
+            .int16(error)
             .array(
                 SUPPORTED_APIS,
                 lambda w, a: w.int16(a[0]).int16(a[1]).int16(a[2]),

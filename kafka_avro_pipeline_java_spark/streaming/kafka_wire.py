@@ -56,6 +56,7 @@ ERR_NONE = 0
 ERR_OFFSET_OUT_OF_RANGE = 1
 ERR_UNKNOWN_TOPIC_OR_PARTITION = 3
 ERR_NOT_LEADER_FOR_PARTITION = 6
+ERR_UNSUPPORTED_VERSION = 35
 ERR_TOPIC_ALREADY_EXISTS = 36
 ERR_INVALID_PARTITIONS = 37
 

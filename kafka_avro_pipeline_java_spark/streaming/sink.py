@@ -17,11 +17,18 @@ takes a DB-API connection factory, so it works with any driver (MySQL at
 parity, sqlite in tests) without Spark-side changes, and executes on
 executors via ``foreachPartition`` — no data moves through the driver.
 
+Its tables are created once per sink, on the driver, before the first
+partition write. No DDL runs inside a partition transaction: MySQL
+commits implicitly before any ``CREATE TABLE`` (``IF NOT EXISTS``
+included), which would commit the rows ahead of their ledger row and let
+a replay after a crash write them twice.
+
 Offsets mirroring (the reference's ``kafka_offsets`` table):
 ``ExactlyOnceDbSink(offsets_cols=..., consumer_group=...)`` upserts each
 topic-partition's next offset (max(offset)+1, never moving backwards) in
 the same transaction as the rows; the table's DDL is
-``offsets_mirror_sql``. The checkpoint stays the source of truth.
+``schema_dsl.OFFSETS_TABLE_DDL``. The checkpoint stays the source of
+truth.
 """
 
 from __future__ import annotations
@@ -30,6 +37,8 @@ from collections.abc import Callable, Iterator
 from typing import Any
 
 from pyspark.sql import DataFrame
+
+from ..sources.schema_dsl import OFFSETS_TABLE_DDL
 
 
 # --------------------------------------------------------------------------
@@ -85,8 +94,23 @@ class ExactlyOnceDbSink:
         self.offsets_cols = offsets_cols
         self.consumer_group = consumer_group
         self.use_prepared = use_prepared
+        self._tables_created = False
         if offsets_cols is not None and consumer_group is None:
             raise ValueError("offsets_cols requires consumer_group")
+
+    def _create_tables(self) -> None:
+        """Create the ledger (and offsets) tables in their own
+        connection, outside every partition transaction."""
+        conn = self.connection_factory()
+        try:
+            cur = conn.cursor()
+            cur.execute(LEDGER_DDL)
+            if self.offsets_cols is not None:
+                cur.execute(OFFSETS_TABLE_DDL)
+            conn.commit()
+        finally:
+            conn.close()
+        self._tables_created = True
 
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
         factory, table, cols, ph = (
@@ -106,7 +130,6 @@ class ExactlyOnceDbSink:
             "offset) VALUES (?, ?, ?, ?) ON DUPLICATE KEY UPDATE "
             "offset = GREATEST(offset, VALUES(offset))"
         )
-        offsets_ddl = offsets_mirror_sql()
         if self.paramstyle == "format":
             offsets_upsert = (
                 f"INSERT INTO kafka_offsets (topic, partition, consumer_group, offset) "
@@ -140,7 +163,6 @@ class ExactlyOnceDbSink:
             conn = factory()
             try:
                 cur = conn.cursor()
-                cur.execute(LEDGER_DDL)
                 cur.execute(ledger_probe, (table, batch_id, pid))
                 if cur.fetchone() is not None:
                     return  # replayed partition — already committed
@@ -162,7 +184,6 @@ class ExactlyOnceDbSink:
                     for r in rows:
                         k = (r[tcol], r[pcol])
                         progress[k] = max(progress.get(k, -1), r[ocol])
-                    cur.execute(offsets_ddl)
                     offsets_rows = [
                         (t, p, group, o + 1) for (t, p), o in progress.items()
                     ]
@@ -181,18 +202,10 @@ class ExactlyOnceDbSink:
             finally:
                 conn.close()
 
+        if not self._tables_created:
+            self._create_tables()
         select_cols = list(cols)
         if offsets_cols is not None:
             select_cols += [c for c in offsets_cols if c not in select_cols]
         batch_df.select(*select_cols).foreachPartition(write_partition)
 
-
-def offsets_mirror_sql() -> str:
-    """DDL of the reference's ``kafka_offsets`` table, which mirrors
-    Structured Streaming progress (DataPipeline.java:152-158)."""
-    return (
-        "CREATE TABLE IF NOT EXISTS kafka_offsets ("
-        "topic VARCHAR(50) NOT NULL, partition INT NOT NULL, "
-        "consumer_group VARCHAR(50), offset BIGINT, "
-        "PRIMARY KEY (topic, partition, consumer_group))"
-    )

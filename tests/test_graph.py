@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 from kafka_avro_pipeline_java_spark.operators.graph import (
     degree_stats,
     pagerank,
+    personalized_pagerank,
     triangle_count,
     triangle_count_sampled,
 )
@@ -57,6 +58,31 @@ def test_pagerank_directed_keeps_in_edgeless_nodes(spark):
     assert set(ranks) == {0, 1, 2}  # 0 survives despite no in-edges
     assert ranks[0] == pytest.approx((1 - 0.85) / 3)
     assert abs(sum(ranks.values()) - 1.0) < 1e-9  # no mass lost
+
+
+def test_personalized_pagerank_seeding_every_node_is_pagerank(spark):
+    """With every node a seed, the restart vector is uniform, so the
+    personalized ranks are the global PageRank."""
+    e = _edges(spark, [(0, i) for i in range(1, 6)] + [(1, 2), (3, 4), (5, 6)])
+    nodes = list(range(7))
+    glob = {r.node: r.rank for r in pagerank(e, iters=4).collect()}
+    pers = {r.node: r.rank
+            for r in personalized_pagerank(e, nodes, iters=4).collect()}
+    assert set(pers) == set(glob)
+    assert all(abs(pers[v] - glob[v]) < 1e-12 for v in nodes)
+
+
+def test_personalized_pagerank_mass_stays_within_iters_hops(spark):
+    """On a path 0-1-...-9 seeded at 0, k iterations move mass at most k
+    hops: every node within ``iters`` hops holds mass, no node beyond
+    does, and the total stays 1."""
+    e = _edges(spark, [(i, i + 1) for i in range(9)])
+    iters = 3
+    ranks = {r.node: r.rank
+             for r in personalized_pagerank(e, [0], iters=iters).collect()}
+    assert len(ranks) == 10
+    assert {v for v, r in ranks.items() if r > 0} == set(range(iters + 1))
+    assert abs(sum(ranks.values()) - 1.0) < 1e-9
 
 
 def test_eigenvector_directed_keeps_in_edgeless_nodes(spark):

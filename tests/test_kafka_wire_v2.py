@@ -13,6 +13,7 @@ from kafka_avro_pipeline_java_spark.streaming.fake_broker import FakeKafkaBroker
 from kafka_avro_pipeline_java_spark.streaming.kafka_wire import (
     API_FETCH,
     API_PRODUCE,
+    API_VERSIONS,
     SUPPORTED_APIS,
     ByteWriter,
     KafkaCodecError,
@@ -21,6 +22,7 @@ from kafka_avro_pipeline_java_spark.streaming.kafka_wire import (
     ERR_NOT_LEADER_FOR_PARTITION,
     ERR_TOPIC_ALREADY_EXISTS,
     ERR_UNKNOWN_TOPIC_OR_PARTITION,
+    ERR_UNSUPPORTED_VERSION,
     KafkaClusterClient,
     KafkaProtocolError,
     KafkaWireClient,
@@ -178,6 +180,26 @@ def test_broker_below_produce_v3_or_fetch_v4_is_refused():
         frame = encode_request(API_FETCH, 2, 1, "old-client", b"")[4:]
         with pytest.raises(ValueError, match="unsupported version 2"):
             b._respond(frame, 0)
+
+
+def test_unadvertised_api_versions_request_gets_unsupported_version(broker):
+    """An ApiVersions request of a version the broker does not speak gets
+    error 35 (UNSUPPORTED_VERSION) with the v0 body listing what it does
+    speak, as a real broker answers it."""
+    with KafkaWireClient(broker.bootstrap) as c:
+        r = c._call(API_VERSIONS, 3, b"")
+        assert r.int16() == ERR_UNSUPPORTED_VERSION
+        rows = r.array(lambda b: (b.int16(), b.int16(), b.int16()))
+        assert rows == SUPPORTED_APIS
+
+
+def test_refused_request_closes_connection_quietly(broker, capfd):
+    """Any other refused request (here Fetch v2) closes the connection;
+    the broker prints no traceback."""
+    with KafkaWireClient(broker.bootstrap) as c:
+        with pytest.raises(ConnectionError):
+            c._call(API_FETCH, 2, b"")
+    assert capfd.readouterr().err == ""
 
 
 def test_fetch_max_bytes_exact_for_both_formats(broker):

@@ -68,7 +68,7 @@ def test_minhash_estimates_track_exact_jaccard(spark, sf_dir):
         for r in dedup.ngram_jaccard_pairs(d, "text", "doc_id", k=3, threshold=0.0
                                            ).collect()
     }
-    est = dedup.minhash_lsh_pairs(
+    est = dedup.minhash_lsh_pairs_portable(
         d, "text", "doc_id", k=3, num_hashes=64, bands=16, threshold=0.3
     ).collect()
     assert est, "MinHash-LSH found no candidate pairs"

@@ -166,6 +166,76 @@ def test_db_sink_atomic_offsets(spark, tmp_path):
     assert offs == {("dataset1", 0): 12, ("dataset1", 1): 6}
 
 
+def test_db_sink_runs_no_ddl_inside_a_partition_transaction(spark, tmp_path):
+    """MySQL commits implicitly before any CREATE TABLE, so DDL inside a
+    partition transaction would commit the rows ahead of their ledger
+    row. The connection below commits before every CREATE, as MySQL
+    does, and fails the first ledger insert: the failed batch must leave
+    no rows, and its retry must write each row exactly once."""
+    db = str(tmp_path / "sink4.db")
+    armed = str(tmp_path / "fail-first-ledger-insert")
+    open(armed, "w").close()
+    con = sqlite3.connect(db)
+    con.execute("CREATE TABLE dataset1 (key_field1 TEXT, timestamp_field1 INT)")
+    con.commit(); con.close()
+
+    def factory(path=db, armed=armed):
+        import os
+        import sqlite3 as sq
+
+        class MySQLLikeCursor:
+            def __init__(self, conn):
+                self._conn, self._cur = conn, conn.cursor()
+
+            def execute(self, sql, params=()):
+                if sql.lstrip().upper().startswith("CREATE"):
+                    self._conn.commit()  # MySQL's implicit commit
+                if sql.startswith("INSERT INTO stream_commits") and os.path.exists(armed):
+                    os.remove(armed)
+                    raise sq.OperationalError("crash before the ledger insert")
+                return self._cur.execute(sql, params)
+
+            def __getattr__(self, name):
+                return getattr(self._cur, name)
+
+        class MySQLLikeConnection:
+            def __init__(self):
+                self._conn = sq.connect(path, timeout=60)
+
+            def cursor(self):
+                return MySQLLikeCursor(self._conn)
+
+            def __getattr__(self, name):
+                return getattr(self._conn, name)
+
+        return MySQLLikeConnection()
+
+    sink = ExactlyOnceDbSink(
+        factory, "dataset1", ["key_field1", "timestamp_field1"],
+        offsets_cols=("topic", "partition", "offset"),
+        consumer_group="group-dataset1",
+    )
+    batch = spark.createDataFrame(
+        [("a", 1, "dataset1", 0, 10), ("b", 2, "dataset1", 0, 11),
+         ("c", 3, "dataset1", 1, 5)],
+        "key_field1 string, timestamp_field1 long, topic string, "
+        "partition int, offset long",
+    ).coalesce(1)
+
+    def n_rows():
+        con = sqlite3.connect(db)
+        try:
+            return con.execute("SELECT count(*) FROM dataset1").fetchone()[0]
+        finally:
+            con.close()
+
+    with pytest.raises(Exception):
+        sink(batch, batch_id=0)
+    assert n_rows() == 0
+    sink(batch, batch_id=0)  # the replay after the crash
+    assert n_rows() == 3
+
+
 def test_db_sink_rolls_back_on_failure(spark, tmp_path):
     """A failing partition write must leave neither rows nor ledger entry."""
     import sqlite3

@@ -10,19 +10,22 @@ def _one(spark, s: str, expr):
 
 def test_rolling_hash_is_order_sensitive(spark):
     """Same token multiset, different order → different hash (the property
-    that distinguishes rolling_hash from the md5 set-style fingerprint)."""
-    h_ab = _one(spark, "alpha beta gamma", T.rolling_hash)
-    h_ba = _one(spark, "gamma beta alpha", T.rolling_hash)
+    that distinguishes rolling_hash_portable from the md5 set-style
+    fingerprint)."""
+    h_ab = _one(spark, "alpha beta gamma", T.rolling_hash_portable)
+    h_ba = _one(spark, "gamma beta alpha", T.rolling_hash_portable)
     assert h_ab != h_ba
 
 
 def test_rolling_hash_deterministic_and_case_folded(spark):
-    assert _one(spark, "Alpha Beta", T.rolling_hash) == _one(spark, "alpha beta", T.rolling_hash)
-    assert _one(spark, "alpha beta", T.rolling_hash) == _one(spark, "alpha beta", T.rolling_hash)
+    h = T.rolling_hash_portable
+    assert _one(spark, "Alpha Beta", h) == _one(spark, "alpha beta", h)
+    assert _one(spark, "alpha beta", h) == _one(spark, "alpha beta", h)
 
 
 def test_rolling_hash_sensitive_to_extra_token(spark):
-    assert _one(spark, "alpha beta", T.rolling_hash) != _one(spark, "alpha beta beta", T.rolling_hash)
+    h = T.rolling_hash_portable
+    assert _one(spark, "alpha beta", h) != _one(spark, "alpha beta beta", h)
 
 
 def test_fingerprint_canonicalizes_whitespace_but_not_order(spark):
