@@ -359,19 +359,22 @@ def minhash_lsh_pairs_portable(
     )
 
 
-def _minhash_band_exprs(num_hashes: int, bands: int) -> list:
-    """Portable band-bucket expressions over mh_* signature columns: md5 of
-    the band's comma-joined minhash values (same combine as the DuckDB
-    oracle)."""
+def _band_str(num_hashes: int, bands: int, b: int, prefix: str = "mh_"):
+    """Band ``b``'s comma-joined minhash values over ``<prefix><i>``
+    signature columns (the string the DuckDB oracle hashes)."""
     rows_per_band = num_hashes // bands
+    return F.concat_ws(
+        ",",
+        *[F.col(f"{prefix}{b * rows_per_band + j}").cast("string")
+          for j in range(rows_per_band)],
+    )
+
+
+def _minhash_band_exprs(num_hashes: int, bands: int, prefix: str = "mh_") -> list:
+    """Portable band-bucket expressions: md5 of each band's string (same
+    combine as the DuckDB oracle)."""
     return [
-        F.md5(
-            F.concat_ws(
-                ",",
-                *[F.col(f"mh_{b * rows_per_band + j}").cast("string")
-                  for j in range(rows_per_band)],
-            ).cast("binary")
-        )
+        F.md5(_band_str(num_hashes, bands, b, prefix).cast("binary"))
         for b in range(bands)
     ]
 
@@ -414,7 +417,6 @@ def minhash_similarity_join(
     by B's bucket sizes anyway.
     """
     band_exprs = _minhash_band_exprs(num_hashes, bands)
-    rows_per_band = num_hashes // bands
     if broadcast_b:
         if max_doc_freq is None:
             sig_a = minhash_signatures_rowwise(df_a, text_col, id_col_a, k, num_hashes)
@@ -434,18 +436,9 @@ def minhash_similarity_join(
             sig_a, ["id"] + [f"mh_{i}" for i in range(num_hashes)], band_exprs,
             scale_guard="hashed-bands",
         )
-        band_exprs_b = [
-            F.md5(
-                F.concat_ws(
-                    ",",
-                    *[F.col(f"b_{b * rows_per_band + j}").cast("string")
-                      for j in range(rows_per_band)],
-                ).cast("binary")
-            )
-            for b in range(bands)
-        ]
         banded_b = banded_explode(
-            sig_b, ["id_b"] + [f"b_{i}" for i in range(num_hashes)], band_exprs_b,
+            sig_b, ["id_b"] + [f"b_{i}" for i in range(num_hashes)],
+            _minhash_band_exprs(num_hashes, bands, "b_"),
             scale_guard="hashed-bands",
         )
 
@@ -453,18 +446,12 @@ def minhash_similarity_join(
         # expression filter over the in-hand signatures (compare the raw
         # band strings; equal strings ⇔ equal md5 buckets), replacing the
         # distinct() exchange of the symmetric path
-        def _band_str(prefix: str, bb: int):
-            return F.concat_ws(
-                ",",
-                *[F.col(f"{prefix}{bb * rows_per_band + j}").cast("string")
-                  for j in range(rows_per_band)],
-            )
-
         lowest_band = F.lit(True)
         for bb in range(bands - 1):
             lowest_band = lowest_band & (
                 (F.col("a.band") <= bb)
-                | (_band_str("mh_", bb) != _band_str("b_", bb))
+                | (_band_str(num_hashes, bands, bb)
+                   != _band_str(num_hashes, bands, bb, "b_"))
             )
         matches = sum(
             F.when(F.col(f"mh_{i}") == F.col(f"b_{i}"), 1).otherwise(0)

@@ -7,7 +7,10 @@ from the public protocol docs), and executes statements against sqlite so
 transactions, rollbacks, and upserts behave for real. This is what lets
 reference ops #24–25 (dynamic INSERT + typed binding into MySQL,
 ``MySQLProcessData.java:94-156``) EXECUTE end-to-end over real sockets in
-a container with no MySQL and no JDBC driver.
+a container with no MySQL and no JDBC driver. Any other command (a
+server-side prepare, 0x16, included) gets error 1047 and the connection
+keeps serving. Each resultset column gets one type over all its rows
+(``_column_type``); BLOB and numeric columns carry charset 63 (binary).
 
 Dialect bridge (the server's analog of a test double's canned behavior —
 documented, bounded, and exercised by the parity tests):
@@ -44,23 +47,18 @@ import tempfile
 import threading
 
 from .mysql_wire import (
+    BINARY_CHARSET,
     COM_PING,
     COM_QUERY,
     COM_QUIT,
-    COM_STMT_CLOSE,
-    COM_STMT_EXECUTE,
-    COM_STMT_PREPARE,
     TYPE_BLOB,
     TYPE_DOUBLE,
     TYPE_LONGLONG,
-    TYPE_NULL,
-    TYPE_TINY,
     TYPE_VAR_STRING,
     PacketIO,
     lenenc_int,
     lenenc_str,
     native_password_scramble,
-    read_lenenc_str,
 )
 
 _ODKU_RE = re.compile(r"\s+ON\s+DUPLICATE\s+KEY\s+UPDATE\s+", re.IGNORECASE)
@@ -84,11 +82,41 @@ _EOF = b"\xfe\x00\x00\x02\x00"
 
 
 def _coldef(name: str, type_code: int) -> bytes:
+    # charset 63 (binary) on every non-string column, as MySQL sends it:
+    # the client returns bytes for a charset-63 BLOB, never decoded text
+    charset = 0x21 if type_code == TYPE_VAR_STRING else BINARY_CHARSET
     return (
         lenenc_str(b"def") + lenenc_str(b"") + lenenc_str(b"")
         + lenenc_str(b"") + lenenc_str(name.encode()) + lenenc_str(b"")
-        + b"\x0c" + struct.pack("<HIBHBxx", 0x21, 1024, type_code, 0, 0)
+        + b"\x0c" + struct.pack("<HIBHBxx", charset, 1024, type_code, 0, 0)
     )
+
+
+def _column_type(values) -> int:
+    """One wire type for a whole resultset column. sqlite types values,
+    not columns, so a column may hold an int and then a string; typing it
+    from its first value would make the client parse 'abc' as an integer
+    mid-resultset. Widening: int + float -> DOUBLE, any other mix ->
+    VAR_STRING, all NULL -> VAR_STRING."""
+    t = None
+    for v in values:
+        if v is None:
+            continue
+        if isinstance(v, int):  # bool included
+            vt = TYPE_LONGLONG
+        elif isinstance(v, float):
+            vt = TYPE_DOUBLE
+        elif isinstance(v, bytes):
+            vt = TYPE_BLOB
+        else:
+            vt = TYPE_VAR_STRING
+        if t is None or t == vt:
+            t = vt
+        elif {t, vt} == {TYPE_LONGLONG, TYPE_DOUBLE}:
+            t = TYPE_DOUBLE
+        else:
+            return TYPE_VAR_STRING
+    return TYPE_VAR_STRING if t is None else t
 
 
 class FakeMySQLServer:
@@ -166,8 +194,6 @@ class FakeMySQLServer:
         db = sqlite3.connect(self.db_path, timeout=30,
                              check_same_thread=False, isolation_level=None)
         db.execute("PRAGMA busy_timeout=30000")
-        stmts: dict[int, str] = {}  # per-connection prepared statements
-        next_stmt_id = [1]
         try:
             if not self._auth(io):
                 return
@@ -180,17 +206,6 @@ class FakeMySQLServer:
                     return
                 if payload[0] == COM_PING:
                     io.write_packet(_ok_packet())
-                    continue
-                if payload[0] == COM_STMT_PREPARE:
-                    self._stmt_prepare(io, stmts, next_stmt_id,
-                                       payload[1:].decode("utf-8", "replace"))
-                    continue
-                if payload[0] == COM_STMT_EXECUTE:
-                    self._stmt_execute(io, db, stmts, payload)
-                    continue
-                if payload[0] == COM_STMT_CLOSE:
-                    # fire-and-forget per spec: deallocate, no response
-                    stmts.pop(struct.unpack_from("<I", payload, 1)[0], None)
                     continue
                 if payload[0] != COM_QUERY:
                     io.write_packet(_err_packet(1047, "unsupported command"))
@@ -234,156 +249,6 @@ class FakeMySQLServer:
         io.write_packet(_ok_packet())
         return True
 
-    # --- binary (prepared-statement) protocol -------------------------
-    # Server simplification (documented): COM_STMT_PREPARE_OK advertises
-    # num_columns=0 even for SELECTs — sqlite cannot describe a resultset
-    # without executing, and the protocol-correct client reads the real
-    # column definitions from the EXECUTE response anyway. Placeholders
-    # are MySQL's `?`, which is also sqlite's paramstyle, so the decoded
-    # binary values bind straight through.
-    def _stmt_prepare(self, io: PacketIO, stmts: dict, next_id: list,
-                      sql: str) -> None:
-        nparams = sql.count("?")
-        stmt_id = next_id[0]
-        next_id[0] += 1
-        stmts[stmt_id] = {"sql": sql, "types": None}
-        io.write_packet(
-            b"\x00" + struct.pack("<IHH", stmt_id, 0, nparams)
-            + b"\x00" + struct.pack("<H", 0)
-        )
-        if nparams:
-            for _ in range(nparams):
-                io.write_packet(_coldef("?", TYPE_NULL))
-            io.write_packet(_EOF)
-
-    def _stmt_execute(self, io: PacketIO, db: sqlite3.Connection,
-                      stmts: dict, payload: bytes) -> None:
-        stmt_id = struct.unpack_from("<I", payload, 1)[0]
-        stmt = stmts.get(stmt_id)
-        if stmt is None:
-            io.write_packet(_err_packet(1243, f"unknown stmt {stmt_id}"))
-            return
-        sql = stmt["sql"]
-        nparams = sql.count("?")
-        pos = 10  # cmd(1) + stmt_id(4) + flags(1) + iteration_count(4)
-        params: list = []
-        if nparams:
-            bitmap_len = (nparams + 7) // 8
-            null_bitmap = payload[pos:pos + bitmap_len]
-            pos += bitmap_len
-            new_bound = payload[pos]
-            pos += 1
-            types = []
-            if new_bound:
-                for _ in range(nparams):
-                    types.append(payload[pos])
-                    pos += 2  # type + unsigned flag
-                stmt["types"] = types
-            else:  # new_params_bound_flag=0: reuse previously bound types
-                types = stmt["types"]
-                if types is None:
-                    io.write_packet(_err_packet(
-                        1210, "no parameter types bound for statement"))
-                    return
-            for i in range(nparams):
-                if null_bitmap[i // 8] & (1 << (i % 8)):
-                    params.append(None)
-                    continue
-                t = types[i]
-                if t == TYPE_TINY:
-                    params.append(
-                        struct.unpack_from("<b", payload, pos)[0])
-                    pos += 1
-                elif t == TYPE_LONGLONG:
-                    params.append(
-                        struct.unpack_from("<q", payload, pos)[0])
-                    pos += 8
-                elif t == TYPE_DOUBLE:
-                    params.append(
-                        struct.unpack_from("<d", payload, pos)[0])
-                    pos += 8
-                else:  # VAR_STRING / BLOB: length-encoded bytes
-                    raw, pos = read_lenenc_str(payload, pos)
-                    params.append(
-                        bytes(raw) if t == TYPE_BLOB else raw.decode())
-        try:
-            if not db.in_transaction:
-                db.execute("BEGIN IMMEDIATE")  # same autocommit=0 shape
-            cur = db.execute(self._to_sqlite(db, sql.strip().rstrip(";")),
-                             params)
-        except (sqlite3.Error, ValueError) as e:
-            io.write_packet(_err_packet(1064, str(e)))
-            return
-        if cur.description is None:
-            io.write_packet(_ok_packet(max(cur.rowcount, 0)))
-            return
-        rows = cur.fetchall()
-        names = [d[0] for d in cur.description]
-        # Infer each column's binary type over ALL rows, not the first
-        # non-null: sqlite's dynamic typing lets a later row hold a value
-        # the first row's type can't pack (int column, then a string),
-        # which would raise mid-resultset AFTER packets were written and
-        # wedge the connection. Widening rules keep the wire format
-        # self-consistent: int+float -> DOUBLE, any other mix -> string.
-        types = []
-        for i in range(len(names)):
-            t = None
-            for r in rows:
-                v = r[i]
-                if v is None:
-                    continue
-                if isinstance(v, (bool, int)):
-                    vt = TYPE_LONGLONG
-                elif isinstance(v, float):
-                    vt = TYPE_DOUBLE
-                elif isinstance(v, bytes):
-                    vt = TYPE_BLOB
-                else:
-                    vt = TYPE_VAR_STRING
-                if t is None or t == vt:
-                    t = vt
-                elif {t, vt} == {TYPE_LONGLONG, TYPE_DOUBLE}:
-                    t = TYPE_DOUBLE
-                else:
-                    t = TYPE_VAR_STRING
-                    break
-            types.append(TYPE_VAR_STRING if t is None else t)
-        io.write_packet(lenenc_int(len(names)))
-        for name, t in zip(names, types):
-            io.write_packet(_coldef(name, t))
-        io.write_packet(_EOF)
-        for r in rows:
-            ncols = len(names)
-            bitmap = bytearray((ncols + 7 + 2) // 8)
-            body = b""
-            for i, (v, t) in enumerate(zip(r, types)):
-                if v is None:
-                    bit = i + 2
-                    bitmap[bit // 8] |= 1 << (bit % 8)
-                    continue
-                if t == TYPE_LONGLONG:
-                    body += struct.pack("<q", int(v))
-                elif t == TYPE_DOUBLE:
-                    body += struct.pack("<d", float(v))
-                elif t == TYPE_BLOB:
-                    body += lenenc_str(bytes(v))
-                elif isinstance(v, bytes):
-                    body += lenenc_str(v)
-                elif isinstance(v, bool):
-                    # a type-widened (mixed) column renders non-strings as
-                    # MySQL would: BOOL is TINYINT(1), so 1/0 — Python's
-                    # str() would leak 'True'/'False' spellings
-                    body += lenenc_str(b"1" if v else b"0")
-                elif isinstance(v, float):
-                    # shortest round-trip decimal, like MySQL's DOUBLE
-                    # text rendering ('1e+16'-style exponents excepted,
-                    # which these ETL ledgers never reach)
-                    body += lenenc_str(repr(v).encode())
-                else:
-                    body += lenenc_str(str(v).encode())
-            io.write_packet(b"\x00" + bytes(bitmap) + body)
-        io.write_packet(_EOF)
-
     # --- SQL execution ---
     def _run_query(self, io: PacketIO, db: sqlite3.Connection,
                    sql: str) -> None:
@@ -423,19 +288,7 @@ class FakeMySQLServer:
             return
         rows = cur.fetchall()
         names = [d[0] for d in cur.description]
-        types = []
-        for i in range(len(names)):
-            t = TYPE_VAR_STRING
-            for r in rows:
-                v = r[i]
-                if v is None:
-                    continue
-                if isinstance(v, bool) or isinstance(v, int):
-                    t = TYPE_LONGLONG
-                elif isinstance(v, float):
-                    t = TYPE_DOUBLE
-                break
-            types.append(t)
+        types = [_column_type(r[i] for r in rows) for i in range(len(names))]
         io.write_packet(lenenc_int(len(names)))
         for name, t in zip(names, types):
             io.write_packet(_coldef(name, t))

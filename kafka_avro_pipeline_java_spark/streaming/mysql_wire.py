@@ -13,21 +13,22 @@ repo an EXECUTED MySQL path over real TCP sockets:
   executemany / fetchall / commit / rollback) speaking the text protocol.
   It plugs directly into ``streaming/sink.py::ExactlyOnceDbSink`` with
   ``paramstyle="format"`` — the sink neither knows nor cares that the
-  driver underneath is 500 lines of stdlib.
+  driver underneath is stdlib only.
 - ``streaming/fake_mysql.py`` — the in-process protocol-faithful server
   (sqlite-backed) the tests run this client against, mirroring
   ``fake_broker.py``.
 
-Scope (documented, not hidden): COM_QUERY text protocol (parameters bound
-client-side with full literal escaping — mysql-connector's non-prepared
-mode) AND the binary prepared-statement protocol — COM_STMT_PREPARE /
-COM_STMT_EXECUTE / COM_STMT_CLOSE with typed binary values + null bitmap
-(``PreparedStatement`` below) — which is the reference's ACTUAL
-``PreparedStatement`` + ``setInt``/``setLong``/``setDouble``/``setString``
-mechanism (MySQLProcessData.java:110-125,132-156). ``mysql_native_password``
-auth (+ auth-switch), no TLS, no multi-resultsets. That covers everything
-the reference's SQL surface uses: CREATE TABLE / INSERT / upsert / SELECT /
-BEGIN / COMMIT / ROLLBACK.
+Scope (documented, not hidden): the COM_QUERY text protocol only.
+Parameters are bound client-side with full literal escaping
+(mysql-connector's non-prepared mode); the reference's typed
+``setInt``/``setLong``/``setDouble``/``setString`` binding
+(MySQLProcessData.java:110-125,132-156) becomes typed literals. Text
+resultsets decode INT types to ``int``, DOUBLE/DECIMAL to ``float``,
+charset-63 (binary) columns to ``bytes`` and the rest to ``str``.
+``mysql_native_password`` auth (+ auth-switch), no TLS, no
+multi-resultsets, no server-side prepared statements. That covers
+everything the reference's SQL surface uses: CREATE TABLE / INSERT /
+upsert / SELECT / BEGIN / COMMIT / ROLLBACK.
 
 100 TB shape: connections are made per PARTITION TASK inside
 ``foreachPartition`` (the sink's contract) — 1,000 executors open 1,000
@@ -57,17 +58,14 @@ CLIENT_PLUGIN_AUTH = 0x00080000
 COM_QUIT = 0x01
 COM_QUERY = 0x03
 COM_PING = 0x0E
-COM_STMT_PREPARE = 0x16
-COM_STMT_EXECUTE = 0x17
-COM_STMT_CLOSE = 0x19
 
-# column type codes (a subset; everything else decodes as str)
+# column type codes (a subset; everything else decodes as str, or as
+# bytes in a BINARY_CHARSET column)
 TYPE_TINY = 0x01
 TYPE_SHORT = 0x02
 TYPE_LONG = 0x03
 TYPE_FLOAT = 0x04
 TYPE_DOUBLE = 0x05
-TYPE_NULL = 0x06
 TYPE_LONGLONG = 0x08
 TYPE_INT24 = 0x09
 TYPE_NEWDECIMAL = 0xF6
@@ -77,6 +75,10 @@ TYPE_STRING = 0xFE
 
 _INT_TYPES = {TYPE_TINY, TYPE_SHORT, TYPE_LONG, TYPE_LONGLONG, TYPE_INT24}
 _FLOAT_TYPES = {TYPE_FLOAT, TYPE_DOUBLE, TYPE_NEWDECIMAL}
+
+# column-definition charset of binary data (BLOB, VARBINARY; MySQL also
+# tags numeric columns with it)
+BINARY_CHARSET = 63
 
 
 # --- primitives ------------------------------------------------------------
@@ -213,165 +215,6 @@ def _parse_ok(payload: bytes) -> tuple[int, int]:
     affected, pos = read_lenenc_int(payload, pos)
     last_id, pos = read_lenenc_int(payload, pos)
     return affected, last_id
-
-
-# --- binary (prepared-statement) protocol helpers --------------------------
-def _bin_encode_param(v) -> tuple[int, bytes]:
-    """→ (column type code, binary value bytes) per the binary protocol's
-    value encoding: LONGLONG = 8B LE signed, DOUBLE = 8B IEEE-754,
-    strings/bytes = length-encoded. NULL is signalled via the null bitmap,
-    so it encodes zero bytes with TYPE_NULL."""
-    if v is None:
-        return TYPE_NULL, b""
-    if isinstance(v, bool):
-        return TYPE_TINY, bytes([1 if v else 0])
-    if isinstance(v, int):
-        return TYPE_LONGLONG, struct.pack("<q", v)
-    if isinstance(v, float):
-        if v != v or v in (float("inf"), float("-inf")):
-            raise ValueError(
-                f"non-finite float {v!r} is not bindable as a MySQL DOUBLE"
-            )
-        return TYPE_DOUBLE, struct.pack("<d", v)
-    if isinstance(v, (bytes, bytearray)):
-        return TYPE_BLOB, lenenc_str(bytes(v))
-    return TYPE_VAR_STRING, lenenc_str(str(v).encode())
-
-
-def _bin_decode_value(payload: bytes, pos: int, type_code: int):
-    """Decode one non-NULL binary-row value → (python value, new pos)."""
-    if type_code == TYPE_TINY:
-        return struct.unpack_from("<b", payload, pos)[0], pos + 1
-    if type_code == TYPE_SHORT:
-        return struct.unpack_from("<h", payload, pos)[0], pos + 2
-    if type_code in (TYPE_LONG, TYPE_INT24):
-        return struct.unpack_from("<i", payload, pos)[0], pos + 4
-    if type_code == TYPE_LONGLONG:
-        return struct.unpack_from("<q", payload, pos)[0], pos + 8
-    if type_code == TYPE_FLOAT:
-        return struct.unpack_from("<f", payload, pos)[0], pos + 4
-    if type_code == TYPE_DOUBLE:
-        return struct.unpack_from("<d", payload, pos)[0], pos + 8
-    raw, pos = read_lenenc_str(payload, pos)
-    if type_code == TYPE_NEWDECIMAL:
-        return float(raw), pos
-    if type_code == TYPE_BLOB:
-        return raw, pos
-    return raw.decode("utf-8", "replace"), pos
-
-
-class PreparedStatement:
-    """Server-side prepared statement over the BINARY protocol
-    (COM_STMT_PREPARE / COM_STMT_EXECUTE / COM_STMT_CLOSE) — the actual
-    mechanism behind the reference's ``PreparedStatement`` + typed
-    ``setInt``/``setLong``/``setDouble``/``setString`` binding
-    (MySQLProcessData.java:110-125,132-156): parameters travel as TYPED
-    BINARY VALUES in the execute packet (8-byte little-endian longs, IEEE
-    doubles, length-encoded strings + a null bitmap), never as SQL text —
-    no escaping, no literal parsing, one parse per statement shape.
-
-    Usage (mirrors mysql-connector's cursor.prepare round trip)::
-
-        ps = conn.prepare("INSERT INTO t (a, b) VALUES (?, ?)")
-        ps.execute((1, "x"))      # → (affected, lastrowid) or rows
-        ps.close()
-    """
-
-    def __init__(self, conn: "MySQLWireConnection", sql: str):
-        self._conn = conn
-        io = conn._io
-        io.reset_seq()
-        io.write_packet(bytes([COM_STMT_PREPARE]) + sql.encode())
-        payload = io.read_packet()
-        if payload[:1] == b"\xff":
-            raise _parse_err(payload)
-        if payload[:1] != b"\x00":
-            raise MySQLError(-1, "malformed COM_STMT_PREPARE_OK")
-        self.statement_id = struct.unpack_from("<I", payload, 1)[0]
-        self.num_columns = struct.unpack_from("<H", payload, 5)[0]
-        self.num_params = struct.unpack_from("<H", payload, 7)[0]
-        # parameter-definition packets + EOF, column definitions + EOF
-        for n in (self.num_params, self.num_columns):
-            if n:
-                for _ in range(n):
-                    io.read_packet()
-                conn._expect_eof()
-        self._closed = False
-
-    def execute(self, params=()):
-        """→ (affected_rows, last_insert_id) for DML, or
-        (column names, rows) for a resultset, decoded from BINARY rows."""
-        if self._closed:
-            raise MySQLError(-1, "statement already closed")
-        params = tuple(params)
-        if len(params) != self.num_params:
-            raise ValueError(
-                f"{self.num_params} parameters expected, {len(params)} given"
-            )
-        io = self._conn._io
-        body = bytes([COM_STMT_EXECUTE]) + struct.pack(
-            "<IBI", self.statement_id, 0, 1  # flags=0, iteration_count=1
-        )
-        if params:
-            null_bitmap = bytearray((len(params) + 7) // 8)
-            types, values = b"", b""
-            for i, v in enumerate(params):
-                t, enc = _bin_encode_param(v)
-                if v is None:
-                    null_bitmap[i // 8] |= 1 << (i % 8)
-                types += struct.pack("<BB", t, 0)  # type, unsigned flag
-                values += enc
-            body += bytes(null_bitmap) + b"\x01" + types + values
-        io.reset_seq()
-        io.write_packet(body)
-        payload = io.read_packet()
-        if payload[:1] == b"\xff":
-            raise _parse_err(payload)
-        if payload[:1] == b"\x00" and len(payload) >= 7:
-            return _parse_ok(payload)
-        # binary resultset
-        ncols, _ = read_lenenc_int(payload, 0)
-        cols = []
-        for _ in range(ncols):
-            cdef = io.read_packet()
-            pos = 0
-            for _ in range(4):
-                _, pos = read_lenenc_str(cdef, pos)
-            name, pos = read_lenenc_str(cdef, pos)
-            _, pos = read_lenenc_str(cdef, pos)
-            pos += 1 + 2 + 4
-            cols.append((name.decode(), cdef[pos]))
-        self._conn._expect_eof()
-        rows = []
-        while True:
-            payload = io.read_packet()
-            if payload[:1] == b"\xfe" and len(payload) < 9:
-                break
-            if payload[:1] == b"\xff":
-                raise _parse_err(payload)
-            # binary row: 0x00 header, null bitmap with a 2-bit offset
-            bitmap_len = (ncols + 7 + 2) // 8
-            bitmap = payload[1:1 + bitmap_len]
-            pos, vals = 1 + bitmap_len, []
-            for i, (_, type_code) in enumerate(cols):
-                bit = i + 2
-                if bitmap[bit // 8] & (1 << (bit % 8)):
-                    vals.append(None)
-                    continue
-                v, pos = _bin_decode_value(payload, pos, type_code)
-                vals.append(v)
-            rows.append(tuple(vals))
-        return [c[0] for c in cols], rows
-
-    def close(self) -> None:
-        if not self._closed:
-            self._closed = True
-            io = self._conn._io
-            io.reset_seq()
-            # COM_STMT_CLOSE is fire-and-forget: no server response
-            io.write_packet(
-                bytes([COM_STMT_CLOSE]) + struct.pack("<I", self.statement_id)
-            )
 
 
 # --- DB-API subset ----------------------------------------------------------
@@ -553,7 +396,7 @@ class MySQLWireConnection:
             affected, _ = _parse_ok(payload)
             return None, None, affected
         ncols, _ = read_lenenc_int(payload, 0)
-        cols = []
+        cols, binary = [], []
         for _ in range(ncols):
             cdef = self._io.read_packet()
             pos = 0
@@ -561,9 +404,10 @@ class MySQLWireConnection:
                 _, pos = read_lenenc_str(cdef, pos)
             name, pos = read_lenenc_str(cdef, pos)
             _, pos = read_lenenc_str(cdef, pos)  # org_name
-            pos += 1 + 2 + 4  # fixed-len marker, charset, column length
-            type_code = cdef[pos]
+            charset = struct.unpack_from("<H", cdef, pos + 1)[0]
+            type_code = cdef[pos + 1 + 2 + 4]  # after marker, charset, length
             cols.append((name.decode(), type_code))
+            binary.append(charset == BINARY_CHARSET)
         self._expect_eof()
         rows = []
         while True:
@@ -573,7 +417,7 @@ class MySQLWireConnection:
             if payload[:1] == b"\xff":
                 raise _parse_err(payload)
             pos, vals = 0, []
-            for _, type_code in cols:
+            for (_, type_code), is_binary in zip(cols, binary):
                 if payload[pos] == 0xFB:  # NULL
                     vals.append(None)
                     pos += 1
@@ -583,6 +427,8 @@ class MySQLWireConnection:
                     vals.append(int(raw))
                 elif type_code in _FLOAT_TYPES:
                     vals.append(float(raw))
+                elif is_binary:  # BLOB/VARBINARY: bytes, as connectors do
+                    vals.append(raw)
                 else:
                     vals.append(raw.decode("utf-8", "replace"))
             rows.append(tuple(vals))
@@ -596,10 +442,6 @@ class MySQLWireConnection:
     # --- DB-API surface ---
     def cursor(self) -> MySQLWireCursor:
         return MySQLWireCursor(self)
-
-    def prepare(self, sql: str) -> PreparedStatement:
-        """Server-side prepare over the binary protocol (``?`` params)."""
-        return PreparedStatement(self, sql)
 
     def commit(self) -> None:
         self._query("COMMIT")

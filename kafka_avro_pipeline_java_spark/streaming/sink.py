@@ -68,24 +68,13 @@ class ExactlyOnceDbSink:
         paramstyle: str = "qmark",  # qmark '?' (sqlite) | format '%s' (mysql)
         offsets_cols: tuple[str, str, str] | None = None,
         consumer_group: str | None = None,
-        use_prepared: bool = False,
     ) -> None:
         """With ``offsets_cols=(topic, partition, offset)`` naming Kafka
         metadata columns present in the batch, each partition transaction
         ALSO upserts max(offset)+1 per (topic, partition) into
         ``kafka_offsets`` — data and offsets commit atomically, the exact
         shape of the reference's per-record transaction
-        (AvroConsumer.java:157-194) at partition granularity.
-
-        ``use_prepared=True`` binds rows through server-side prepared
-        statements when the connection supports ``.prepare`` (the
-        mysql_wire binary protocol — COM_STMT_PREPARE once per partition
-        transaction, COM_STMT_EXECUTE per row with typed binary values),
-        which is the reference's ACTUAL PreparedStatement + setX binding
-        mechanism (MySQLProcessData.java:110-125,132-156) rather than the
-        multi-row text INSERT; DDL/ledger statements stay on the text
-        path, as the reference's Statement usage does. Falls back to the
-        text path on drivers without ``.prepare``."""
+        (AvroConsumer.java:157-194) at partition granularity."""
         self.connection_factory = connection_factory
         self.table = table
         self.columns = list(columns)
@@ -93,7 +82,6 @@ class ExactlyOnceDbSink:
         self.paramstyle = paramstyle
         self.offsets_cols = offsets_cols
         self.consumer_group = consumer_group
-        self.use_prepared = use_prepared
         self._tables_created = False
         if offsets_cols is not None and consumer_group is None:
             raise ValueError("offsets_cols requires consumer_group")
@@ -120,16 +108,6 @@ class ExactlyOnceDbSink:
             self.placeholder,
         )
         offsets_cols, group = self.offsets_cols, self.consumer_group
-        use_prepared = self.use_prepared
-        insert_qmark = (
-            f"INSERT INTO {table} ({', '.join(cols)}) "
-            f"VALUES ({', '.join(['?'] * len(cols))})"
-        )
-        offsets_upsert_qmark = (
-            "INSERT INTO kafka_offsets (topic, partition, consumer_group, "
-            "offset) VALUES (?, ?, ?, ?) ON DUPLICATE KEY UPDATE "
-            "offset = GREATEST(offset, VALUES(offset))"
-        )
         if self.paramstyle == "format":
             offsets_upsert = (
                 f"INSERT INTO kafka_offsets (topic, partition, consumer_group, offset) "
@@ -168,16 +146,7 @@ class ExactlyOnceDbSink:
                     return  # replayed partition — already committed
                 rows = list(rows)
                 data = [tuple(r[c] for c in cols) for r in rows]
-                prepared = use_prepared and hasattr(conn, "prepare")
-                if prepared:
-                    # reference parity: prepare once, typed-bind per row
-                    # over the binary protocol (MySQLProcessData.java:110)
-                    ps = conn.prepare(insert_qmark)
-                    for row in data:
-                        ps.execute(row)
-                    ps.close()
-                else:
-                    cur.executemany(insert_sql, data)
+                cur.executemany(insert_sql, data)
                 if offsets_cols is not None and rows:
                     tcol, pcol, ocol = offsets_cols
                     progress: dict[tuple, int] = {}
@@ -187,13 +156,7 @@ class ExactlyOnceDbSink:
                     offsets_rows = [
                         (t, p, group, o + 1) for (t, p), o in progress.items()
                     ]
-                    if prepared:
-                        ps = conn.prepare(offsets_upsert_qmark)
-                        for row in offsets_rows:
-                            ps.execute(row)
-                        ps.close()
-                    else:
-                        cur.executemany(offsets_upsert, offsets_rows)
+                    cur.executemany(offsets_upsert, offsets_rows)
                 cur.execute(ledger_insert, (table, batch_id, pid, len(data)))
                 conn.commit()  # rows + offsets + ledger commit atomically
             except Exception:

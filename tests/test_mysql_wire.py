@@ -84,6 +84,66 @@ def test_query_round_trip_types_and_nulls():
         ]
         assert [d[0] for d in cur.description] == ["id", "name", "score"]
         assert isinstance(rows[0][0], int) and isinstance(rows[0][2], float)
+        # extreme long, last-bit double, quote/backslash/newline text, a
+        # BLOB (bytes back, not decoded text), a boolean, a NULL
+        cur.execute(
+            "CREATE TABLE typed (i BIGINT, d DOUBLE, s VARCHAR(255), "
+            "b BLOB, t BOOLEAN, n VARCHAR(10))"
+        )
+        cur.execute(
+            "INSERT INTO typed (i, d, s, b, t, n) "
+            "VALUES (%s, %s, %s, %s, %s, %s)",
+            (-(2**62), 1.0000000000000002, "quo'te\\raw\nnl",
+             b"\x00\xff\xfe", True, None),
+        )
+        conn.commit()
+        cur.execute("SELECT i, d, s, b, t, n FROM typed")
+        assert [d[0] for d in cur.description] == ["i", "d", "s", "b", "t", "n"]
+        i, d, s, b, t, n = cur.fetchone()
+        assert i == -(2**62)
+        assert d == 1.0000000000000002
+        assert s == "quo'te\\raw\nnl"
+        assert b == b"\x00\xff\xfe"
+        assert t == 1
+        assert n is None
+        conn.close()
+
+
+def test_mixed_type_column_reads_back_and_connection_survives():
+    # sqlite types values, not columns: an untyped column can hold an int,
+    # a string and a double. The resultset must carry ONE column type that
+    # every row fits, so the read neither fails mid-resultset nor leaves
+    # unread packets that break the next statement.
+    with FakeMySQLServer() as srv:
+        conn = mysql_wire.connect("127.0.0.1", srv.port, "root", "")
+        cur = conn.cursor()
+        cur.execute("CREATE TABLE mixed (id BIGINT, v)")
+        cur.executemany(
+            "INSERT INTO mixed (id, v) VALUES (%s, %s)",
+            [(1, 1), (2, "abc"), (3, 2.5), (4, None)],
+        )
+        cur.execute("SELECT v FROM mixed ORDER BY id")
+        assert cur.fetchall() == [("1",), ("abc",), ("2.5",), (None,)]
+        cur.execute("SELECT v FROM mixed WHERE id IN (1, 3) ORDER BY id")
+        assert cur.fetchall() == [(1.0,), (2.5,)]  # int + double -> DOUBLE
+        cur.execute("SELECT 1")
+        assert cur.fetchone() == (1,)
+        conn.close()
+
+
+def test_prepare_command_is_refused_and_connection_keeps_serving():
+    # rows travel only as text-protocol COM_QUERY; a server-side prepare
+    # (command byte 0x16) gets "unsupported command" like any other
+    with FakeMySQLServer() as srv:
+        conn = mysql_wire.connect("127.0.0.1", srv.port, "root", "")
+        conn._io.reset_seq()
+        conn._io.write_packet(b"\x16SELECT 1")
+        payload = conn._io.read_packet()
+        assert payload[:1] == b"\xff"
+        assert mysql_wire._parse_err(payload).code == 1047
+        cur = conn.cursor()
+        cur.execute("SELECT 1")
+        assert cur.fetchone() == (1,)
         conn.close()
 
 
@@ -209,8 +269,8 @@ def test_exactly_once_sink_against_wire_mysql(spark, tmp_path):
         setup = mysql_wire.connect(host, port, "root", "pw")
         setup.cursor().execute(
             "CREATE TABLE dataset1 (k VARCHAR(20), ts BIGINT, "
-            "payload VARCHAR(50), num BIGINT, topic VARCHAR(20), "
-            "partition INT, offset BIGINT)"
+            "payload VARCHAR(50), num BIGINT, score DOUBLE, "
+            "topic VARCHAR(20), partition INT, offset BIGINT)"
         )
         setup.commit()
         setup.close()
@@ -226,18 +286,18 @@ def test_exactly_once_sink_against_wire_mysql(spark, tmp_path):
         sink = ExactlyOnceDbSink(
             factory,
             "dataset1",
-            ["k", "ts", "payload", "num"],
+            ["k", "ts", "payload", "num", "score"],
             paramstyle="format",
             offsets_cols=("topic", "partition", "offset"),
             consumer_group="g1",
         )
         rows = [
-            (f"k{i}", 1000 + i, f"p{i}", i, "dataset1", i % 3, i)
+            (f"k{i}", 1000 + i, f"p{i}", i, i + 0.25, "dataset1", i % 3, i)
             for i in range(30)
         ]
         df = spark.createDataFrame(
             rows, "k string, ts long, payload string, num long, "
-                  "topic string, partition int, offset long"
+                  "score double, topic string, partition int, offset long"
         ).repartition(4)
         sink(df, batch_id=7)
         sink(df, batch_id=7)  # replay: ledger rows must make this a no-op
@@ -246,160 +306,19 @@ def test_exactly_once_sink_against_wire_mysql(spark, tmp_path):
         cur = check.cursor()
         cur.execute("SELECT COUNT(*) FROM dataset1")
         assert cur.fetchone() == (30,)  # no duplicates after replay
+        cur.execute("SELECT score FROM dataset1 WHERE k = 'k3'")
+        assert cur.fetchone() == (3.25,)  # DOUBLE column round trip
         cur.execute(
             "SELECT partition, offset FROM kafka_offsets "
             "WHERE consumer_group = 'g1' ORDER BY partition"
         )
         # next-offset convention: max(offset)+1 per partition
         expect = {}
-        for _, _, _, _, _, p, o in rows:
+        for *_, p, o in rows:
             expect[p] = max(expect.get(p, -1), o + 1)
         assert dict(cur.fetchall()) == expect
         cur.execute("SELECT COUNT(*) FROM stream_commits")
         assert cur.fetchone()[0] == df.rdd.getNumPartitions()
-        check.close()
-    finally:
-        srv.close()
-
-
-# --------------------------------------------- binary (prepared) protocol
-def test_prepared_statement_typed_round_trip():
-    # COM_STMT_PREPARE/EXECUTE with typed binary binding — the reference's
-    # actual PreparedStatement mechanism (MySQLProcessData.java:110-156):
-    # longs as 8B LE, doubles as IEEE-754, strings length-encoded, NULLs
-    # in the null bitmap. Values must survive bit-exact, no text escaping
-    # anywhere on the path.
-    with FakeMySQLServer() as srv:
-        conn = mysql_wire.connect("127.0.0.1", srv.port, "root", "")
-        cur = conn.cursor()
-        cur.execute(
-            "CREATE TABLE typed (i BIGINT, d DOUBLE, s VARCHAR(255), "
-            "b BLOB, t BOOLEAN, n VARCHAR(10))"
-        )
-        ps = conn.prepare(
-            "INSERT INTO typed (i, d, s, b, t, n) VALUES (?, ?, ?, ?, ?, ?)"
-        )
-        assert ps.num_params == 6
-        affected, _ = ps.execute(
-            (-(2**62), 1.0000000000000002, "quo'te\\raw\nnl",
-             b"\x00\xff\xfe", True, None)
-        )
-        assert affected == 1
-        ps.close()
-        conn.commit()
-        sel = conn.prepare("SELECT i, d, s, b, t, n FROM typed")
-        cols, rows = sel.execute(())
-        assert cols == ["i", "d", "s", "b", "t", "n"]
-        i, d, s, b, t, n = rows[0]
-        assert i == -(2**62)
-        assert d == 1.0000000000000002  # bit-exact through IEEE binary
-        assert s == "quo'te\\raw\nnl"
-        assert b == b"\x00\xff\xfe"
-        assert t == 1
-        assert n is None
-        sel.close()
-        conn.close()
-
-
-def test_prepared_statement_replay_idempotent_upsert():
-    # re-executing the SAME prepared upsert (the consumer-restart replay
-    # shape) must not regress offsets or duplicate rows
-    with FakeMySQLServer() as srv:
-        conn = mysql_wire.connect("127.0.0.1", srv.port, "root", "")
-        cur = conn.cursor()
-        cur.execute(
-            "CREATE TABLE IF NOT EXISTS kafka_offsets ("
-            "topic VARCHAR(50) NOT NULL, partition INT NOT NULL, "
-            "consumer_group VARCHAR(50), offset BIGINT, "
-            "PRIMARY KEY (topic, partition, consumer_group))"
-        )
-        ps = conn.prepare(
-            "INSERT INTO kafka_offsets (topic, partition, consumer_group, "
-            "offset) VALUES (?, ?, ?, ?) ON DUPLICATE KEY UPDATE "
-            "offset = GREATEST(offset, VALUES(offset))"
-        )
-        for _ in range(3):  # replay: identical executes are idempotent
-            ps.execute(("t", 0, "g", 10))
-        ps.execute(("t", 0, "g", 7))  # lower: must NOT regress
-        conn.commit()
-        cur.execute("SELECT COUNT(*), MAX(offset) FROM kafka_offsets")
-        assert cur.fetchone() == (1, 10)
-        ps.close()
-        conn.close()
-
-
-def test_prepared_statement_param_count_and_close_errors():
-    with FakeMySQLServer() as srv:
-        conn = mysql_wire.connect("127.0.0.1", srv.port, "root", "")
-        conn.cursor().execute("CREATE TABLE p2 (a BIGINT)")
-        ps = conn.prepare("INSERT INTO p2 (a) VALUES (?)")
-        with pytest.raises(ValueError, match="1 parameters expected"):
-            ps.execute((1, 2))
-        ps.close()
-        with pytest.raises(MySQLError, match="closed"):
-            ps.execute((1,))
-        # non-finite floats rejected client-side on the binary path too
-        ps2 = conn.prepare("INSERT INTO p2 (a) VALUES (?)")
-        with pytest.raises(ValueError, match="non-finite"):
-            ps2.execute((float("nan"),))
-        conn.close()
-
-
-def test_exactly_once_sink_prepared_binary_path(spark):
-    # the same exactly-once contract, but rows and offset upserts bind
-    # through COM_STMT_PREPARE/EXECUTE (use_prepared=True) — the
-    # reference's PreparedStatement mechanism executing inside the sink
-    from kafka_avro_pipeline_java_spark.streaming.sink import (
-        ExactlyOnceDbSink,
-    )
-
-    srv = FakeMySQLServer(password="pw")
-    host, port = "127.0.0.1", srv.port
-    try:
-        setup = mysql_wire.connect(host, port, "root", "pw")
-        setup.cursor().execute(
-            "CREATE TABLE dataset2 (k VARCHAR(20), num BIGINT, "
-            "score DOUBLE, topic VARCHAR(20), partition INT, offset BIGINT)"
-        )
-        setup.commit()
-        setup.close()
-
-        def factory(host=host, port=port):
-            from kafka_avro_pipeline_java_spark.streaming import mysql_wire
-
-            return mysql_wire.connect(host, port, "root", "pw",
-                                      timeout_s=120.0)
-
-        sink = ExactlyOnceDbSink(
-            factory,
-            "dataset2",
-            ["k", "num", "score"],
-            paramstyle="format",
-            offsets_cols=("topic", "partition", "offset"),
-            consumer_group="g2",
-            use_prepared=True,
-        )
-        rows = [
-            (f"k{i}", i, i + 0.25, "dataset2", i % 2, i) for i in range(20)
-        ]
-        df = spark.createDataFrame(
-            rows, "k string, num long, score double, "
-                  "topic string, partition int, offset long"
-        ).repartition(3)
-        sink(df, batch_id=3)
-        sink(df, batch_id=3)  # replay must be a no-op
-
-        check = mysql_wire.connect(host, port, "root", "pw")
-        cur = check.cursor()
-        cur.execute("SELECT COUNT(*), SUM(num) FROM dataset2")
-        assert cur.fetchone() == (20, sum(range(20)))
-        cur.execute("SELECT score FROM dataset2 WHERE k = 'k3'")
-        assert cur.fetchone() == (3.25,)  # typed double through binary bind
-        cur.execute(
-            "SELECT partition, offset FROM kafka_offsets "
-            "WHERE consumer_group = 'g2' ORDER BY partition"
-        )
-        assert dict(cur.fetchall()) == {0: 19, 1: 20}
         check.close()
     finally:
         srv.close()

@@ -43,7 +43,7 @@ def conn():
     c = mysql_wire.connect("127.0.0.1", srv.port, "root", "fuzz")
     c.cursor().execute(
         "CREATE TABLE fuzz (id BIGINT PRIMARY KEY, s VARCHAR(500), "
-        "x BIGINT, d DOUBLE)"
+        "x BIGINT, d DOUBLE, b BLOB)"
     )
     c.commit()
     yield c
@@ -53,7 +53,7 @@ def conn():
 
 # NUL is excluded: sqlite's C layer truncates embedded NULs in TEXT —
 # a backend limit of the test double, not of the wire encoding (the
-# length-prefixed packets carry NULs fine, covered by the bytes test)
+# length-prefixed packets carry NULs fine, covered by the BLOB column)
 _texts = st.text(
     alphabet=st.characters(
         blacklist_categories=("Cs",), blacklist_characters="\x00"
@@ -67,14 +67,16 @@ _texts = st.text(
     s=_texts,
     x=st.integers(min_value=-(2**63), max_value=2**63 - 1),
     d=st.floats(allow_nan=False, allow_infinity=False, width=64),
+    b=st.binary(max_size=120),
 )
-def test_values_survive_the_wire_round_trip(conn, s, x, d):
+def test_values_survive_the_wire_round_trip(conn, s, x, d, b):
     cur = conn.cursor()
     cur.execute("DELETE FROM fuzz WHERE id = 1")
     cur.execute(
-        "INSERT INTO fuzz (id, s, x, d) VALUES (1, %s, %s, %s)", (s, x, d)
+        "INSERT INTO fuzz (id, s, x, d, b) VALUES (1, %s, %s, %s, %s)",
+        (s, x, d, b),
     )
     conn.commit()
-    cur.execute("SELECT s, x, d FROM fuzz WHERE id = 1")
+    cur.execute("SELECT s, x, d, b FROM fuzz WHERE id = 1")
     got = cur.fetchone()
-    assert got == (s, x, d)
+    assert got == (s, x, d, b)
