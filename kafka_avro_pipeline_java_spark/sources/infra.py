@@ -109,10 +109,8 @@ def register_schemas(registry_url: str, schemas: list[dict], *, timeout: int = 1
     REST API (subject = ``<topic>-value``). Pure stdlib HTTP.
 
     The registry enforces the subject's compatibility mode server-side
-    (409 on violation); ``sources/schema_compat.check_compatibility``
-    implements the same Avro-resolution gate client-side for pre-flight
-    checks against a known version history (tested against the spec's
-    promotion/default/union rules in tests/test_infra_contract.py)."""
+    (409 on violation). Only ``<topic>-value`` subjects are registered;
+    the Kafka key is framed with the value's id (``avro_codec.encode_df``)."""
     import urllib.request
 
     ids = {}

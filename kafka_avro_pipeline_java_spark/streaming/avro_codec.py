@@ -20,7 +20,6 @@ The binary encoding (Avro spec 1.11, "Binary encoding"):
 
 from __future__ import annotations
 
-import io
 import struct
 from collections.abc import Iterator
 from typing import Any
@@ -50,15 +49,55 @@ def _zigzag_encode(n: int) -> bytes:
             return bytes(out)
 
 
-def _zigzag_decode(buf: io.BytesIO) -> int:
+def _need(buf: bytes, pos: int, n: int) -> None:
+    # a short buffer is an error, as Java's BinaryDecoder raises EOFException
+    if n < 0 or pos + n > len(buf):
+        raise ValueError(
+            f"truncated Avro data: {n} bytes needed at offset {pos}, "
+            f"{max(len(buf) - pos, 0)} left"
+        )
+
+
+def _read_long(buf: bytes, pos: int) -> tuple[int, int]:
+    """Zigzag varint at ``pos`` → (value, next offset)."""
     shift, acc = 0, 0
     while True:
-        (b,) = buf.read(1)
+        _need(buf, pos, 1)
+        b = buf[pos]
+        pos += 1
         acc |= (b & 0x7F) << shift
         if not b & 0x80:
-            break
+            return (acc >> 1) ^ -(acc & 1), pos
         shift += 7
-    return (acc >> 1) ^ -(acc & 1)
+        if shift > 63:
+            raise ValueError("invalid Avro varint: longer than 10 bytes")
+
+
+def _read_bytes(buf: bytes, pos: int) -> tuple[bytes, int]:
+    """Length-prefixed bytes at ``pos`` → (bytes, next offset)."""
+    n, pos = _read_long(buf, pos)
+    _need(buf, pos, n)
+    return buf[pos:pos + n], pos + n
+
+
+def _read_string(buf: bytes, pos: int) -> tuple[str, int]:
+    raw, pos = _read_bytes(buf, pos)
+    return raw.decode("utf-8"), pos
+
+
+def _read_float(buf: bytes, pos: int) -> tuple[float, int]:
+    _need(buf, pos, 4)
+    return struct.unpack_from("<f", buf, pos)[0], pos + 4
+
+
+def _read_double(buf: bytes, pos: int) -> tuple[float, int]:
+    _need(buf, pos, 8)
+    return struct.unpack_from("<d", buf, pos)[0], pos + 8
+
+
+def _read_boolean(buf: bytes, pos: int) -> tuple[bool, int]:
+    _need(buf, pos, 1)
+    return buf[pos] == 1, pos + 1
 
 
 _ENCODERS = {
@@ -70,20 +109,14 @@ _ENCODERS = {
     "string": lambda v: _zigzag_encode(len(v.encode("utf-8"))) + v.encode("utf-8"),
 }
 
-
-def _decode_value(buf: io.BytesIO, avro_type: str) -> Any:
-    if avro_type in ("int", "long"):
-        return _zigzag_decode(buf)
-    if avro_type == "float":
-        return struct.unpack("<f", buf.read(4))[0]
-    if avro_type == "double":
-        return struct.unpack("<d", buf.read(8))[0]
-    if avro_type == "boolean":
-        return buf.read(1) == b"\x01"
-    if avro_type == "string":
-        n = _zigzag_decode(buf)
-        return buf.read(n).decode("utf-8")
-    raise ValueError(f"unsupported Avro type {avro_type!r}")
+_READERS = {
+    "int": _read_long,
+    "long": _read_long,
+    "float": _read_float,
+    "double": _read_double,
+    "boolean": _read_boolean,
+    "string": _read_string,
+}
 
 
 def encode_record(field_types: list[tuple[str, str]], values: list[Any]) -> bytes:
@@ -97,9 +130,31 @@ def encode_record(field_types: list[tuple[str, str]], values: list[Any]) -> byte
     return bytes(out)
 
 
-def decode_record(field_types: list[tuple[str, str]], payload: bytes) -> list[Any]:
-    buf = io.BytesIO(payload)
-    return [_decode_value(buf, ftype) for _, ftype in field_types]
+def read_fields(field_types: list[tuple[str, str]], buf: bytes,
+                pos: int) -> tuple[list[Any], int]:
+    """Decode one flat record starting at ``pos`` → (values, next offset).
+    Raises ``ValueError`` when ``buf`` ends before the last field does."""
+    out = []
+    for _, ftype in field_types:
+        read = _READERS.get(ftype)
+        if read is None:
+            raise ValueError(f"unsupported Avro type {ftype!r}")
+        v, pos = read(buf, pos)
+        out.append(v)
+    return out, pos
+
+
+def decode_record(field_types: list[tuple[str, str]], payload: bytes,
+                  start: int = 0) -> list[Any]:
+    """Decode the record body ``payload[start:]``, which must be consumed
+    exactly: a short body or bytes left over after the last field raise
+    ``ValueError`` (the body was written under another schema, or cut)."""
+    values, end = read_fields(field_types, payload, start)
+    if end != len(payload):
+        raise ValueError(
+            f"{len(payload) - end} bytes left over after the Avro record"
+        )
+    return values
 
 
 # --------------------------------------------------------------------------
@@ -109,11 +164,23 @@ def frame_confluent(body: bytes, schema_id: int) -> bytes:
     return MAGIC_BYTE + struct.pack(">I", schema_id) + body
 
 
-def unframe_confluent(payload: bytes) -> tuple[int, bytes]:
-    if not payload or payload[0:1] != MAGIC_BYTE:
+def decode_confluent(field_types: list[tuple[str, str]], payload: bytes,
+                     schema_id: int) -> list[Any]:
+    """Decode one Confluent-framed record written under ``schema_id``.
+
+    The 5-byte header is checked in place (magic byte, then the id), and
+    the body is decoded from offset 5 without a copy. A record framed with
+    another id raises ``ValueError`` naming both ids: its body was written
+    under a schema this decoder does not hold."""
+    if payload[0:1] != MAGIC_BYTE:
         raise ValueError("not a Confluent-framed payload (missing 0x00 magic byte)")
-    (schema_id,) = struct.unpack(">I", payload[1:5])
-    return schema_id, payload[5:]
+    _need(payload, 1, 4)
+    (sid,) = struct.unpack_from(">I", payload, 1)
+    if sid != schema_id:
+        raise ValueError(
+            f"record framed with schema id {sid}, decoder expects schema id {schema_id}"
+        )
+    return decode_record(field_types, payload, 5)
 
 
 def _field_types(avro_schema: dict) -> list[tuple[str, str]]:
@@ -131,9 +198,13 @@ def encode_df(df: DataFrame, avro_schema: dict, schema_id: int = 1,
 
     ``key_field`` defaults to field 0 of the Avro schema — the reference's
     keying rule (AvroProducer.java:81: key = message.get(0).toString()).
-    The key is itself Confluent-framed Avro (string schema), matching
-    KafkaAvroSerializer on both key and value. ``passthrough_cols`` (e.g. a
-    precomputed ``partition`` column) are copied to the output unchanged.
+    The key is itself Confluent-framed Avro (string schema), as
+    KafkaAvroSerializer writes both key and value. It is framed with the
+    value's ``schema_id``: Confluent would use the id of a separate
+    ``<topic>-key`` subject, but ``infra.register_schemas`` registers only
+    ``<topic>-value``, and no decoder here reads the key's id.
+    ``passthrough_cols`` (e.g. a precomputed ``partition`` column) are
+    copied to the output unchanged.
     """
     ftypes = _field_types(avro_schema)
     key_field = key_field or ftypes[0][0]
@@ -168,9 +239,14 @@ def encode_df(df: DataFrame, avro_schema: dict, schema_id: int = 1,
     return df.mapInPandas(enc, schema=out_schema)
 
 
-def decode_df(df: DataFrame, avro_schema: dict, value_col: str = "value",
+def decode_df(df: DataFrame, avro_schema: dict, *, schema_id: int = 1,
               passthrough_cols: list[str] | None = None) -> DataFrame:
-    """Decode Confluent-framed Avro binary back into typed columns.
+    """Decode the Confluent-framed Avro ``value`` column (Kafka's) back
+    into typed columns. Every record must carry ``schema_id`` in its header
+    and a body that ``avro_schema`` consumes exactly; anything else raises
+    (see ``decode_confluent``). A topic holds one writer schema, as in the
+    reference, whose infra step recreates every topic
+    (DataPipeline.java:80-126).
 
     ``passthrough_cols`` (e.g. Kafka's topic/partition/offset metadata)
     are copied to the output unchanged — the consumer needs them beside
@@ -199,58 +275,10 @@ def decode_df(df: DataFrame, avro_schema: dict, value_col: str = "value",
         import pandas as pd
 
         for pdf in batches:
-            rows = [
-                decode_record(ftypes, unframe_confluent(bytes(p))[1])
-                for p in pdf[value_col]
-            ]
+            rows = [decode_confluent(ftypes, bytes(p), schema_id) for p in pdf["value"]]
             out = pd.DataFrame(rows, columns=[n for n, _ in ftypes])
             for c in passthrough_cols:
                 out[c] = pdf[c].tolist()
             yield out
-
-    return df.mapInPandas(dec, schema=out_schema)
-
-
-def decode_df_multi(
-    df: DataFrame, schemas_by_id: dict[int, dict], value_col: str = "value"
-) -> DataFrame:
-    """Decode a topic carrying MULTIPLE schema versions (SURVEY §7.3 hard
-    part 1: per-id dispatch on the Confluent header). All versions must
-    share a common output shape — the output schema is the UNION of fields
-    across versions (missing fields null), so v1 records surface alongside
-    v2 after a schema evolution. Unknown schema ids raise (loud failure,
-    per our no-silent-skips rule)."""
-    per_id_fields = {sid: _field_types(s) for sid, s in schemas_by_id.items()}
-    # union of fields, first-seen order, types must agree where shared
-    union_fields: list[tuple[str, str]] = []
-    for fts in per_id_fields.values():
-        for name, ftype in fts:
-            existing = dict(union_fields)
-            if name in existing:
-                if existing[name] != ftype:
-                    raise ValueError(
-                        f"field {name!r} has conflicting types across versions: "
-                        f"{existing[name]} vs {ftype}"
-                    )
-            else:
-                union_fields.append((name, ftype))
-    out_schema = avro_to_struct(
-        {"fields": [{"name": n, "type": t} for n, t in union_fields]}
-    )
-    cols = [n for n, _ in union_fields]
-
-    def dec(batches: Iterator) -> Iterator:
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for p in pdf[value_col]:
-                sid, body = unframe_confluent(bytes(p))
-                if sid not in per_id_fields:
-                    raise ValueError(f"unknown schema id {sid} in Confluent header")
-                fts = per_id_fields[sid]
-                vals = dict(zip([n for n, _ in fts], decode_record(fts, body)))
-                rows.append([vals.get(c) for c in cols])
-            yield pd.DataFrame(rows, columns=cols)
 
     return df.mapInPandas(dec, schema=out_schema)

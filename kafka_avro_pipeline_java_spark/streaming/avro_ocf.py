@@ -38,7 +38,6 @@ parquet's page compression.
 from __future__ import annotations
 
 import hashlib
-import io
 import json
 import os
 import struct
@@ -49,11 +48,13 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..sources.schema_dsl import avro_to_struct
 from .avro_codec import (
-    _decode_value,
     _field_types,
-    _zigzag_decode,
+    _need,
+    _read_bytes,
+    _read_long,
     _zigzag_encode,
     encode_record,
+    read_fields,
 )
 
 OCF_MAGIC = b"Obj\x01"
@@ -74,20 +75,19 @@ def _encode_meta_map(meta: dict[str, bytes]) -> bytes:
     return bytes(out)
 
 
-def _decode_meta_map(buf: io.BytesIO) -> dict[str, bytes]:
+def _decode_meta_map(buf: bytes, pos: int) -> tuple[dict[str, bytes], int]:
     meta: dict[str, bytes] = {}
     while True:
-        n = _zigzag_decode(buf)
+        n, pos = _read_long(buf, pos)
         if n == 0:
-            return meta
+            return meta, pos
         if n < 0:  # spec: negative count is followed by a block byte size
             n = -n
-            _zigzag_decode(buf)
+            _, pos = _read_long(buf, pos)
         for _ in range(n):
-            klen = _zigzag_decode(buf)
-            k = buf.read(klen).decode("utf-8")
-            vlen = _zigzag_decode(buf)
-            meta[k] = buf.read(vlen)
+            k, pos = _read_bytes(buf, pos)
+            v, pos = _read_bytes(buf, pos)
+            meta[k.decode("utf-8")] = v
 
 
 def _sync_marker(path: str, part_id: int) -> bytes:
@@ -130,33 +130,37 @@ def encode_ocf(
 
 def decode_ocf(data: bytes) -> tuple[dict, list[list]]:
     """Parse one OCF file → (avro schema, rows as value lists). Validates
-    magic, codec, and every block's sync marker."""
-    buf = io.BytesIO(data)
-    if buf.read(4) != OCF_MAGIC:
+    magic, codec, every block's sync marker, and that each block's body
+    holds exactly its declared object count — no more, no fewer bytes."""
+    if data[:4] != OCF_MAGIC:
         raise ValueError("not an Avro OCF (bad magic)")
-    meta = _decode_meta_map(buf)
+    meta, pos = _decode_meta_map(data, 4)
     schema = json.loads(meta["avro.schema"].decode("utf-8"))
     codec = meta.get("avro.codec", b"null").decode("utf-8")
     if codec not in _CODECS:
         raise ValueError(f"unsupported OCF codec {codec!r}")
-    sync = buf.read(16)
+    _need(data, pos, 16)
+    sync, pos = data[pos:pos + 16], pos + 16
     ftypes = _field_types(schema)
     rows: list[list] = []
-    while True:
-        head = buf.read(1)
-        if not head:
-            return schema, rows
-        buf.seek(-1, io.SEEK_CUR)
-        n = _zigzag_decode(buf)
-        size = _zigzag_decode(buf)
-        body = buf.read(size)
+    while pos < len(data):
+        n, pos = _read_long(data, pos)
+        body, pos = _read_bytes(data, pos)
         if codec == "deflate":
             body = zlib.decompress(body, -15)
-        bbuf = io.BytesIO(body)
+        at = 0
         for _ in range(n):
-            rows.append([_decode_value(bbuf, t) for _, t in ftypes])
-        if buf.read(16) != sync:
+            row, at = read_fields(ftypes, body, at)
+            rows.append(row)
+        if at != len(body):
+            raise ValueError(
+                f"OCF block of {n} objects left {len(body) - at} bytes "
+                "unread (corrupt object count)"
+            )
+        if data[pos:pos + 16] != sync:
             raise ValueError("sync marker mismatch (corrupt OCF block)")
+        pos += 16
+    return schema, rows
 
 
 # --------------------------------------------------------------------------

@@ -18,11 +18,9 @@ Maps the reference's hand-rolled consumer/producer topology onto Spark
 - the producer pool (``02-producer``) → ``write_kafka_batch_py``, one
   leader-routed Produce per Kafka partition from each Spark partition.
 
-``kafka_source_options`` keeps the option contract of Spark's own Kafka
-source for a deployment that has the jar. Everything else goes through
-one wire client, ``kafka_wire.py`` (Produce v3 / Fetch v4, magic-2
-record batches); tests run it against the in-process broker
-(tests/test_kafka_wire.py).
+Both directions go through one wire client, ``kafka_wire.py`` (Produce
+v3 / Fetch v4, magic-2 record batches); tests run it against the
+in-process broker (tests/test_kafka_wire.py).
 """
 
 from __future__ import annotations
@@ -34,50 +32,6 @@ from pyspark.sql import functions as F
 
 from ..functions.hashing import partition_for_key
 from .avro_codec import encode_df
-
-
-def kafka_source_options(
-    brokers: str,
-    topics: str | None = None,
-    *,
-    assign: dict[str, list[int]] | None = None,
-    starting_offsets: str = "earliest",
-    max_offsets_per_trigger: int | None = None,
-    group_id: str | None = None,
-) -> dict[str, str]:
-    """The OPTION CONTRACT of the Kafka source, as a pure function — the
-    part of partition discovery/assignment (reference
-    ``03-consumer/src/main/java/Main.java:28-64``: partitionsFor() then one
-    consumer thread per partition) that is testable without a broker or
-    the spark-sql-kafka jar (tests/test_infra_contract.py).
-
-    Exactly one of ``topics`` (subscribe mode — the source DISCOVERS
-    partitions and plans one task per topic-partition, the reference's
-    thread-per-partition topology) or ``assign`` (explicit
-    {topic: [partition,...]} placement — the reference's
-    ``consumer.assign(...)`` path, serialized to the connector's JSON
-    assign format) must be given."""
-    import json as _json
-
-    if (topics is None) == (assign is None):
-        raise ValueError("exactly one of topics= or assign= is required")
-    opts = {
-        "kafka.bootstrap.servers": brokers,
-        "startingOffsets": starting_offsets,
-    }
-    if topics is not None:
-        opts["subscribe"] = topics
-    else:
-        opts["assign"] = _json.dumps(
-            {t: sorted(ps) for t, ps in sorted(assign.items())}
-        )
-    if max_offsets_per_trigger is not None:
-        opts["maxOffsetsPerTrigger"] = str(max_offsets_per_trigger)
-    if group_id is not None:
-        # parity with the reference's group-per-topic naming
-        # (AvroConsumer.java:50: "group-" + topic)
-        opts["kafka.group.id"] = group_id
-    return opts
 
 
 def read_kafka_stream_py(

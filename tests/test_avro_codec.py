@@ -41,13 +41,27 @@ def test_record_rejects_null():
 
 
 def test_confluent_framing():
-    body = C.encode_record(FT, ["k", 1, 0.5, "v"])
-    framed = C.frame_confluent(body, schema_id=7)
+    vals = ["k", 1, 0.5, "v"]
+    framed = C.frame_confluent(C.encode_record(FT, vals), schema_id=7)
     assert framed[0] == 0 and framed[1:5] == b"\x00\x00\x00\x07"
-    sid, out = C.unframe_confluent(framed)
-    assert sid == 7 and out == body
+    assert C.decode_confluent(FT, framed, schema_id=7) == vals
+    with pytest.raises(ValueError, match="schema id 7, decoder expects schema id 8"):
+        C.decode_confluent(FT, framed, schema_id=8)
     with pytest.raises(ValueError, match="magic"):
-        C.unframe_confluent(b"\x01junk")
+        C.decode_confluent(FT, b"\x01junk", schema_id=7)
+    with pytest.raises(ValueError, match="truncated"):
+        C.decode_confluent(FT, b"\x00\x00\x07", schema_id=7)
+
+
+def test_decode_record_rejects_leftover_and_truncated_bytes():
+    """A body must be consumed exactly: bytes after the last field, or a
+    body that ends inside a field, raise instead of decoding silently."""
+    ft = [("s", "string")]
+    body = C.encode_record(ft, ["hello"])
+    with pytest.raises(ValueError, match="1 bytes left over"):
+        C.decode_record(ft, body + b"\x00")
+    with pytest.raises(ValueError, match="truncated"):
+        C.decode_record(ft, body[:-1])  # "hell" before, with no error
 
 
 def test_float_int_boolean_scalars():
@@ -64,14 +78,12 @@ def test_dataframe_roundtrip(spark):
                      "double_field1 double, string_field1 string")
     framed = C.encode_df(df, SCHEMA, schema_id=3)
     assert framed.columns == ["key", "value"]
-    decoded = C.decode_df(framed, SCHEMA)
+    decoded = C.decode_df(framed, SCHEMA, schema_id=3)
     assert sorted(map(tuple, decoded.collect())) == sorted(rows)
-    # key is Confluent-framed Avro string of field 0
+    # key is Confluent-framed Avro string of field 0, under the value's id
     first = framed.orderBy("key").first()
-    sid, body = C.unframe_confluent(bytes(first["key"]))
-    assert sid == 3
-    import io
-    assert C._decode_value(io.BytesIO(body), "string") in ("k1", "k2", "k3")
+    (key,) = C.decode_confluent([("key", "string")], bytes(first["key"]), 3)
+    assert key in ("k1", "k2", "k3")
 
 
 def test_dataframe_passthrough_partition(spark):
@@ -88,40 +100,26 @@ def test_dataframe_passthrough_partition(spark):
 
 
 def test_multi_schema_version_decode(spark):
-    """Schema evolution on one topic: v1 (3 fields) and v2 (adds a field)
-    interleaved; decode dispatches on the Confluent schema id and yields
-    the union shape with nulls for missing v1 fields."""
+    """A record framed with another schema id raises, naming both ids: its
+    body was written under a schema the decoder does not hold. Before the
+    id was checked, the v2 record below decoded under v1 as ['abc', 0]."""
     v1 = {"name": "d", "fields": [{"name": "k", "type": "string"},
-                                  {"name": "ts", "type": "long"},
-                                  {"name": "x", "type": "double"}]}
+                                  {"name": "qty", "type": "int"}]}
     v2 = {"name": "d", "fields": [{"name": "k", "type": "string"},
-                                  {"name": "ts", "type": "long"},
-                                  {"name": "x", "type": "double"},
-                                  {"name": "note", "type": "string"}]}
-    f1 = [(f["name"], f["type"]) for f in v1["fields"]]
-    f2 = [(f["name"], f["type"]) for f in v2["fields"]]
-    payloads = [
-        (C.frame_confluent(C.encode_record(f1, ["a", 1, 0.5]), 1),),
-        (C.frame_confluent(C.encode_record(f2, ["b", 2, 0.25, "hello"]), 2),),
+                                  {"name": "price", "type": "double"},
+                                  {"name": "qty", "type": "int"}]}
+    body = C.encode_record(C._field_types(v2), ["abc", 12.5, 7])
+    df = spark.createDataFrame([(C.frame_confluent(body, 2),)], "value binary")
+    with pytest.raises(Exception, match="schema id 2, decoder expects schema id 1"):
+        C.decode_df(df, v1, schema_id=1).collect()
+    assert [tuple(r) for r in C.decode_df(df, v2, schema_id=2).collect()] == [
+        ("abc", 12.5, 7)
     ]
-    df = spark.createDataFrame(payloads, "value binary")
-    out = C.decode_df_multi(df, {1: v1, 2: v2})
-    rows = {r["k"]: r for r in out.collect()}
-    assert rows["a"]["note"] is None and rows["a"]["x"] == 0.5
-    assert rows["b"]["note"] == "hello" and rows["b"]["ts"] == 2
-
-    bad = spark.createDataFrame(
-        [(C.frame_confluent(C.encode_record(f1, ["c", 3, 0.1]), 99),)], "value binary"
-    )
-    with pytest.raises(Exception, match="unknown schema id|PythonException"):
-        C.decode_df_multi(bad, {1: v1, 2: v2}).collect()
 
 
 def test_decode_df_passthrough_collision_raises(spark):
     """ADVICE r05: a passthrough column named like a decoded Avro field
     would silently overwrite the decoded values — must raise instead."""
-    import pytest
-
     df = spark.createDataFrame(
         [("k1", 1, 0.5, "x")],
         schema="key_field1 string, timestamp_field1 long, "
@@ -137,8 +135,6 @@ def test_non_string_key_is_java_tostring_and_matches_partition(spark):
     """The Kafka key of a non-string field 0 is Java's toString() of the
     value (reference AvroProducer.java:81), the same text whose hashCode
     chose the partition — not Python's str()."""
-    import io
-
     from test_generate import java_hash, java_partition
 
     from kafka_avro_pipeline_java_spark.streaming.kafka_io import prepare_kafka_batch
@@ -157,8 +153,7 @@ def test_non_string_key_is_java_tostring_and_matches_partition(spark):
         ).collect()
         keys = set()
         for row in out:
-            _, body = C.unframe_confluent(bytes(row["key"]))
-            key = C._decode_value(io.BytesIO(body), "string")
+            (key,) = C.decode_confluent([("key", "string")], bytes(row["key"]), 1)
             keys.add(key)
             assert row["partition"] == java_partition(java_hash(key), 3), key
         assert keys == expected

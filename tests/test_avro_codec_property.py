@@ -1,8 +1,10 @@
 """Property-based Avro codec tests (hypothesis): round-trip over the full
-value domains, including edge integers, unicode strings, and subnormals."""
+value domains, including edge integers, unicode strings, and subnormals,
+and strict decoding of cut or padded bodies."""
 
 import math
 
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
@@ -43,13 +45,30 @@ def test_roundtrip_any_record(vals):
 @settings(max_examples=300, deadline=None)
 @given(st.integers(min_value=-(2**63), max_value=2**63 - 1))
 def test_zigzag_roundtrip_full_long_domain(n):
-    import io
-
-    assert C._zigzag_decode(io.BytesIO(C._zigzag_encode(n))) == n
+    enc = C._zigzag_encode(n)
+    assert C._read_long(enc, 0) == (n, len(enc))
 
 
 @settings(max_examples=100, deadline=None)
-@given(st.binary(max_size=500), st.integers(min_value=0, max_value=2**32 - 1))
-def test_framing_roundtrip(body, schema_id):
-    sid, out = C.unframe_confluent(C.frame_confluent(body, schema_id))
-    assert sid == schema_id and out == body
+@given(records, st.integers(min_value=0, max_value=2**32 - 1))
+def test_framing_roundtrip(vals, schema_id):
+    body = C.encode_record(FT, list(vals))
+    framed = C.frame_confluent(body, schema_id)
+    assert framed[5:] == body
+    assert C.decode_confluent(FT, framed, schema_id) == C.decode_record(FT, body)
+    other = (schema_id + 1) % 2**32
+    with pytest.raises(ValueError, match=f"schema id {schema_id}, decoder expects schema id {other}"):
+        C.decode_confluent(FT, framed, other)
+
+
+@settings(max_examples=100, deadline=None)
+@given(records, st.binary(min_size=1, max_size=16))
+def test_strict_prefix_and_trailing_bytes_raise(vals, extra):
+    """The decoder consumes a body exactly: every strict prefix ends inside
+    a field (a short read), and any bytes after the body are left over."""
+    body = C.encode_record(FT, list(vals))
+    for cut in range(len(body)):
+        with pytest.raises(ValueError, match="truncated"):
+            C.decode_record(FT, body[:cut])
+    with pytest.raises(ValueError, match="left over"):
+        C.decode_record(FT, body + extra)

@@ -95,6 +95,13 @@ def test_decode_rejects_corruption():
     data[-1] ^= 0xFF  # flip a byte of the trailing sync marker
     with pytest.raises(ValueError, match="sync marker"):
         decode_ocf(bytes(data))
+    # a 3-object block whose count is rewritten to 2 must not drop 'c'
+    data = bytearray(encode_ocf([[1, "a"], [2, "b"], [3, "c"]], SCHEMA, sync=b"s" * 16))
+    count_at = data.index(b"s" * 16) + 16
+    assert data[count_at] == 6  # zigzag(3)
+    data[count_at] = 4  # zigzag(2)
+    with pytest.raises(ValueError, match="2 objects left 3 bytes unread"):
+        decode_ocf(bytes(data))
 
 
 @pytest.mark.parametrize("codec", ["null", "deflate"])
