@@ -61,7 +61,7 @@ def test_decode_record_rejects_leftover_and_truncated_bytes():
     with pytest.raises(ValueError, match="1 bytes left over"):
         C.decode_record(ft, body + b"\x00")
     with pytest.raises(ValueError, match="truncated"):
-        C.decode_record(ft, body[:-1])  # "hell" before, with no error
+        C.decode_record(ft, body[:-1])  # not "hell"
 
 
 def test_float_int_boolean_scalars():
@@ -101,8 +101,8 @@ def test_dataframe_passthrough_partition(spark):
 
 def test_multi_schema_version_decode(spark):
     """A record framed with another schema id raises, naming both ids: its
-    body was written under a schema the decoder does not hold. Before the
-    id was checked, the v2 record below decoded under v1 as ['abc', 0]."""
+    body was written under a schema the decoder does not hold. Without the
+    id check, the v2 record below reads under v1 as ['abc', 0]."""
     v1 = {"name": "d", "fields": [{"name": "k", "type": "string"},
                                   {"name": "qty", "type": "int"}]}
     v2 = {"name": "d", "fields": [{"name": "k", "type": "string"},
