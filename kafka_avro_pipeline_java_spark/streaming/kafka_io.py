@@ -15,8 +15,11 @@ Maps the reference's hand-rolled consumer/producer topology onto Spark
 - DB-stored offsets + seek (``MySQLProcessData.java:42-63``) → checkpoint
   recovery, from the earliest offset on a cold start
   (``AvroConsumer.java:66``);
+- key = field 0 and ``abs(hashCode % n)`` placement
+  (``AvroProducer.java:81-82``) → ``prepare_kafka_batch``;
 - the producer pool (``02-producer``) → ``write_kafka_batch_py``, one
-  leader-routed Produce per Kafka partition from each Spark partition.
+  leader-routed Produce per Kafka partition from each Spark partition,
+  its records stamped with the request's send time.
 
 Both directions go through one wire client, ``kafka_wire.py`` (Produce
 v3 / Fetch v4, magic-2 record batches); tests run it against the
@@ -25,6 +28,7 @@ in-process broker (tests/test_kafka_wire.py).
 
 from __future__ import annotations
 
+import time
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
@@ -66,61 +70,44 @@ def prepare_kafka_batch(
     avro_schema: dict[str, Any],
     *,
     schema_id: int = 1,
-    explicit_partitions: int | None = None,
+    explicit_partitions: int,
 ) -> DataFrame:
-    """Rows → (key, value[, partition]) binary columns ready for the Kafka
-    sink. Key = Avro field 0 (reference AvroProducer.java:81). With
-    ``explicit_partitions``, adds the reference's exact placement
-    ``abs(java_hashCode(key) % n)`` (AvroProducer.java:82) — otherwise
-    ``write_kafka_batch_py`` places each row by its serialized key against
-    the topic's live partition count."""
+    """Rows → (key, value, partition) columns ready for
+    ``write_kafka_batch_py``. Key = Avro field 0 (reference
+    AvroProducer.java:81); partition = the reference's placement
+    ``abs(java_hashCode(key) % explicit_partitions)``
+    (AvroProducer.java:82). A null field 0 raises when the frame is
+    evaluated, naming the field, where the reference's ``toString()``
+    would throw."""
     key_field = avro_schema["fields"][0]["name"]
-    if explicit_partitions is not None:
-        with_part = df.withColumn(
-            "partition",
-            partition_for_key(F.col(key_field).cast("string"), explicit_partitions),
-        )
-        return encode_df(
-            with_part, avro_schema, schema_id=schema_id, passthrough_cols=["partition"]
-        )
-    return encode_df(df, avro_schema, schema_id=schema_id)
+    key = F.col(key_field)
+    with_part = df.withColumn(
+        "partition",
+        F.when(
+            key.isNull(),
+            F.raise_error(F.lit(
+                f"prepare_kafka_batch: key field {key_field!r} is null")),
+        ).otherwise(partition_for_key(key.cast("string"), explicit_partitions)),
+    )
+    return encode_df(
+        with_part, avro_schema, schema_id=schema_id, passthrough_cols=["partition"]
+    )
 
 
-def write_kafka_batch_py(
-    df: DataFrame, brokers: str, topic: str, *, timestamp_ms: int = 0
-) -> None:
-    """(key, value[, partition]) binary DataFrame → Kafka topic through the
-    pure-Python wire protocol (Produce v3, one magic-2 record batch per
-    request), executed ON THE EXECUTORS: each Spark partition opens one
-    leader-routed client and sends one Produce request per Kafka
-    partition it holds rows for, so the send path fans out with the
-    cluster exactly like the JVM producer pool (reference 02-producer
-    Main.java:45-49).
-    Pass the ``partition`` column from ``prepare_kafka_batch(...,
-    explicit_partitions=n)`` for the reference's exact
-    ``abs(java_hashCode(field0) % n)`` placement (AvroProducer.java:82);
-    without one, placement hashes the serialized key bytes against the
-    topic's live partition count — not byte-identical to any JVM
-    partitioner, but it preserves the invariant that matters
-    (same key → same partition → per-key order)."""
-    cols = set(df.columns)
-    if "partition" not in cols:
-        from ..streaming.kafka_wire import KafkaWireClient
-
-        with KafkaWireClient(brokers) as c:
-            _, topics = c.metadata([topic])
-            n_parts = len(topics[topic])
-        df = df.withColumn(
-            "partition",
-            # null keys are legal in Kafka (the Java producer round-robins
-            # them); partition_for_key yields null on a null key, which
-            # would TypeError in send_partition — route them to 0
-            # (deterministic, keeps the executor loop total)
-            F.coalesce(
-                partition_for_key(F.col("key").cast("string"), n_parts),
-                F.lit(0),
-            ),
-        )
+def write_kafka_batch_py(df: DataFrame, brokers: str, topic: str) -> None:
+    """(key, value, partition) binary DataFrame from ``prepare_kafka_batch``
+    → Kafka topic through the pure-Python wire protocol (Produce v3, one
+    magic-2 record batch per request), executed ON THE EXECUTORS: each
+    Spark partition opens one leader-routed client and sends one Produce
+    request per Kafka partition it holds rows for, so the send path fans
+    out with the cluster exactly like the JVM producer pool (reference
+    02-producer Main.java:45-49). Each record carries the wall-clock
+    milliseconds of its Produce request, as the Java producer stamps a
+    ``ProducerRecord`` sent without a timestamp (AvroProducer.java:82-83)."""
+    if "partition" not in df.columns:
+        raise ValueError(
+            "write_kafka_batch_py needs a partition column: build the "
+            "frame with prepare_kafka_batch")
 
     def send_partition(rows) -> None:
         # leader-routing producer (round 6): each Kafka partition's batch
@@ -131,13 +118,13 @@ def write_kafka_batch_py(
         for r in rows:
             by_kafka_partition.setdefault(int(r["partition"]), []).append(
                 (bytes(r["key"]) if r["key"] is not None else None,
-                 bytes(r["value"]) if r["value"] is not None else None,
-                 timestamp_ms)
+                 bytes(r["value"]) if r["value"] is not None else None)
             )
         if not by_kafka_partition:
             return
         with KafkaClusterClient(brokers) as c:
             for pid, records in sorted(by_kafka_partition.items()):
-                c.produce(topic, pid, records)
+                sent_ms = int(time.time() * 1000)
+                c.produce(topic, pid, [(k, v, sent_ms) for k, v in records])
 
     df.select("key", "value", "partition").foreachPartition(send_partition)

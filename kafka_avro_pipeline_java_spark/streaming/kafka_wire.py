@@ -11,14 +11,20 @@ ApiVersions v0, CreateTopics v0, DeleteTopics v0, and record batches
 (magic 2, zigzag-varint deltas, CRC32C — the format every 0.11+ broker
 natively writes, the reference's cp-kafka 7.0.0 brokers included) — is
 enough for a correct bounded consumer, producer, and topic-DDL admin.
-Each API is spoken at one version; the client checks the broker's
-ApiVersions response once per connection and refuses a broker that does
-not offer it. Batches may be compressed:
-gzip is implemented with the stdlib both ways (attribute bits, CRC over
-the compressed wire bytes), snappy/lz4/zstd are recognized and raise a
-named ``KafkaCodecError`` unless their third-party package is present. The codec is shared by the client
-here and the in-process broker in ``fake_broker.py``, so both sides of
-every test exchange REAL protocol bytes over a REAL TCP socket.
+
+Each API is spoken at one version. Its request and response layouts are
+written once, in the ``MESSAGES`` table, and one pair of functions
+(``write``/``read``) lays out any of them; a frame that is short or has
+bytes left over is refused. The client checks the broker's ApiVersions
+response once per connection and refuses a broker that does not offer
+Produce v3 or Fetch v4. Batches may be compressed: gzip is implemented
+with the stdlib both ways (attribute bits, CRC over the compressed wire
+bytes), snappy/lz4/zstd are recognized and raise a named
+``KafkaCodecError`` unless their third-party package is present. The
+table and the record-batch codec are shared by the client here and the
+in-process broker in ``fake_broker.py``, so both sides of every test
+exchange REAL protocol bytes over a REAL TCP socket; golden-byte tests
+pin the layouts to the protocol guide (tests/test_kafka_wire_v2.py).
 
 Scale shape: one socket per (client, broker), and this module never
 aggregates across partitions. The DataSource built on top
@@ -43,6 +49,7 @@ import functools
 import socket
 import struct
 from dataclasses import dataclass
+from typing import NamedTuple
 
 API_PRODUCE = 0
 API_FETCH = 1
@@ -63,124 +70,181 @@ ERR_INVALID_PARTITIONS = 37
 EARLIEST = -2
 LATEST = -1
 
+# ---------------------------------------------------------------------------
+# message layouts: each request and response body is written once, here,
+# and read and written from this table by both the client below and the
+# in-process broker (fake_broker.py), as Kafka generates both sides from
+# one JSON spec per message. A layout is a tuple of fields; a field is a
+# primitive below, a nested tuple (a struct) or a one-element list (an
+# ARRAY of that field). Values mirror layouts: a tuple per struct, a list
+# per array, None for a null string, bytes or array. Every API is spoken
+# at one classic (non-flexible) version, so a layout covers its frame
+# exactly. Field names per kafka.apache.org/protocol.
+# ---------------------------------------------------------------------------
+
+INT8, INT16, INT32, INT64 = "b", "h", "i", "q"
+STRING = "string"  # INT16 length then UTF-8; -1 is null
+BYTES = "bytes"    # INT32 length then the bytes; -1 is null (also RECORDS)
+
+# api_key, api_version, correlation_id, client_id
+REQUEST_HEADER = (INT16, INT16, INT32, STRING)
+RESPONSE_HEADER = (INT32,)  # correlation_id
+
+
+class Message(NamedTuple):
+    version: int
+    request: tuple
+    response: tuple
+
+
+MESSAGES = {
+    # Produce v3 / Fetch v4 are the first versions that carry magic-2
+    # record batches
+    API_PRODUCE: Message(
+        3,
+        # transactional_id, acks, timeout_ms,
+        # topic_data [name, partition_data [index, records]]
+        (STRING, INT16, INT32, [(STRING, [(INT32, BYTES)])]),
+        # responses [name, partition_responses [index, error_code,
+        # base_offset, log_append_time_ms]], throttle_time_ms
+        ([(STRING, [(INT32, INT16, INT64, INT64)])], INT32),
+    ),
+    API_FETCH: Message(
+        4,
+        # replica_id, max_wait_ms, min_bytes, max_bytes, isolation_level,
+        # topics [topic, partitions [partition, fetch_offset,
+        # partition_max_bytes]]
+        (INT32, INT32, INT32, INT32, INT8,
+         [(STRING, [(INT32, INT64, INT32)])]),
+        # throttle_time_ms, responses [topic, partitions [partition_index,
+        # error_code, high_watermark, last_stable_offset,
+        # aborted_transactions [producer_id, first_offset], records]]
+        (INT32, [(STRING, [(INT32, INT16, INT64, INT64,
+                            [(INT64, INT64)], BYTES)])]),
+    ),
+    API_LIST_OFFSETS: Message(
+        1,
+        # replica_id, topics [name, partitions [partition_index, timestamp]]
+        (INT32, [(STRING, [(INT32, INT64)])]),
+        # topics [name, partitions [partition_index, error_code,
+        # timestamp, offset]]
+        ([(STRING, [(INT32, INT16, INT64, INT64)])],),
+    ),
+    API_METADATA: Message(
+        0,
+        ([STRING],),  # topics (empty: every topic)
+        # brokers [node_id, host, port], topics [error_code, name,
+        # partitions [error_code, partition_index, leader_id,
+        # replica_nodes [], isr_nodes []]]
+        ([(INT32, STRING, INT32)],
+         [(INT16, STRING, [(INT16, INT32, INT32, [INT32], [INT32])])]),
+    ),
+    API_VERSIONS: Message(
+        0,
+        (),
+        # error_code, api_keys [api_key, min_version, max_version]
+        (INT16, [(INT16, INT16, INT16)]),
+    ),
+    API_CREATE_TOPICS: Message(
+        0,
+        # topics [name, num_partitions, replication_factor,
+        # assignments [partition_index, broker_ids []],
+        # configs [name, value]], timeout_ms
+        ([(STRING, INT32, INT16, [(INT32, [INT32])], [(STRING, STRING)])],
+         INT32),
+        ([(STRING, INT16)],),  # topics [name, error_code]
+    ),
+    API_DELETE_TOPICS: Message(
+        0,
+        ([STRING], INT32),  # topic_names [], timeout_ms
+        ([(STRING, INT16)],),  # responses [name, error_code]
+    ),
+}
+
 # (api_key, min_version, max_version) advertised by the fake broker and
-# spoken by the client: one version per API. Produce v3 / Fetch v4 are
-# the first versions that carry magic-2 record batches.
-SUPPORTED_APIS = [
-    (API_PRODUCE, 3, 3),
-    (API_FETCH, 4, 4),
-    (API_LIST_OFFSETS, 1, 1),
-    (API_METADATA, 0, 0),
-    (API_VERSIONS, 0, 0),
-    (API_CREATE_TOPICS, 0, 0),
-    (API_DELETE_TOPICS, 0, 0),
-]
-_VERSION = {k: hi for k, _, hi in SUPPORTED_APIS}
+# spoken by the client: one version per API
+SUPPORTED_APIS = [(k, m.version, m.version) for k, m in MESSAGES.items()]
+
+_INTS = {t: struct.Struct(">" + t) for t in (INT8, INT16, INT32, INT64)}
+_LENGTH = {STRING: INT16, BYTES: INT32}
 
 
-class ByteWriter:
-    """Append-only big-endian encoder for the classic (non-compact,
-    non-flexible) protocol encodings used by the API versions above."""
-
-    def __init__(self) -> None:
-        self._parts: list[bytes] = []
-
-    def int8(self, v: int) -> "ByteWriter":
-        self._parts.append(struct.pack(">b", v))
-        return self
-
-    def int16(self, v: int) -> "ByteWriter":
-        self._parts.append(struct.pack(">h", v))
-        return self
-
-    def int32(self, v: int) -> "ByteWriter":
-        self._parts.append(struct.pack(">i", v))
-        return self
-
-    def uint32(self, v: int) -> "ByteWriter":
-        self._parts.append(struct.pack(">I", v))
-        return self
-
-    def int64(self, v: int) -> "ByteWriter":
-        self._parts.append(struct.pack(">q", v))
-        return self
-
-    def string(self, v: str | None) -> "ByteWriter":
-        if v is None:
-            return self.int16(-1)
-        b = v.encode("utf-8")
-        self.int16(len(b))
-        self._parts.append(b)
-        return self
-
-    def bytes_(self, v: bytes | None) -> "ByteWriter":
-        if v is None:
-            return self.int32(-1)
-        self.int32(len(v))
-        self._parts.append(v)
-        return self
-
-    def raw(self, v: bytes) -> "ByteWriter":
-        self._parts.append(v)
-        return self
-
-    def array(self, items, encode_item) -> "ByteWriter":
-        if items is None:
-            return self.int32(-1)
-        self.int32(len(items))
-        for it in items:
-            encode_item(self, it)
-        return self
-
-    def build(self) -> bytes:
-        return b"".join(self._parts)
+class KafkaFrameError(ValueError):
+    """A frame this end cannot read: shorter than its layout, with bytes
+    left over after it, or of an api version it has no layout for."""
 
 
-class ByteReader:
-    """Sequential big-endian decoder — the mirror of ByteWriter."""
+def write(layout, value) -> bytes:
+    """``value`` laid out as ``layout`` → its bytes."""
+    out: list[bytes] = []
+    _write(layout, value, out)
+    return b"".join(out)
 
-    def __init__(self, buf: bytes) -> None:
-        self.buf = buf
-        self.pos = 0
 
-    def _take(self, n: int) -> bytes:
-        if self.pos + n > len(self.buf):
-            raise EOFError(f"need {n} bytes at {self.pos}, have {len(self.buf)}")
-        b = self.buf[self.pos: self.pos + n]
-        self.pos += n
-        return b
+def _write(field, value, out: list[bytes]) -> None:
+    if isinstance(field, tuple):
+        for f, v in zip(field, value, strict=True):
+            _write(f, v, out)
+    elif isinstance(field, list):
+        out.append(_INTS[INT32].pack(-1 if value is None else len(value)))
+        for v in value or ():
+            _write(field[0], v, out)
+    elif field in _INTS:
+        out.append(_INTS[field].pack(value))
+    elif value is None:
+        out.append(_INTS[_LENGTH[field]].pack(-1))
+    else:
+        data = value.encode("utf-8") if field == STRING else value
+        out.append(_INTS[_LENGTH[field]].pack(len(data)))
+        out.append(data)
 
-    def int8(self) -> int:
-        return struct.unpack(">b", self._take(1))[0]
 
-    def int16(self) -> int:
-        return struct.unpack(">h", self._take(2))[0]
+def read(layout, buf: bytes, pos: int = 0):
+    """``buf[pos:]`` read as ``layout`` → its value. Raises
+    ``KafkaFrameError`` when the bytes end before the layout does or go on
+    after it: at these versions every layout is exact, so leftover bytes
+    mean the two ends disagree on it."""
+    value, end = _read(layout, buf, pos)
+    if end != len(buf):
+        raise KafkaFrameError(
+            f"{len(buf) - end} bytes left over after the layout at {end}")
+    return value
 
-    def int32(self) -> int:
-        return struct.unpack(">i", self._take(4))[0]
 
-    def uint32(self) -> int:
-        return struct.unpack(">I", self._take(4))[0]
-
-    def int64(self) -> int:
-        return struct.unpack(">q", self._take(8))[0]
-
-    def string(self) -> str | None:
-        n = self.int16()
-        return None if n < 0 else self._take(n).decode("utf-8")
-
-    def bytes_(self) -> bytes | None:
-        n = self.int32()
-        return None if n < 0 else self._take(n)
-
-    def array(self, decode_item) -> list | None:
-        n = self.int32()
+def _read(field, buf: bytes, pos: int):
+    """→ (value, position after it)."""
+    if isinstance(field, tuple):
+        values = []
+        for f in field:
+            v, pos = _read(f, buf, pos)
+            values.append(v)
+        return tuple(values), pos
+    if isinstance(field, list):
+        n, pos = _read(INT32, buf, pos)
         if n < 0:
-            return None
-        return [decode_item(self) for _ in range(n)]
+            return None, pos
+        values = []
+        for _ in range(n):
+            v, pos = _read(field[0], buf, pos)
+            values.append(v)
+        return values, pos
+    if field in _INTS:
+        s = _INTS[field]
+        end = _end(buf, pos, s.size)
+        return s.unpack_from(buf, pos)[0], end
+    n, pos = _read(_LENGTH[field], buf, pos)
+    if n < 0:
+        return None, pos
+    end = _end(buf, pos, n)
+    data = buf[pos:end]
+    return (data.decode("utf-8") if field == STRING else data), end
 
-    def remaining(self) -> bytes:
-        return self.buf[self.pos:]
+
+def _end(buf: bytes, pos: int, n: int) -> int:
+    if pos + n > len(buf):
+        raise KafkaFrameError(
+            f"frame of {len(buf)} bytes ends inside a {n}-byte field at {pos}")
+    return pos + n
 
 
 @dataclass
@@ -427,7 +491,14 @@ def _decompress(codec: int, data: bytes) -> bytes:
     raise KafkaCodecError(f"unknown compression codec bits {codec}")
 
 
-_BATCH_HEADER_LEN = 61  # baseOffset..recordCount, fixed-width fields
+# The fixed-width head of a magic-2 batch: baseOffset and batchLength
+# (which counts the bytes after it); partitionLeaderEpoch, magic and crc;
+# then the CRC-covered attributes, lastOffsetDelta, baseTimestamp,
+# maxTimestamp, producerId, producerEpoch, baseSequence and recordCount.
+_BATCH_LENGTH = struct.Struct(">qi")
+_BATCH_CRC = struct.Struct(">ibI")
+_BATCH_ATTRS = struct.Struct(">hiqqqhii")
+BATCH_HEADER_LEN = _BATCH_LENGTH.size + _BATCH_CRC.size + _BATCH_ATTRS.size
 
 
 def encode_record_body(key: bytes | None, value: bytes | None,
@@ -471,30 +542,20 @@ def encode_record_batch(records: list[tuple[bytes | None, bytes | None, int]],
     recs = b"".join(recs_parts)
     if codec_bits:
         recs = _compress(codec_bits, recs)
-    attrs_to_end = (
-        ByteWriter()
-        .int16(codec_bits)              # attributes: compression bits 0-2
-        .int32(max(len(records) - 1, 0))  # lastOffsetDelta
-        .int64(base_ts)
-        .int64(max_ts)
-        .int64(-1)                      # producerId
-        .int16(-1)                      # producerEpoch
-        .int32(-1)                      # baseSequence
-        .int32(len(records))
-        .raw(recs)
-        .build()
+    attrs = _BATCH_ATTRS.pack(
+        codec_bits,                     # compression bits 0-2
+        max(len(records) - 1, 0),       # lastOffsetDelta
+        base_ts, max_ts,
+        -1, -1, -1,                     # producerId, producerEpoch, baseSequence
+        len(records),
     )
-    after_length = (
-        ByteWriter()
-        .int32(0)                       # partitionLeaderEpoch
-        .int8(2)                        # magic
-        .uint32(crc32c(attrs_to_end))
-        .raw(attrs_to_end)
-        .build()
-    )
-    return ByteWriter().int64(base_offset).int32(len(after_length)).raw(
-        after_length
-    ).build()
+    return b"".join((
+        _BATCH_LENGTH.pack(base_offset,
+                           _BATCH_CRC.size + len(attrs) + len(recs)),
+        _BATCH_CRC.pack(0, 2, crc32c(recs, crc32c(attrs))),
+        attrs,
+        recs,
+    ))
 
 
 def decode_record_batches(buf: bytes) -> list[WireRecord]:
@@ -504,39 +565,34 @@ def decode_record_batches(buf: bytes) -> list[WireRecord]:
     decompressed inline; snappy/lz4/zstd batches raise a NAMED
     KafkaCodecError unless their third-party package is importable."""
     out: list[WireRecord] = []
-    r = ByteReader(buf)
-    while len(buf) - r.pos >= 12:
-        base_offset = r.int64()
-        batch_len = r.int32()
-        if len(buf) - r.pos < batch_len:
+    start = 0
+    while len(buf) - start >= _BATCH_LENGTH.size:
+        base_offset, batch_len = _BATCH_LENGTH.unpack_from(buf, start)
+        start += _BATCH_LENGTH.size
+        end = start + batch_len
+        if len(buf) < end:
             break  # partial trailing batch
-        batch = ByteReader(r._take(batch_len))
-        batch.int32()  # partitionLeaderEpoch (not covered by the CRC)
-        magic = batch.int8()
+        if batch_len < _BATCH_CRC.size + _BATCH_ATTRS.size:
+            raise ValueError(f"record batch at {base_offset} is "
+                             f"{batch_len} bytes, shorter than its header")
+        _, magic, crc = _BATCH_CRC.unpack_from(buf, start)
         if magic != 2:
             raise ValueError(f"expected magic 2 in record batch, got {magic}")
-        crc = batch.uint32()
-        covered = batch.buf[batch.pos:]
+        covered = buf[start + _BATCH_CRC.size:end]
+        start = end
         if crc32c(covered) != crc:
             raise ValueError(f"CRC32C mismatch in batch at {base_offset}")
-        attributes = batch.int16()
+        attributes, _, base_ts, *_, count = _BATCH_ATTRS.unpack_from(covered)
         codec_bits = attributes & 0x07
-        batch.int32()  # lastOffsetDelta
-        base_ts = batch.int64()
-        batch.int64()  # maxTimestamp
-        batch.int64()  # producerId
-        batch.int16()  # producerEpoch
-        batch.int32()  # baseSequence
-        count = batch.int32()
         if codec_bits:
             # the records section (everything after recordCount) is the
             # compressed unit; decompress AFTER the CRC check above, which
             # covers the on-wire (compressed) bytes
-            raw = _decompress(codec_bits, batch.buf[batch.pos:])
+            raw = _decompress(codec_bits, covered[_BATCH_ATTRS.size:])
             pos = 0
         else:
-            raw = batch.buf
-            pos = batch.pos
+            raw = covered
+            pos = _BATCH_ATTRS.size
         for _ in range(count):
             _, pos = decode_varint(raw, pos)  # record length
             pos += 1  # record attributes
@@ -566,18 +622,41 @@ def decode_record_batches(buf: bytes) -> list[WireRecord]:
 # ---------------------------------------------------------------------------
 
 
-def encode_request(api_key: int, api_version: int, correlation_id: int,
-                   client_id: str | None, body: bytes) -> bytes:
-    payload = (
-        ByteWriter()
-        .int16(api_key)
-        .int16(api_version)
-        .int32(correlation_id)
-        .string(client_id)
-        .raw(body)
-        .build()
-    )
-    return struct.pack(">i", len(payload)) + payload
+def encode_request(header: tuple, request: tuple) -> bytes:
+    """(api_key, api_version, correlation_id, client_id) and a request
+    body → the length-prefixed frame, laid out by the api key's entry."""
+    layout = (REQUEST_HEADER, MESSAGES[header[0]].request)
+    return _framed(write(layout, (header, request)))
+
+
+def decode_request(frame: bytes) -> tuple[tuple, tuple | None]:
+    """A request frame (after its length prefix) → (header, body). The
+    body is None when the table has no layout for the header's api key
+    at the header's version."""
+    header, pos = _read(REQUEST_HEADER, frame, 0)
+    message = MESSAGES.get(header[0])
+    if message is None or message.version != header[1]:
+        return header, None
+    return header, read(message.request, frame, pos)
+
+
+def encode_response(api_key: int, correlation_id: int,
+                    response: tuple) -> bytes:
+    """A response body → the length-prefixed frame."""
+    layout = (RESPONSE_HEADER, MESSAGES[api_key].response)
+    return _framed(write(layout, ((correlation_id,), response)))
+
+
+def decode_response(api_key: int, frame: bytes) -> tuple[int, tuple]:
+    """A response frame (after its length prefix) → (correlation_id,
+    body)."""
+    layout = (RESPONSE_HEADER, MESSAGES[api_key].response)
+    (correlation_id,), response = read(layout, frame)
+    return correlation_id, response
+
+
+def _framed(payload: bytes) -> bytes:
+    return _INTS[INT32].pack(len(payload)) + payload
 
 
 def read_frame(sock: socket.socket) -> bytes:
@@ -598,7 +677,23 @@ def _recv_exact(sock: socket.socket, n: int) -> bytes:
     return b"".join(chunks)
 
 
-class KafkaWireClient:
+def _one_partition(topics: list) -> tuple:
+    """The response row of the one partition a request named."""
+    [(_, [row])] = topics
+    return row
+
+
+class _Closing:
+    """``with client:`` closes the client on exit."""
+
+    def __enter__(self):
+        return self
+
+    def __exit__(self, *exc) -> None:
+        self.close()
+
+
+class KafkaWireClient(_Closing):
     """Minimal synchronous client over one TCP connection.
 
     Covers the reference's four broker interactions: topic/partition
@@ -625,7 +720,7 @@ class KafkaWireClient:
             self._versions = self.api_versions()
         if api_key not in self._versions:
             raise RuntimeError(f"broker does not support api_key {api_key}")
-        v = _VERSION[api_key]
+        v = MESSAGES[api_key].version
         br_lo, br_hi = self._versions[api_key]
         if not br_lo <= v <= br_hi:
             raise RuntimeError(
@@ -640,29 +735,20 @@ class KafkaWireClient:
         except OSError:
             pass
 
-    def __enter__(self) -> "KafkaWireClient":
-        return self
-
-    def __exit__(self, *exc) -> None:
-        self.close()
-
-    def _call(self, api_key: int, api_version: int, body: bytes) -> ByteReader:
+    def _call(self, api_key: int, request: tuple) -> tuple:
         self._corr += 1
-        self._sock.sendall(
-            encode_request(api_key, api_version, self._corr, self._client_id, body)
-        )
-        resp = ByteReader(read_frame(self._sock))
-        corr = resp.int32()
+        header = (api_key, MESSAGES[api_key].version, self._corr,
+                  self._client_id)
+        self._sock.sendall(encode_request(header, request))
+        corr, response = decode_response(api_key, read_frame(self._sock))
         if corr != self._corr:
             raise ValueError(f"correlation id mismatch: {corr} != {self._corr}")
-        return resp
+        return response
 
     def api_versions(self) -> dict[int, tuple[int, int]]:
-        r = self._call(API_VERSIONS, 0, b"")
-        err = r.int16()
+        err, rows = self._call(API_VERSIONS, ())
         if err != ERR_NONE:
             raise RuntimeError(f"ApiVersions error {err}")
-        rows = r.array(lambda b: (b.int16(), b.int16(), b.int16()))
         return {k: (lo, hi) for k, lo, hi in rows}
 
     def metadata(self, topics: list[str] | None = None):
@@ -675,56 +761,22 @@ class KafkaWireClient:
     def metadata_leaders(self, topics: list[str] | None = None):
         """→ (brokers {node_id: (host, port)},
         {topic: {partition: leader_node_id}}) — the full routing view the
-        Java client builds its cluster map from."""
-        body = ByteWriter().array(topics, lambda w, t: w.string(t)).build()
-        r = self._call(API_METADATA, 0, body)
-        brokers = {
-            node: (host, port)
-            for node, host, port in r.array(
-                lambda b: (b.int32(), b.string(), b.int32())
-            )
-        }
-
-        def _partition(b: ByteReader):
-            err, pid, leader = b.int16(), b.int32(), b.int32()
-            b.array(lambda x: x.int32())  # replicas
-            b.array(lambda x: x.int32())  # isr
-            return err, pid, leader
-
-        def _topic(b: ByteReader):
-            err, name = b.int16(), b.string()
-            parts = b.array(_partition)
-            return err, name, parts
-
+        Java client builds its cluster map from. No topics asks for all."""
+        brokers, topic_rows = self._call(API_METADATA, (topics or [],))
         leader_map: dict[str, dict[int, int]] = {}
-        for err, name, parts in r.array(_topic):
+        for err, name, parts in topic_rows:
             if err != ERR_NONE:
                 raise KeyError(f"topic {name!r}: error {err}")
-            leader_map[name] = {pid: leader for _, pid, leader in parts}
-        return brokers, leader_map
+            leader_map[name] = {pid: leader for _, pid, leader, _, _ in parts}
+        return {node: (host, port) for node, host, port in brokers}, leader_map
 
     def list_offsets(self, topic: str, partition: int, timestamp: int) -> int:
         """EARLIEST (-2) → log start, LATEST (-1) → high watermark."""
-        body = (
-            ByteWriter()
-            .int32(-1)  # replica_id: ordinary consumer
-            .array(
-                [(topic, [(partition, timestamp)])],
-                lambda w, t: w.string(t[0]).array(
-                    t[1], lambda w2, p: w2.int32(p[0]).int64(p[1])
-                ),
-            )
-            .build()
+        (topics,) = self._call(
+            API_LIST_OFFSETS,
+            (-1, [(topic, [(partition, timestamp)])]),  # -1: a consumer
         )
-        r = self._call(API_LIST_OFFSETS, 1, body)
-
-        def _part(b: ByteReader):
-            pid, err, ts, off = b.int32(), b.int16(), b.int64(), b.int64()
-            return pid, err, ts, off
-
-        topics = r.array(lambda b: (b.string(), b.array(_part)))
-        _, parts = topics[0]
-        pid, err, _, off = parts[0]
+        pid, err, _, off = _one_partition(topics)
         if err != ERR_NONE:
             raise KafkaProtocolError(
                 f"ListOffsets {topic}[{pid}]: error {err}", err)
@@ -737,40 +789,19 @@ class KafkaWireClient:
         record list with high_watermark == offset means caught-up — the
         loop condition of the reference's AvroConsumer.java:116-138.
         Sends Fetch v4; the response carries magic-2 record batches."""
-        v = self._version_for(API_FETCH)
-        body = (
-            ByteWriter()
-            .int32(-1)  # replica_id: ordinary consumer
-            .int32(max_wait_ms)
-            .int32(min_bytes)
-            .int32(max_bytes)  # request-level max_bytes
-            .int8(0)  # isolation_level: READ_UNCOMMITTED
-            .array(
-                [(topic, [(partition, offset, max_bytes)])],
-                lambda w_, t: w_.string(t[0]).array(
-                    t[1],
-                    lambda w2, p: w2.int32(p[0]).int64(p[1]).int32(p[2]),
-                ),
-            )
-            .build()
-        )
-        r = self._call(API_FETCH, v, body)
-        r.int32()  # throttle_time_ms
-
-        def _part(b: ByteReader):
-            pid, err, hw = b.int32(), b.int16(), b.int64()
-            b.int64()  # last_stable_offset
-            b.array(lambda a: (a.int64(), a.int64()))  # aborted txns
-            record_set = b.bytes_() or b""
-            return pid, err, hw, record_set
-
-        topics = r.array(lambda b: (b.string(), b.array(_part)))
-        _, parts = topics[0]
-        pid, err, hw, record_set = parts[0]
+        self._version_for(API_FETCH)
+        _, topics = self._call(API_FETCH, (
+            -1,  # replica_id: an ordinary consumer
+            max_wait_ms, min_bytes,
+            max_bytes,  # request-level max_bytes
+            0,  # isolation_level: READ_UNCOMMITTED
+            [(topic, [(partition, offset, max_bytes)])],
+        ))
+        pid, err, hw, _, _, record_set = _one_partition(topics)
         if err != ERR_NONE:
             raise KafkaProtocolError(
                 f"Fetch {topic}[{pid}] at {offset}: error {err}", err)
-        records = [rec for rec in decode_record_batches(record_set)
+        records = [rec for rec in decode_record_batches(record_set or b"")
                    if rec.offset >= offset]
         return hw, records
 
@@ -782,30 +813,13 @@ class KafkaWireClient:
         Sends Produce v3 with one magic-2 record batch, what a 0.11+/3.x
         broker natively stores (no up-conversion); ``compression`` names
         the batch codec."""
-        v = self._version_for(API_PRODUCE)
+        self._version_for(API_PRODUCE)
         record_set = encode_record_batch(records, codec=compression)
-        body = (
-            ByteWriter()
-            .string(None)  # transactional_id: non-transactional
-            .int16(acks)
-            .int32(timeout_ms)
-            .array(
-                [(topic, [(partition, record_set)])],
-                lambda w_, t: w_.string(t[0]).array(
-                    t[1], lambda w2, p: w2.int32(p[0]).bytes_(p[1])
-                ),
-            )
-            .build()
-        )
-        r = self._call(API_PRODUCE, v, body)
-
-        def _part(b: ByteReader):
-            pid, err, base, ts = b.int32(), b.int16(), b.int64(), b.int64()
-            return pid, err, base, ts
-
-        topics = r.array(lambda b: (b.string(), b.array(_part)))
-        _, parts = topics[0]
-        pid, err, base, _ = parts[0]
+        topics, _ = self._call(API_PRODUCE, (
+            None,  # transactional_id: non-transactional
+            acks, timeout_ms, [(topic, [(partition, record_set)])],
+        ))
+        pid, err, base, _ = _one_partition(topics)
         if err != ERR_NONE:
             raise KafkaProtocolError(f"Produce {topic}[{pid}]: error {err}", err)
         return base
@@ -816,40 +830,21 @@ class KafkaWireClient:
         """CreateTopics v0: {name: num_partitions} → {name: error_code}.
         The wire form of the reference's AdminClient createTopics step
         (01-infra topic provisioning, DataPipeline.java:80-126)."""
-        body = (
-            ByteWriter()
-            .array(
-                list(topics.items()),
-                lambda w, t: (
-                    w.string(t[0])
-                    .int32(t[1])
-                    .int16(replication_factor)
-                    .array([], lambda *_: None)   # manual assignments
-                    .array([], lambda *_: None)   # configs
-                ),
-            )
-            .int32(timeout_ms)
-            .build()
-        )
-        r = self._call(API_CREATE_TOPICS, 0, body)
-        rows = r.array(lambda b: (b.string(), b.int16()))
-        return {name: err for name, err in rows}
+        (rows,) = self._call(API_CREATE_TOPICS, (
+            # no manual assignments, no configs
+            [(name, n, replication_factor, [], []) for name, n in topics.items()],
+            timeout_ms,
+        ))
+        return dict(rows)
 
     def delete_topics(self, topics: list[str], *,
                       timeout_ms: int = 10_000) -> dict[str, int]:
         """DeleteTopics v0: [name] → {name: error_code}."""
-        body = (
-            ByteWriter()
-            .array(topics, lambda w, t: w.string(t))
-            .int32(timeout_ms)
-            .build()
-        )
-        r = self._call(API_DELETE_TOPICS, 0, body)
-        rows = r.array(lambda b: (b.string(), b.int16()))
-        return {name: err for name, err in rows}
+        (rows,) = self._call(API_DELETE_TOPICS, (list(topics), timeout_ms))
+        return dict(rows)
 
 
-class KafkaClusterClient:
+class KafkaClusterClient(_Closing):
     """Leader-routing client over multiple brokers.
 
     Builds the cluster map from a bootstrap Metadata round-trip (one
@@ -883,12 +878,6 @@ class KafkaClusterClient:
             c.close()
         self._conns.clear()
         self._boot.close()
-
-    def __enter__(self) -> "KafkaClusterClient":
-        return self
-
-    def __exit__(self, *exc) -> None:
-        self.close()
 
     # -- routing -----------------------------------------------------------
 

@@ -10,9 +10,12 @@ streaming frame; callers attach sinks/triggers.
 
 Scale: windowed aggregations are hash aggs keyed by (window, keys) — one
 shuffle; state store size is bounded by the watermark horizon. Session
-windows merge in the state store. ``transformWithStateInPandas``-style
-custom state is expressed with ``applyInPandasWithState`` (Arrow-batched,
-partitioned by key — state scales horizontally with executors).
+windows merge in the state store. Custom per-key state is expressed with
+``applyInPandasWithState`` (Arrow-batched, partitioned by key — state
+scales horizontally with executors). Spark 4's
+``transformWithStateInPandas`` is not used: its state server needs
+pyspark's optional ``protobuf`` dependency, which is not installed here,
+so an operator on it could only raise.
 """
 
 from __future__ import annotations
@@ -430,92 +433,3 @@ def hll_distinct_per_hour(
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
 
-
-# --------------------------------------------------------------------------
-# Spark 4 transformWithStateInPandas (StatefulProcessor API)
-# --------------------------------------------------------------------------
-RUNNING_STATS_OUT_SCHEMA = StructType(
-    [
-        StructField("user_id", LongType()),
-        StructField("running_events", LongType()),
-        StructField("running_value_cents", LongType()),
-        StructField("max_value_cents", LongType()),
-    ]
-)
-
-
-def running_value_stats_per_user(
-    events: DataFrame, *, watermark: str = "2 hours", ts_col: str = "ts"
-) -> DataFrame:
-    """Per-user running (count, Σvalue-cents, max-value-cents) carried
-    across micro-batches on Spark 4's ``transformWithStateInPandas`` —
-    the successor API to ``applyInPandasWithState`` (typed state handles:
-    ValueState/ListState/MapState + timers) that the rest of this module
-    predates. One ValueState of three longs per user; cents keep the
-    running sum INTEGER-exact, so the streaming totals equal the batch
-    groupBy bit-for-bit regardless of micro-batch slicing (the same
-    mergeable-exact-state argument as the HLL/histogram sliding rows).
-    State scales horizontally: keys hash across executors, each key's
-    state is 24 bytes.
-
-    ENVIRONMENT GATE (same pattern as the jar-gated Kafka JVM paths):
-    the transformWithState runtime speaks protobuf between the JVM and
-    the Python state server, so it needs the ``protobuf`` package —
-    absent in this container. The operator raises a named error up
-    front instead of crashing the stream at plan-validation time; the
-    applyInPandasWithState twins above carry the executed stateful
-    coverage here, and this operator runs unchanged wherever pyspark's
-    own requirements are installed."""
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-    except ImportError as e:
-        raise RuntimeError(
-            "transformWithStateInPandas requires the 'protobuf' package "
-            "(pyspark's own dependency for the TWS state protocol), which "
-            "is not installed in this environment"
-        ) from e
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class RunningStats(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState(
-                "stats", "n long, cents long, mx long"
-            )
-
-        def handleInputRows(self, key, rows, timerValues):
-            n, cents, mx = (
-                self._state.get() if self._state.exists() else (0, 0, None)
-            )
-            for pdf in rows:
-                if len(pdf) == 0:  # Arrow iterators may yield empty chunks
-                    continue       # (int(NaN max) would kill the task)
-                n += len(pdf)
-                batch_cents = (
-                    (pdf["value"] * 100).round().astype("int64")
-                )
-                cents += int(batch_cents.sum())
-                bm = int(batch_cents.max())
-                mx = bm if mx is None else max(mx, bm)
-            self._state.update((n, cents, mx))
-            yield pd.DataFrame(
-                {
-                    "user_id": [key[0]],
-                    "running_events": [n],
-                    "running_value_cents": [cents],
-                    "max_value_cents": [mx],
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    e = with_watermark(events, ts_col, watermark)
-    return e.groupBy("user_id").transformWithStateInPandas(
-        RunningStats(),
-        outputStructType=RUNNING_STATS_OUT_SCHEMA,
-        outputMode="Update",
-        timeMode="None",
-    )

@@ -15,6 +15,7 @@ import sqlite3
 import time
 
 import pytest
+from pyspark.errors import SparkRuntimeException
 
 from kafka_avro_pipeline_java_spark.generate import generate_dataset
 from kafka_avro_pipeline_java_spark.streaming.avro_codec import decode_df
@@ -139,24 +140,30 @@ def test_full_topology_generate_produce_consume_sink(spark, broker, tmp_path):
     assert {r[0]: (r[1], r[2]) for r in rows} == expected
 
 
-def test_write_batch_derived_partition_handles_null_keys(spark, broker):
-    """ADVICE r05: null keys are legal in Kafka (the Java producer
-    round-robins them); the derived-partition fallback must not NPE on
-    the executor — null-key rows route to partition 0."""
-    from pyspark.sql import functions as F
+def test_write_batch_stamps_send_time(spark, broker):
+    """Each record carries the wall-clock milliseconds of its Produce
+    request, as the Java producer stamps a ProducerRecord sent without a
+    timestamp (AvroProducer.java:82-83)."""
+    records = generate_dataset(spark, SCHEMA, n_rows=12, seed=5,
+                               num_partitions=2)
+    batch = prepare_kafka_batch(records, SCHEMA, explicit_partitions=N_PARTS)
+    t0 = int(time.time() * 1000)
+    write_kafka_batch_py(batch, broker.bootstrap, "orders_avro")
+    t1 = int(time.time() * 1000)
+    stamps = [ts for pid in range(N_PARTS)
+              for _, _, ts in broker.records("orders_avro", pid)]
+    assert len(stamps) == 12
+    assert all(t0 <= ts <= t1 for ts in stamps), (t0, stamps, t1)
 
+
+def test_prepare_batch_raises_naming_a_null_key_field(spark):
+    """Field 0 is the record key and the placement input; a null one
+    raises naming the field, where the reference's toString() throws."""
     df = spark.createDataFrame(
-        [("a", b"v1"), (None, b"v2"), ("b", b"v3"), (None, b"v4")],
-        schema="k string, value binary",
-    ).select(F.col("k").cast("binary").alias("key"), "value")
-    write_kafka_batch_py(df, broker.bootstrap, "orders_avro")
-    got = [r for pid in range(N_PARTS) for r in broker.records("orders_avro", pid)]
-    assert sorted(v for _, v, _ in got) == [b"v1", b"v2", b"v3", b"v4"]
-    null_key_values = {v for k, v, _ in got if k is None}
-    assert null_key_values == {b"v2", b"v4"}
-    # and the nulls all landed on the deterministic fallback partition
-    assert {v for k, v, _ in broker.records("orders_avro", 0) if k is None} \
-        == {b"v2", b"v4"}
+        [("a", 1, 1.0), (None, 2, 2.0)], "order_id string, qty int, price double")
+    with pytest.raises(SparkRuntimeException,
+                       match="key field 'order_id' is null"):
+        prepare_kafka_batch(df, SCHEMA, explicit_partitions=N_PARTS).collect()
 
 
 def test_full_topology_wire_kafka_to_wire_mysql(spark, broker, tmp_path):

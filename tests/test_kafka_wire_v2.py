@@ -7,6 +7,11 @@ real TCP sockets, both directions.
 
 from __future__ import annotations
 
+import contextlib
+import socket
+import struct
+import threading
+
 import pytest
 
 from kafka_avro_pipeline_java_spark.streaming.fake_broker import FakeKafkaBroker
@@ -15,7 +20,6 @@ from kafka_avro_pipeline_java_spark.streaming.kafka_wire import (
     API_PRODUCE,
     API_VERSIONS,
     SUPPORTED_APIS,
-    ByteWriter,
     KafkaCodecError,
     EARLIEST,
     ERR_NONE,
@@ -29,9 +33,12 @@ from kafka_avro_pipeline_java_spark.streaming.kafka_wire import (
     crc32c,
     decode_record_batches,
     decode_varint,
+    decode_request,
+    decode_response,
     encode_record_batch,
     encode_request,
     encode_varint,
+    read_frame,
 )
 
 
@@ -135,6 +142,208 @@ def test_record_batch_partial_trailing_batch_dropped():
 
 
 # ---------------------------------------------------------------------------
+# golden bytes: each frame assembled here with struct.pack from the
+# protocol guide (kafka.apache.org/protocol), independently of the layout
+# table, and checked against both ends — the client over a socket that
+# replays canned responses, and the in-process broker
+# ---------------------------------------------------------------------------
+
+
+def _string(text: str) -> bytes:
+    data = text.encode("utf-8")
+    return struct.pack(">h", len(data)) + data
+
+
+def _frame(*parts: bytes) -> bytes:
+    payload = b"".join(parts)
+    return struct.pack(">i", len(payload)) + payload
+
+
+def _request_header(api_key: int, version: int, corr: int,
+                    client_id: str | None = None) -> bytes:
+    return (struct.pack(">hhi", api_key, version, corr)
+            + (_string(client_id) if client_id else struct.pack(">h", -1)))
+
+
+_RECORDS = encode_record_batch([(b"k", b"v", 9)])  # its codec tested above
+
+
+def _api_versions_exchange(corr: int = 1) -> tuple[bytes, bytes]:
+    """ApiVersions v0: empty request body; response error_code INT16,
+    api_keys [api_key INT16, min_version INT16, max_version INT16]."""
+    versions = [(0, 3), (1, 4), (2, 1), (3, 0), (18, 0), (19, 0), (20, 0)]
+    return (
+        _frame(_request_header(18, 0, corr, "c1")),
+        _frame(struct.pack(">ihi", corr, 0, len(versions)),
+               *(struct.pack(">hhh", k, v, v) for k, v in versions)),
+    )
+
+
+@contextlib.contextmanager
+def _replay(exchanges: list[tuple[bytes, bytes]]):
+    """A one-connection server that answers the i-th request frame with
+    the i-th canned response; → (bootstrap, request frames received)."""
+    srv = socket.create_server(("127.0.0.1", 0))
+    srv.settimeout(10)
+    got: list[bytes] = []
+
+    def serve() -> None:
+        conn, _ = srv.accept()
+        with conn:
+            conn.settimeout(10)
+            for _, response in exchanges:
+                got.append(_frame(read_frame(conn)))
+                conn.sendall(response)
+
+    t = threading.Thread(target=serve, daemon=True)
+    t.start()
+    try:
+        yield "127.0.0.1:%d" % srv.getsockname()[1], got
+    finally:
+        t.join(timeout=10)
+        srv.close()
+    assert not t.is_alive()
+    assert got == [request for request, _ in exchanges]
+
+
+def test_golden_api_versions_v0(broker):
+    request, response = _api_versions_exchange()
+    with _replay([(request, response)]) as (bootstrap, _):
+        with KafkaWireClient(bootstrap, client_id="c1") as c:
+            assert c.api_versions() == {
+                0: (3, 3), 1: (4, 4), 2: (1, 1), 3: (0, 0), 18: (0, 0),
+                19: (0, 0), 20: (0, 0)}
+    assert broker._respond(request[4:], 0) == response
+
+
+def test_golden_fetch_v4(broker):
+    """Fetch v4 request: replica_id INT32, max_wait_ms INT32, min_bytes
+    INT32, max_bytes INT32, isolation_level INT8, topics [topic STRING,
+    partitions [partition INT32, fetch_offset INT64, partition_max_bytes
+    INT32]]. Response: throttle_time_ms INT32, responses [topic STRING,
+    partitions [partition_index INT32, error_code INT16, high_watermark
+    INT64, last_stable_offset INT64, aborted_transactions [producer_id
+    INT64, first_offset INT64], records BYTES]]."""
+    request = _frame(
+        _request_header(1, 4, 2, "c1"),
+        struct.pack(">iiiib", -1, 100, 1, 1 << 20, 0),
+        struct.pack(">i", 1), _string("orders_avro"),
+        struct.pack(">iiqi", 1, 2, 0, 1 << 20),
+    )
+    response = _frame(
+        struct.pack(">iii", 2, 0, 1), _string("orders_avro"),
+        struct.pack(">iihqqi", 1, 2, 0, 1, 1, 0),
+        struct.pack(">i", len(_RECORDS)), _RECORDS,
+    )
+    with _replay([_api_versions_exchange(), (request, response)]) as (b, _):
+        with KafkaWireClient(b, client_id="c1") as c:
+            hw, records = c.fetch("orders_avro", 2, 0)
+    assert hw == 1
+    assert [(r.offset, r.key, r.value, r.timestamp) for r in records] == [
+        (0, b"k", b"v", 9)]
+    broker.append("orders_avro", 2, [(b"k", b"v", 9)])
+    assert broker._respond(request[4:], 0) == response
+
+
+def test_golden_produce_v3(broker):
+    """Produce v3 request: transactional_id NULLABLE_STRING, acks INT16,
+    timeout_ms INT32, topic_data [name STRING, partition_data [index
+    INT32, records BYTES]]. Response: responses [name STRING,
+    partition_responses [index INT32, error_code INT16, base_offset
+    INT64, log_append_time_ms INT64]], throttle_time_ms INT32."""
+    request = _frame(
+        _request_header(0, 3, 2, "c1"),
+        struct.pack(">hhi", -1, -1, 10_000),
+        struct.pack(">i", 1), _string("orders_avro"),
+        struct.pack(">iii", 1, 1, len(_RECORDS)), _RECORDS,
+    )
+    response = _frame(
+        struct.pack(">ii", 2, 1), _string("orders_avro"),
+        struct.pack(">iihqqi", 1, 1, 0, 0, -1, 0),
+    )
+    with _replay([_api_versions_exchange(), (request, response)]) as (b, _):
+        with KafkaWireClient(b, client_id="c1") as c:
+            assert c.produce("orders_avro", 1, [(b"k", b"v", 9)]) == 0
+    assert broker._respond(request[4:], 0) == response
+    assert broker.records("orders_avro", 1) == [(b"k", b"v", 9)]
+
+
+def _list_offsets_exchange(corr: int) -> tuple[bytes, bytes]:
+    """ListOffsets v1 request: replica_id INT32, topics [name STRING,
+    partitions [partition_index INT32, timestamp INT64]]. Response:
+    topics [name STRING, partitions [partition_index INT32, error_code
+    INT16, timestamp INT64, offset INT64]]."""
+    return (
+        _frame(_request_header(2, 1, corr, "c1"),
+               struct.pack(">ii", -1, 1), _string("orders_avro"),
+               struct.pack(">iiq", 1, 0, EARLIEST)),
+        _frame(struct.pack(">ii", corr, 1), _string("orders_avro"),
+               struct.pack(">iihqq", 1, 0, 0, -1, 0)),
+    )
+
+
+def test_golden_list_offsets_v1(broker):
+    request, response = _list_offsets_exchange(1)
+    with _replay([(request, response)]) as (bootstrap, _):
+        with KafkaWireClient(bootstrap, client_id="c1") as c:
+            assert c.list_offsets("orders_avro", 0, EARLIEST) == 0
+    assert broker._respond(request[4:], 0) == response
+
+
+def test_golden_metadata_v0():
+    """Metadata v0 request: topics [name STRING]. Response: brokers
+    [node_id INT32, host STRING, port INT32], topics [error_code INT16,
+    name STRING, partitions [error_code INT16, partition_index INT32,
+    leader_id INT32, replica_nodes [INT32], isr_nodes [INT32]]]."""
+    with FakeKafkaBroker({"t": 2}, listeners=2) as b:
+        request = _frame(_request_header(3, 0, 1, "c1"),
+                         struct.pack(">i", 1), _string("t"))
+        response = _frame(
+            struct.pack(">ii", 1, 2),
+            *(struct.pack(">i", node) + _string(host) + struct.pack(">i", port)
+              for node, (host, port) in enumerate(b.addresses)),
+            struct.pack(">ih", 1, 0), _string("t"), struct.pack(">i", 2),
+            *(struct.pack(">hiiiiii", 0, p, p, 1, p, 1, p) for p in (0, 1)),
+        )
+        assert b._respond(request[4:], 0) == response
+    with _replay([(request, response)]) as (bootstrap, _):
+        with KafkaWireClient(bootstrap, client_id="c1") as c:
+            brokers, leaders = c.metadata_leaders(["t"])
+    assert brokers == dict(enumerate(b.addresses))
+    assert leaders == {"t": {0: 0, 1: 1}}
+
+
+def test_golden_layouts_round_trip_through_the_table():
+    """The frame functions read back what they write, header included."""
+    header = (API_FETCH, 4, 9, None)
+    body = (-1, 5, 1, 64, 0, [("a", [(0, 3, 64), (2, 7, 64)]), ("b", [])])
+    frame = encode_request(header, body)
+    assert decode_request(frame[4:]) == (header, body)
+    # an api version the table has no layout for: the header only
+    assert decode_request(_request_header(API_FETCH, 2, 1)) == (
+        (API_FETCH, 2, 1, None), None)
+
+
+def test_short_or_trailing_frame_raises_on_both_ends(broker):
+    """At these non-flexible versions every layout is exact: a frame
+    that ends early or has bytes left over means the two ends disagree,
+    so neither end reads it. The broker closes the connection."""
+    request, response = _list_offsets_exchange(1)
+    for bad in (request[4:] + b"\x00", request[4:-1]):
+        with pytest.raises(ValueError, match="left over|ends inside"):
+            broker._respond(bad, 0)
+    with socket.create_connection((broker.host, broker.port)) as s:
+        s.sendall(_frame(request[4:] + b"\x00"))
+        with pytest.raises(ConnectionError):
+            read_frame(s)
+    for bad in (_frame(response[4:] + b"\x00"), _frame(response[4:-1])):
+        with _replay([(request, bad)]) as (bootstrap, _):
+            with KafkaWireClient(bootstrap, client_id="c1") as c:
+                with pytest.raises(ValueError, match="left over|ends inside"):
+                    c.list_offsets("orders_avro", 0, EARLIEST)
+
+
+# ---------------------------------------------------------------------------
 # version check: Produce v3 / Fetch v4 (magic-2 batches) or refusal
 # ---------------------------------------------------------------------------
 
@@ -156,10 +365,8 @@ class _PreBatchBroker(FakeKafkaBroker):
 
     def _api_versions(self, *_):
         caps = {API_PRODUCE: (0, 2), API_FETCH: (0, 3)}
-        return ByteWriter().int16(ERR_NONE).array(
-            [(k, *caps.get(k, (lo, hi))) for k, lo, hi in SUPPORTED_APIS],
-            lambda w, a: w.int16(a[0]).int16(a[1]).int16(a[2]),
-        ).build()
+        return ERR_NONE, [(k, *caps.get(k, (lo, hi)))
+                          for k, lo, hi in SUPPORTED_APIS]
 
 
 def test_broker_below_produce_v3_or_fetch_v4_is_refused():
@@ -177,7 +384,7 @@ def test_broker_below_produce_v3_or_fetch_v4_is_refused():
             c.fetch("t", 0, 0)
         assert b.records("t", 0) == []
     with FakeKafkaBroker({"t": 1}) as b:
-        frame = encode_request(API_FETCH, 2, 1, "old-client", b"")[4:]
+        frame = _request_header(API_FETCH, 2, 1)
         with pytest.raises(ValueError, match="unsupported version 2"):
             b._respond(frame, 0)
 
@@ -186,19 +393,21 @@ def test_unadvertised_api_versions_request_gets_unsupported_version(broker):
     """An ApiVersions request of a version the broker does not speak gets
     error 35 (UNSUPPORTED_VERSION) with the v0 body listing what it does
     speak, as a real broker answers it."""
-    with KafkaWireClient(broker.bootstrap) as c:
-        r = c._call(API_VERSIONS, 3, b"")
-        assert r.int16() == ERR_UNSUPPORTED_VERSION
-        rows = r.array(lambda b: (b.int16(), b.int16(), b.int16()))
-        assert rows == SUPPORTED_APIS
+    with socket.create_connection((broker.host, broker.port)) as s:
+        s.sendall(_frame(_request_header(API_VERSIONS, 3, 1)))
+        corr, (err, rows) = decode_response(API_VERSIONS, read_frame(s))
+    assert corr == 1
+    assert err == ERR_UNSUPPORTED_VERSION
+    assert rows == SUPPORTED_APIS
 
 
 def test_refused_request_closes_connection_quietly(broker, capfd):
     """Any other refused request (here Fetch v2) closes the connection;
     the broker prints no traceback."""
-    with KafkaWireClient(broker.bootstrap) as c:
+    with socket.create_connection((broker.host, broker.port)) as s:
+        s.sendall(_frame(_request_header(API_FETCH, 2, 1)))
         with pytest.raises(ConnectionError):
-            c._call(API_FETCH, 2, b"")
+            read_frame(s)
     assert capfd.readouterr().err == ""
 
 

@@ -249,62 +249,3 @@ def test_streaming_holt_matches_batch_fold(spark, spool):
             l = l2
         want[uid] = (len(xs), round(l, 9), round(b, 9), round(l + b, 9))
     assert got == want
-
-
-def test_transform_with_state_gate_names_the_missing_dependency(spark, spool):
-    # without protobuf the operator must fail FAST with a named error,
-    # not crash the stream at plan-validation time
-    try:
-        import google.protobuf  # noqa: F401
-    except ImportError:
-        with pytest.raises(RuntimeError, match="protobuf"):
-            W.running_value_stats_per_user(_stream(spark, spool))
-        return
-    # protobuf installed: the gate is open and construction must succeed
-    W.running_value_stats_per_user(_stream(spark, spool))
-
-
-def test_transform_with_state_running_stats_match_batch(spark, sf_dir, spool):
-    # Spark 4 StatefulProcessor API: streaming running stats must equal
-    # the batch groupBy exactly (integer cents make the sum order-free).
-    # The operator is an ENVIRONMENT-GATED CONTRACT (like the jar-gated
-    # JVM Kafka paths): without protobuf — pyspark's own TWS state-server
-    # dependency, absent in this container — the documented behavior IS
-    # the named fail-fast error, and that is what this test then asserts
-    # instead of skipping; wherever protobuf exists the full batch-parity
-    # check below runs unchanged.
-    try:
-        import google.protobuf  # noqa: F401
-    except ImportError:
-        with pytest.raises(RuntimeError, match="protobuf"):
-            W.running_value_stats_per_user(_stream(spark, spool))
-        return
-    stream = W.running_value_stats_per_user(_stream(spark, spool))
-    q = (
-        stream.writeStream.format("memory").queryName("tws_stats")
-        .outputMode("update").trigger(availableNow=True).start()
-    )
-    q.awaitTermination(180)
-    rows = spark.sql(
-        "SELECT user_id, running_events, running_value_cents, "
-        "max_value_cents FROM tws_stats"
-    ).collect()
-    # update mode may emit a row per key per batch: keep the LAST per key
-    got = {}
-    for r in rows:
-        got[r["user_id"]] = (
-            r["running_events"],
-            r["running_value_cents"],
-            r["max_value_cents"],
-        )
-    batch = (
-        load_table(spark, sf_dir, "events")
-        .groupBy("user_id")
-        .agg(
-            F.count("*").alias("n"),
-            F.sum(F.round(F.col("value") * 100, 0).cast("long")).alias("c"),
-            F.max(F.round(F.col("value") * 100, 0).cast("long")).alias("m"),
-        )
-    )
-    want = {r["user_id"]: (r["n"], r["c"], r["m"]) for r in batch.collect()}
-    assert got == want
