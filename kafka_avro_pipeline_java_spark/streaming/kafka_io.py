@@ -76,18 +76,13 @@ def prepare_kafka_batch(
     ``write_kafka_batch_py``. Key = Avro field 0 (reference
     AvroProducer.java:81); partition = the reference's placement
     ``abs(java_hashCode(key) % explicit_partitions)``
-    (AvroProducer.java:82). A null field 0 raises when the frame is
-    evaluated, naming the field, where the reference's ``toString()``
-    would throw."""
+    (AvroProducer.java:82). Every Avro field here is non-nullable, so
+    a null field 0 raises in the encoder, naming the field, where the
+    reference's ``toString()`` would throw."""
     key_field = avro_schema["fields"][0]["name"]
-    key = F.col(key_field)
     with_part = df.withColumn(
         "partition",
-        F.when(
-            key.isNull(),
-            F.raise_error(F.lit(
-                f"prepare_kafka_batch: key field {key_field!r} is null")),
-        ).otherwise(partition_for_key(key.cast("string"), explicit_partitions)),
+        partition_for_key(F.col(key_field).cast("string"), explicit_partitions),
     )
     return encode_df(
         with_part, avro_schema, schema_id=schema_id, passthrough_cols=["partition"]

@@ -15,7 +15,7 @@ import sqlite3
 import time
 
 import pytest
-from pyspark.errors import SparkRuntimeException
+from pyspark.errors import PythonException
 
 from kafka_avro_pipeline_java_spark.generate import generate_dataset
 from kafka_avro_pipeline_java_spark.streaming.avro_codec import decode_df
@@ -161,8 +161,8 @@ def test_prepare_batch_raises_naming_a_null_key_field(spark):
     raises naming the field, where the reference's toString() throws."""
     df = spark.createDataFrame(
         [("a", 1, 1.0), (None, 2, 2.0)], "order_id string, qty int, price double")
-    with pytest.raises(SparkRuntimeException,
-                       match="key field 'order_id' is null"):
+    with pytest.raises(PythonException,
+                       match="null in non-nullable Avro field 'order_id'"):
         prepare_kafka_batch(df, SCHEMA, explicit_partitions=N_PARTS).collect()
 
 

@@ -168,13 +168,13 @@ def _request_header(api_key: int, version: int, corr: int,
 _RECORDS = encode_record_batch([(b"k", b"v", 9)])  # its codec tested above
 
 
-def _api_versions_exchange(corr: int = 1) -> tuple[bytes, bytes]:
+def _api_versions_exchange() -> tuple[bytes, bytes]:
     """ApiVersions v0: empty request body; response error_code INT16,
     api_keys [api_key INT16, min_version INT16, max_version INT16]."""
     versions = [(0, 3), (1, 4), (2, 1), (3, 0), (18, 0), (19, 0), (20, 0)]
     return (
-        _frame(_request_header(18, 0, corr, "c1")),
-        _frame(struct.pack(">ihi", corr, 0, len(versions)),
+        _frame(_request_header(18, 0, 1, "c1")),
+        _frame(struct.pack(">ihi", 1, 0, len(versions)),
                *(struct.pack(">hhh", k, v, v) for k, v in versions)),
     )
 
@@ -268,22 +268,22 @@ def test_golden_produce_v3(broker):
     assert broker.records("orders_avro", 1) == [(b"k", b"v", 9)]
 
 
-def _list_offsets_exchange(corr: int) -> tuple[bytes, bytes]:
+def _list_offsets_exchange() -> tuple[bytes, bytes]:
     """ListOffsets v1 request: replica_id INT32, topics [name STRING,
     partitions [partition_index INT32, timestamp INT64]]. Response:
     topics [name STRING, partitions [partition_index INT32, error_code
     INT16, timestamp INT64, offset INT64]]."""
     return (
-        _frame(_request_header(2, 1, corr, "c1"),
+        _frame(_request_header(2, 1, 1, "c1"),
                struct.pack(">ii", -1, 1), _string("orders_avro"),
                struct.pack(">iiq", 1, 0, EARLIEST)),
-        _frame(struct.pack(">ii", corr, 1), _string("orders_avro"),
+        _frame(struct.pack(">ii", 1, 1), _string("orders_avro"),
                struct.pack(">iihqq", 1, 0, 0, -1, 0)),
     )
 
 
 def test_golden_list_offsets_v1(broker):
-    request, response = _list_offsets_exchange(1)
+    request, response = _list_offsets_exchange()
     with _replay([(request, response)]) as (bootstrap, _):
         with KafkaWireClient(bootstrap, client_id="c1") as c:
             assert c.list_offsets("orders_avro", 0, EARLIEST) == 0
@@ -313,7 +313,7 @@ def test_golden_metadata_v0():
     assert leaders == {"t": {0: 0, 1: 1}}
 
 
-def test_golden_layouts_round_trip_through_the_table():
+def test_request_frames_round_trip_through_the_table():
     """The frame functions read back what they write, header included."""
     header = (API_FETCH, 4, 9, None)
     body = (-1, 5, 1, 64, 0, [("a", [(0, 3, 64), (2, 7, 64)]), ("b", [])])
@@ -328,7 +328,7 @@ def test_short_or_trailing_frame_raises_on_both_ends(broker):
     """At these non-flexible versions every layout is exact: a frame
     that ends early or has bytes left over means the two ends disagree,
     so neither end reads it. The broker closes the connection."""
-    request, response = _list_offsets_exchange(1)
+    request, response = _list_offsets_exchange()
     for bad in (request[4:] + b"\x00", request[4:-1]):
         with pytest.raises(ValueError, match="left over|ends inside"):
             broker._respond(bad, 0)
