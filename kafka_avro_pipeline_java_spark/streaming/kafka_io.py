@@ -99,10 +99,6 @@ def write_kafka_batch_py(df: DataFrame, brokers: str, topic: str) -> None:
     02-producer Main.java:45-49). Each record carries the wall-clock
     milliseconds of its Produce request, as the Java producer stamps a
     ``ProducerRecord`` sent without a timestamp (AvroProducer.java:82-83)."""
-    if "partition" not in df.columns:
-        raise ValueError(
-            "write_kafka_batch_py needs a partition column: build the "
-            "frame with prepare_kafka_batch")
 
     def send_partition(rows) -> None:
         # leader-routing producer (round 6): each Kafka partition's batch
